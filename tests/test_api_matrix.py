@@ -6,7 +6,11 @@ every-boundary fetch ranges."""
 
 from __future__ import annotations
 
+import collections
+import concurrent.futures
 import random
+import sys
+import threading
 
 import pytest
 
@@ -157,6 +161,199 @@ def test_prefetch_warms_cache(tmp_path):
             break
         time.sleep(0.05)
     assert want <= set(cache._data.keys())
+
+
+# prefetch semantics (ChunkCache.java:159-184): a budget in original bytes
+# after the chunk just read, and no pool task for a chunk that is cached or
+# already loading
+_words = [bytes(_rng.choice(b"abcdefghij") for _ in range(6)) for _ in range(64)]
+COMPRESSIBLE_BYTES = b" ".join(_rng.choice(_words) for _ in range(SEGMENT_SIZE // 6))[
+    :SEGMENT_SIZE
+]
+SEGMENT_CHUNKS = -(-SEGMENT_SIZE // CHUNK_SIZE)
+
+
+def _prefetching_cache(kind, tmp_path, **kw):
+    kw.setdefault("prefetch_max_bytes", 2 * CHUNK_SIZE)
+    if kind == "memory":
+        return MemoryChunkCache(1 << 22, **kw)
+    return DiskChunkCache(tmp_path / "cache", 1 << 22, **kw)
+
+
+def _record_submits(cache):
+    """Wrap the cache's pool so every submitted task's future is kept."""
+    futures = []
+    submit = cache._pool.submit
+
+    def recording_submit(fn, *args, **kwargs):
+        fut = submit(fn, *args, **kwargs)
+        futures.append(fut)
+        return fut
+
+    cache._pool.submit = recording_submit
+    return futures
+
+
+def _drain(futures):
+    _, not_done = concurrent.futures.wait(futures, timeout=5)
+    assert not not_done, "prefetch tasks still running after 5 s"
+
+
+@pytest.mark.parametrize("cache_kind", ["memory", "disk"])
+@pytest.mark.parametrize("chunk_id", [5, SEGMENT_CHUNKS - 2, SEGMENT_CHUNKS - 1])
+def test_prefetch_budget_counts_original_bytes(tmp_path, cache_kind, chunk_id):
+    cache = _prefetching_cache(cache_kind, tmp_path)
+    futures = _record_submits(cache)
+    mgr = TieredStorageManager(
+        FileSystemStorage(tmp_path / "store"),
+        chunk_size=CHUNK_SIZE,
+        compression_enabled=True,
+        codec="zstd",
+        cache=cache,
+    )
+    custom = mgr.copy_log_segment_data(META, SegmentData(COMPRESSIBLE_BYTES, dict(INDEXES)))
+    with mgr.backend.fetch(custom["object_keys"]["rsm-manifest"]) as f:
+        index = SegmentManifest.from_json(f.read()).chunk_index
+    assert index.count == SEGMENT_CHUNKS
+    # three chunks' transformed bytes fit in the budget, so a budget counted
+    # in transformed bytes would prefetch more than two chunks
+    assert sum(index.transformed_size(i) for i in range(1, 4)) < 2 * CHUNK_SIZE
+
+    start = chunk_id * CHUNK_SIZE
+    got = b"".join(mgr.fetch_log_segment(META, start, start + CHUNK_SIZE - 1))
+    assert got == COMPRESSIBLE_BYTES[start : start + CHUNK_SIZE]
+    _drain(futures)
+    want = {chunk_id} | {i for i in (chunk_id + 1, chunk_id + 2) if i < SEGMENT_CHUNKS}
+    assert {cid for _obj, cid in cache._keys()} == want
+    assert len(futures) == len(want) - 1
+    cache.close()
+
+
+@pytest.mark.parametrize("cache_kind", ["memory", "disk"])
+def test_prefetch_skips_cached_chunks(tmp_path, cache_kind):
+    cache = _prefetching_cache(cache_kind, tmp_path)
+    futures = _record_submits(cache)
+    mgr = TieredStorageManager(
+        FileSystemStorage(tmp_path / "store"), chunk_size=CHUNK_SIZE, cache=cache
+    )
+    mgr.copy_log_segment_data(META, SegmentData(SEGMENT_BYTES, dict(INDEXES)))
+    end = 10 * CHUNK_SIZE - 1
+    assert b"".join(mgr.fetch_log_segment(META, 0, end)) == SEGMENT_BYTES[: end + 1]
+    _drain(futures)
+    assert {cid for _obj, cid in cache._keys()} == set(range(12))
+    submitted = len(futures)
+
+    assert b"".join(mgr.fetch_log_segment(META, 0, end)) == SEGMENT_BYTES[: end + 1]
+    assert len(futures) == submitted
+    cache.close()
+
+
+@pytest.mark.parametrize("cache_kind", ["memory", "disk"])
+def test_prefetch_skips_inflight_chunk(tmp_path, cache_kind):
+    cache = _prefetching_cache(cache_kind, tmp_path)
+    futures = _record_submits(cache)
+    started, release = threading.Event(), threading.Event()
+    loads = []
+
+    def slow_load():
+        loads.append("slow")
+        started.set()
+        assert release.wait(5)
+        return b"slow"
+
+    reader = threading.Thread(target=cache.get_chunk, args=(("obj", 1), slow_load))
+    reader.start()
+    assert started.wait(5)
+    cache.prefetch([("obj", 1), ("obj", 2)], lambda k: lambda: b"chunk-%d" % k[1])
+    release.set()
+    reader.join(5)
+    assert not reader.is_alive()
+    _drain(futures)
+    assert len(futures) == 1
+    assert loads == ["slow"]
+    assert cache.get_chunk(("obj", 1), slow_load) == b"slow"
+    assert cache.get_chunk(("obj", 2), slow_load) == b"chunk-2"
+    cache.close()
+
+
+@pytest.mark.parametrize("cache_kind", ["memory", "disk"])
+def test_prefetch_reloads_expired_chunk(tmp_path, cache_kind):
+    now = [0.0]
+    cache = _prefetching_cache(
+        cache_kind, tmp_path, retention_seconds=10.0, clock=lambda: now[0]
+    )
+    futures = _record_submits(cache)
+    loads = []
+
+    def loader_for(key):
+        def load():
+            loads.append(key)
+            return b"v%d" % len(loads)
+
+        return load
+
+    key = ("obj", 0)
+    assert cache.get_chunk(key, loader_for(key)) == b"v1"
+    now[0] = 6.0
+    cache.prefetch([key], loader_for)  # live: skipped, and its age not reset
+    assert futures == []
+    now[0] = 11.0
+    cache.prefetch([key], loader_for)  # past retention: absent, loaded again
+    _drain(futures)
+    assert len(futures) == 1
+    assert loads == [key, key]
+    assert cache.get_chunk(key, loader_for(key)) == b"v2"
+    cache.close()
+
+
+@pytest.mark.parametrize("cache_kind", ["memory", "disk"])
+def test_prefetch_with_concurrent_readers_loads_each_chunk_once(tmp_path, cache_kind):
+    """Readers on more threads than cores race the prefetch pool over one
+    segment; the cache holds it whole, so every chunk is loaded once and
+    every read returns the segment's bytes."""
+    cache = _prefetching_cache(cache_kind, tmp_path)
+    mgr = TieredStorageManager(
+        FileSystemStorage(tmp_path / "store"), chunk_size=CHUNK_SIZE, cache=cache
+    )
+    mgr.copy_log_segment_data(META, SegmentData(SEGMENT_BYTES, dict(INDEXES)))
+    loads = collections.Counter()
+    loads_lock = threading.Lock()
+    load_chunk = mgr.chunk_manager._load_chunk
+
+    def counting_load(object_key, manifest, chunk_id, key):
+        with loads_lock:
+            loads[chunk_id] += 1
+        return load_chunk(object_key, manifest, chunk_id, key)
+
+    mgr.chunk_manager._load_chunk = counting_load
+    errors = []
+
+    def reader(seed):
+        rnd = random.Random(seed)
+        try:
+            for _ in range(40):
+                start = rnd.randrange(SEGMENT_SIZE)
+                end = min(start + rnd.randrange(1, 4 * CHUNK_SIZE), SEGMENT_SIZE - 1)
+                got = b"".join(mgr.fetch_log_segment(META, start, end))
+                if got != SEGMENT_BYTES[start : end + 1]:
+                    errors.append(f"range {start}-{end} differs")
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(repr(e))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(s,)) for s in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(30)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    assert errors == []
+    assert loads and max(loads.values()) == 1
+    cache.close()
 
 
 class TestCustomMetadataSerde:

@@ -25,7 +25,10 @@ Supported keys (reference line references in parentheses):
 - ``fetch.chunk.cache.class`` (``memory`` / ``disk`` / ``none``),
   ``fetch.chunk.cache.size``, ``fetch.chunk.cache.retention.ms``
   (-1 = infinite, default 600000 — ``CacheConfig.java:31-41``),
-  ``fetch.chunk.cache.prefetch.max.size`` (``ChunkCacheConfig:24-33``),
+  ``fetch.chunk.cache.prefetch.max.size`` (``ChunkCacheConfig:24-33``;
+  the budget is in original, uncompressed bytes after the chunk just
+  read, and chunks already cached or in flight are skipped —
+  ``ChunkCache.java:159-184``),
   ``fetch.chunk.cache.path`` (disk variant,
   ``DiskChunkCacheConfig:30``).
 - ``fetch.indexes.cache.size`` (10 MiB default,

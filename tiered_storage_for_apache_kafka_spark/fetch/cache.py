@@ -79,6 +79,18 @@ class ChunkCache:
     def _put(self, key: ChunkKey, value: bytes) -> None:
         raise NotImplementedError
 
+    def _has(self, key: ChunkKey) -> bool:
+        """Whether ``key`` holds a live entry, with no side effect: no LRU
+        refresh, no disk I/O, and an entry past retention counts as
+        absent."""
+        raise NotImplementedError
+
+    def _expired(self, ts: float) -> bool:
+        return (
+            self.retention_seconds is not None
+            and self._clock() - ts > self.retention_seconds
+        )
+
     # public ------------------------------------------------------------------
     def get_chunk(self, key: ChunkKey, loader: Callable[[], bytes]) -> bytes:
         with self._lock:
@@ -122,8 +134,18 @@ class ChunkCache:
         return value
 
     def prefetch(self, keys: list[ChunkKey], loader_for: Callable[[ChunkKey], Callable[[], bytes]]) -> None:
-        """Async-warm upcoming chunks (ignores failures)."""
-        for key in keys:
+        """Async-warm upcoming chunks (ignores failures).
+
+        ``keys`` are the chunks covering the prefetch budget, counted in
+        original (uncompressed) bytes after the chunk just read. Keys that
+        are already cached or already loading are skipped, so only missing
+        chunks cost a pool task — the reference's `computeIfAbsent`
+        (ChunkCache.java:159-184)."""
+        with self._lock:
+            missing = [
+                k for k in keys if k not in self._inflight and not self._has(k)
+            ]
+        for key in missing:
             def _load(k: ChunkKey = key) -> None:
                 try:
                     self.get_chunk(k, loader_for(k))
@@ -180,16 +202,17 @@ class MemoryChunkCache(ChunkCache):
         if entry is None:
             return None
         value, ts = entry
-        if (
-            self.retention_seconds is not None
-            and self._clock() - ts > self.retention_seconds
-        ):
+        if self._expired(ts):
             del self._data[key]
             self._weight -= len(value)
             return None
         self._data[key] = (value, self._clock())  # refresh: expireAfterAccess
         self._data.move_to_end(key)
         return value
+
+    def _has(self, key: ChunkKey) -> bool:
+        entry = self._data.get(key)
+        return entry is not None and not self._expired(entry[1])
 
     def _put(self, key: ChunkKey, value: bytes) -> None:
         old = self._data.pop(key, None)
@@ -244,10 +267,7 @@ class DiskChunkCache(ChunkCache):
         if entry is None:
             return None
         size, ts = entry
-        if (
-            self.retention_seconds is not None
-            and self._clock() - ts > self.retention_seconds
-        ):
+        if self._expired(ts):
             self._weight -= size
             del self._index[key]
             try:
@@ -263,6 +283,10 @@ class DiskChunkCache(ChunkCache):
         self._index[key] = (size, self._clock())  # refresh: expireAfterAccess
         self._index.move_to_end(key)
         return data
+
+    def _has(self, key: ChunkKey) -> bool:
+        entry = self._index.get(key)
+        return entry is not None and not self._expired(entry[1])
 
     def _put(self, key: ChunkKey, value: bytes) -> None:
         path = self._file(key)

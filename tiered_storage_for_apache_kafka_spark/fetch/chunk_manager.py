@@ -44,10 +44,27 @@ class ChunkManager:
         # how object keys render in error messages (key.prefix.mask)
         self.display_key = display_key or (lambda k: k)
 
-    def _load_chunk_raw(self, object_key: str, manifest: SegmentManifest, chunk_id: int) -> bytes:
+    def _load_chunk(
+        self,
+        object_key: str,
+        manifest: SegmentManifest,
+        chunk_id: int,
+        key: DataKeyAndAAD | None,
+    ) -> bytes:
+        """Ranged GET of one transformed chunk, then detransform."""
         chunk = manifest.chunk_index.chunk(chunk_id)
         with self.backend.fetch(object_key, chunk.transformed_range) as f:
-            return f.read()
+            raw = f.read()
+        return b"".join(
+            detransform(
+                raw,
+                manifest.chunk_index,
+                compression=manifest.compression,
+                encryption_key=key,
+                codec=self.codec,
+                chunk_ids=[chunk_id],
+            )
+        )
 
     def get_chunk(
         self,
@@ -61,23 +78,12 @@ class ChunkManager:
         The cache stores *detransformed* bytes (like the reference's chunk
         cache, which caches the de-transform output so repeated fetches
         skip decrypt+decompress)."""
-
-        def load() -> bytes:
-            raw = self._load_chunk_raw(object_key, manifest, chunk_id)
-            return b"".join(
-                detransform(
-                    raw,
-                    manifest.chunk_index,
-                    compression=manifest.compression,
-                    encryption_key=key,
-                    codec=self.codec,
-                    chunk_ids=[chunk_id],
-                )
-            )
-
         if self.cache is None:
-            return load()
-        value = self.cache.get_chunk((object_key, chunk_id), load)
+            return self._load_chunk(object_key, manifest, chunk_id, key)
+        value = self.cache.get_chunk(
+            (object_key, chunk_id),
+            lambda: self._load_chunk(object_key, manifest, chunk_id, key),
+        )
         self._maybe_prefetch(object_key, manifest, chunk_id, key)
         return value
 
@@ -88,6 +94,10 @@ class ChunkManager:
         chunk_id: int,
         key: DataKeyAndAAD | None,
     ) -> None:
+        """Offer the cache the chunks that cover the next
+        ``prefetch_max_bytes`` *original* bytes after ``chunk_id``, up to
+        the segment end (ChunkCache.java:159-184 plans the same range over
+        original positions)."""
         if self.cache is None or self.cache.prefetch_max_bytes <= 0:
             return
         index = manifest.chunk_index
@@ -95,29 +105,13 @@ class ChunkManager:
         upcoming = []
         i = chunk_id + 1
         while i < index.count and budget > 0:
-            budget -= index.transformed_size(i)
+            budget -= index.original_size(i)
             upcoming.append((object_key, i))
             i += 1
-
-        def loader_for(k):
-            _, cid = k
-
-            def load() -> bytes:
-                raw = self._load_chunk_raw(object_key, manifest, cid)
-                return b"".join(
-                    detransform(
-                        raw,
-                        index,
-                        compression=manifest.compression,
-                        encryption_key=key,
-                        codec=self.codec,
-                        chunk_ids=[cid],
-                    )
-                )
-
-            return load
-
-        self.cache.prefetch(upcoming, loader_for)
+        self.cache.prefetch(
+            upcoming,
+            lambda k: lambda: self._load_chunk(object_key, manifest, k[1], key),
+        )
 
     def fetch_range(
         self,

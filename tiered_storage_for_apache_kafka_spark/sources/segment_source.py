@@ -264,9 +264,7 @@ def parse_offset_index(buf: bytes) -> list[tuple[int, int]]:
 
     if len(buf) % 16 != 0:
         raise ValueError(f"offset index length {len(buf)} not a multiple of 16")
-    return [
-        _s.unpack_from(">qq", buf, i) for i in range(0, len(buf), 16)
-    ]
+    return list(_s.iter_unpack(">qq", buf))
 
 
 def plan_offset_byte_range(
