@@ -23,9 +23,6 @@ sys.path.insert(0, REPO)
 def main() -> int:
     names = sys.argv[1:]
     from tiered_storage_for_apache_kafka_spark.operators import QUERIES
-    from tiered_storage_for_apache_kafka_spark.operators.registry import (
-        CACHE_WARMUP,
-    )
     from tiered_storage_for_apache_kafka_spark.session import get_spark
 
     spark = get_spark(app_name="job-probe")
@@ -37,9 +34,6 @@ def main() -> int:
 
     _force(QUERIES["q1_pricing_summary"](spark, sf_dir))
     _force(QUERIES["tiered_offset_range_fetch"](spark, sf_dir))
-    for warm in CACHE_WARMUP:
-        if warm in names:
-            _force(QUERIES[warm](spark, sf_dir))
 
     tracker = spark.sparkContext.statusTracker()
     for name in names:

@@ -47,7 +47,6 @@ def main() -> int:
     args = ap.parse_args()
 
     from tiered_storage_for_apache_kafka_spark.operators import QUERIES
-    from tiered_storage_for_apache_kafka_spark.operators.registry import CACHE_WARMUP
     from tiered_storage_for_apache_kafka_spark.session import get_spark
 
     names = list(args.queries)
@@ -71,11 +70,6 @@ def main() -> int:
     _force(QUERIES["tiered_offset_range_fetch"](spark, sf_dir))
     _force(QUERIES["streaming_user_totals_stateful"](spark, sf_dir))
     _force(QUERIES["datasource_offset_range_fetch"](spark, sf_dir))
-    # shared-cache builders that are in the measured set must build
-    # their caches before timing (bench pass 1 plays this role there)
-    for warm in CACHE_WARMUP:
-        if warm in names:
-            _force(QUERIES[warm](spark, sf_dir))
 
     plans_dir = os.path.join(REPO, "plans", args.plans_dir)
     os.makedirs(plans_dir, exist_ok=True)

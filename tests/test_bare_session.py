@@ -38,7 +38,6 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as e
 from tiered_storage_for_apache_kafka_spark.operators import ORACLES
-from tiered_storage_for_apache_kafka_spark.operators.registry import CACHE_WARMUP
 
 failures = []
 # oracled queries are value-replayed on a default-conf session in
@@ -52,15 +51,12 @@ def go(name):
     except Exception as ex:
         failures.append(f"{name}: {type(ex).__name__}: {str(ex)[:200]}")
 
-# shared-cache builders run sequentially first (same protocol as the
-# DuckDB gate), the rest concurrently — Spark interleaves jobs from
-# multiple submitter threads, so wall time is the pool's
-for name in CACHE_WARMUP:
-    if name in qs:
-        go(name)
+# all concurrently — Spark interleaves jobs from multiple submitter
+# threads, so wall time is the pool's; each shared fixture is built
+# once under its own lock
 from concurrent.futures import ThreadPoolExecutor
 with ThreadPoolExecutor(max_workers=8) as ex:
-    list(ex.map(go, [n for n in qs if n not in CACHE_WARMUP]))
+    list(ex.map(go, qs))
 if failures:
     print("BARE-SESSION FAILURES:\n" + "\n".join(sorted(failures)))
     sys.exit(1)

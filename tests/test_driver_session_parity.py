@@ -55,7 +55,6 @@ from _driver_compare import canon_frame, compare_frames, duck_con
 
 import __spark_entry__ as e
 from tiered_storage_for_apache_kafka_spark.operators import ORACLES, QUERIES
-from tiered_storage_for_apache_kafka_spark.operators.registry import CACHE_WARMUP
 
 SF_DIR = "/root/testdata/sf0.01"  # the driver's own gate scale: pins
 # that depend on file-slice geometry (bounds_pruned and friends) can
@@ -69,18 +68,13 @@ def run_spark(name):
         failures.append(f"{name}: spark ERROR {type(ex).__name__}: {str(ex)[:200]}")
         return None
 
-# shared-cache builders sequentially first (same protocol as the other
-# gates), then the rest concurrently — Spark interleaves jobs from
-# multiple submitter threads
+# all concurrently — Spark interleaves jobs from multiple submitter
+# threads, and each shared fixture is built once under its own lock
 results = {}
 oracled = sorted(ORACLES)
-for name in CACHE_WARMUP:
-    if name in ORACLES:
-        results[name] = run_spark(name)
-rest = [n for n in oracled if n not in results]
 from concurrent.futures import ThreadPoolExecutor
 with ThreadPoolExecutor(max_workers=8) as ex:
-    for name, pdf in zip(rest, ex.map(run_spark, rest)):
+    for name, pdf in zip(oracled, ex.map(run_spark, oracled)):
         results[name] = pdf
 
 con = duck_con(SF_DIR)

@@ -105,20 +105,6 @@ def test_weight_formula_matches_duckdb():
         assert -((_WEIGHT_MOD - 1) // 2) <= w <= (_WEIGHT_MOD - 1) // 2
 
 
-def test_session_cache_put_evicts_dead_sessions():
-    from tiered_storage_for_apache_kafka_spark.operators.registry import (
-        session_cache_put,
-    )
-
-    cache = {}
-    session_cache_put(cache, ("app-1", "sfA"), 1)
-    session_cache_put(cache, ("app-1", "sfB"), 2)
-    assert len(cache) == 2  # same session: entries accumulate per sf_dir
-    session_cache_put(cache, ("app-2", "sfA"), 3)
-    # new session: every app-1 entry (dead JVM) evicted
-    assert cache == {("app-2", "sfA"): 3}
-
-
 def test_trained_classifier_beats_base_rate(spark):
     """The perceptron must actually LEARN: full-corpus accuracy well
     above the majority-class base rate (the training loop's oracle

@@ -32,11 +32,6 @@ from tiered_storage_for_apache_kafka_spark.operators import ORACLES, QUERIES
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 
-from tiered_storage_for_apache_kafka_spark.operators.registry import (
-    CACHE_WARMUP as _CACHE_WARMUP,
-)
-
-
 @pytest.fixture(scope="module")
 def spark_results(spark):
     """Execute every oracled query once, concurrently (Spark's scheduler
@@ -55,12 +50,8 @@ def spark_results(spark):
         except Exception as e:  # surfaced by the per-query test
             return name, e
 
-    for name in _CACHE_WARMUP:
-        if name in ORACLES:
-            res[name] = go(name)[1]
-    rest = [n for n in sorted(ORACLES) if n not in res]
     with ThreadPoolExecutor(max_workers=8) as ex:
-        for name, r in ex.map(go, rest):
+        for name, r in ex.map(go, sorted(ORACLES)):
             res[name] = r
     return res
 

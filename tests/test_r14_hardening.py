@@ -119,6 +119,56 @@ class TestSharedCacheModes:
         assert df.count() == 100
         assert df.agg(F.sum("v")).collect()[0][0] == 9900
 
+    def test_persist_mode_runs_upstream_once(self, spark, monkeypatch):
+        """``persist`` materializes before returning, like the
+        checkpoint modes: the upstream runs once, inside lineage_cut,
+        and two consumers acting afterwards read the stored blocks."""
+        from pyspark.sql.types import LongType
+
+        from tiered_storage_for_apache_kafka_spark.operators.registry import (
+            lineage_cut,
+        )
+
+        monkeypatch.setenv("SPARK_GRAFT_SHARED_CACHE_MODE", "persist")
+        runs = spark.sparkContext.accumulator(0)
+
+        @F.udf(LongType())
+        def counted(x):
+            runs.add(1)
+            return x * 2
+
+        df = lineage_cut(spark.range(100).select(counted("id").alias("v")))
+        try:
+            assert runs.value == 100
+            assert df.count() == 100
+            assert df.agg(F.sum("v")).collect()[0][0] == 9900
+            assert runs.value == 100
+        finally:
+            df.unpersist()
+
+    def test_checkpoint_mode_refuses_driver_temp_dir_off_local(
+        self, monkeypatch
+    ):
+        """On a cluster master a temp dir on the driver is unreachable
+        from the executors: with no checkpoint dir set, raise."""
+        from types import SimpleNamespace
+
+        from tiered_storage_for_apache_kafka_spark.operators.registry import (
+            lineage_cut,
+        )
+
+        monkeypatch.setenv("SPARK_GRAFT_SHARED_CACHE_MODE", "checkpoint")
+        set_dirs = []
+        sc = SimpleNamespace(
+            master="spark://h:7077",
+            getCheckpointDir=lambda: None,
+            setCheckpointDir=set_dirs.append,
+        )
+        frame = SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=sc))
+        with pytest.raises(ValueError, match="setCheckpointDir"):
+            lineage_cut(frame)
+        assert set_dirs == []
+
     def test_unknown_mode_raises(self, spark, monkeypatch):
         from tiered_storage_for_apache_kafka_spark.operators.registry import (
             lineage_cut,

@@ -105,7 +105,7 @@ def test_cms_never_underestimates_and_is_tight_here(spark):
 def test_promoted_queries_inside_driver_sample_window():
     """The external driver samples the first 50 registered queries; the
     registry prefix must START with exactly the round's declared
-    rotation window (operators.__init__._R8_WINDOW), in order —
+    rotation window (operators.__init__._R14_WINDOW), in order —
     new/changed queries first, then the oldest-verdict cohort; the
     remaining sample slots backfill from registration order.
     Regression guard: a reorder bug once silently pushed a promote
@@ -113,8 +113,8 @@ def test_promoted_queries_inside_driver_sample_window():
     import tiered_storage_for_apache_kafka_spark.operators as ops
 
     names = list(ops.QUERIES)
-    expected = [n for n in ops._R8_WINDOW if n in ops.QUERIES]
-    assert len(expected) == len(ops._R8_WINDOW)  # every name resolves
+    expected = [n for n in ops._R14_WINDOW if n in ops.QUERIES]
+    assert len(expected) == len(ops._R14_WINDOW)  # every name resolves
     assert names[: len(expected)] == expected
     assert len(names) >= 50  # the driver's sample width stays covered
 

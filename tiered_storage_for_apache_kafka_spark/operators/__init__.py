@@ -58,80 +58,6 @@ from tiered_storage_for_apache_kafka_spark.operators.registry import (  # noqa: 
 # every round by tests/test_queries_vs_duckdb.py (engine session) AND
 # tests/test_driver_session_parity.py (default-conf session) regardless.
 #
-# The r13 window, in priority order:
-#   (a) queries NEW this round (first verdicts) — filled in as they
-#       register below;
-#   (b) the complete 12-query r8-verdict cohort (mandatory: r8 + 5 =
-#       13 is the staleness boundary; recomputed from all twelve
-#       CORRECTNESS files and identical to VERDICT r12 task #2 — note
-#       `quality_decile_stats` IS in it: its r12 backfill never made
-#       the sample);
-#   (c) an aggressive early drain of the 43-query r9-verdict cohort
-#       (boundary r14): the remaining prefix slots take the r9 set
-#       flagship-first, trimmed from the END as (a) grows — the
-#       trimmed residue (≤7) is r14's mandatory cohort, comfortably
-#       inside the next window's arithmetic.
-_R13_WINDOW = [
-    # (a) new this round
-    "iceberg_nested_rename_scan",
-    "iceberg_dv_retraction_mirror",
-    # (b) the full r8-verdict rotation cohort (12, mandatory)
-    "quality_decile_stats",
-    "quality_weighted_sample",
-    "rlmm_event_replay",
-    "semantic_decontamination",
-    "source_overlap_matrix",
-    "source_vocab_growth",
-    "sq8_recall_at_k",
-    "streaming_interval_join",
-    "streaming_session_windows",
-    "temperature_mixture_weights",
-    "tfidf_top_terms",
-    "top_supplier_per_part",
-    # (c) r9-verdict early drain (flagship/tiered/streaming first so
-    # end-trimming sheds TPC-H cells, which the parity suite re-proves
-    # hardest elsewhere; trim from the END when (a) gains queries)
-    "tiered_roundtrip_agg",
-    "tiered_manifest_stats",
-    "tiered_offset_range_fetch",
-    "table_mode_batch_digest",
-    "table_mode_segment_blobs",
-    "datasource_offset_range_fetch",
-    "streaming_tier_commit",
-    "streaming_iceberg_commit",
-    "streaming_dedup_within_watermark",
-    "engine_metrics_snapshot",
-    "iceberg_compaction_verify",
-    "iceberg_global_delete_scan",
-    "iceberg_metadata_summary",
-    "iceberg_partitions_table",
-    "iceberg_puffin_stats",
-    "iceberg_rest_commit",
-    "iceberg_row_delete_scan",
-    "iceberg_scan_pruned",
-    "iceberg_spec_evolution_scan",
-    "iceberg_string_partition_scan",
-    "iceberg_time_travel",
-    "iceberg_upsert_scan",
-    "iceberg_zorder_scan",
-    "ann_ivf_kmeans_topk",
-    "approx_quantile_audit",
-    "dedup_lines_keep_first",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "hybrid_rrf_retrieval",
-    "kmeans_embedding_clusters",
-    "multimodal_audio_decode",
-    "multimodal_image_decode",
-    "multimodal_video_frames",
-    "unigram_logprob_quality",
-    "q7_volume_shipping",
-    "q8_market_share",
-    # r9 residue deferred to r14 (mandatory there): q9_product_profit,
-    # q10_returned_items, q13_customer_distribution, q14_promo_revenue,
-    # q15_top_supplier, q16_supplier_part_variety, q19_discount_eligible
-]
-# ---------------------------------------------------------------------------
 # The r14 window (same rotation rule): (a) queries NEW this round,
 # (b) the mandatory r9-residue cohort the r13 window deferred here,
 # (c) an aggressive drain of the 49-query r10-verdict cohort (boundary
@@ -197,12 +123,6 @@ _R14_WINDOW = [
     # scalar_base64_roundtrip, semi_anti_join_orders,
     # set_ops_customer_segments
 ]
-_R13_WINDOW = _R14_WINDOW  # backward-compatible aliases (older scripts
-_R12_WINDOW = _R14_WINDOW  # and tests read the CURRENT window through
-_R11_WINDOW = _R14_WINDOW  # these names)
-_R10_WINDOW = _R14_WINDOW
-_R9_WINDOW = _R14_WINDOW
-_R8_WINDOW = _R14_WINDOW
 
 
 def _reorder() -> None:

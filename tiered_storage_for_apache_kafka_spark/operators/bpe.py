@@ -35,15 +35,12 @@ from tiered_storage_for_apache_kafka_spark.sources.local_df import (
 )
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 
 BPE_MERGES = 8
 MERGE_PASSES = 6  # fixed replace passes per merge (see module docstring)
 END_OF_WORD = "</w>"
-
-_BPE_CACHE: dict[tuple, list] = {}
 
 
 def _seq_sql(w: str) -> str:
@@ -115,6 +112,72 @@ WITH words AS MATERIALIZED (
     return sql + f"\n{selects}\nORDER BY merge_rank\n"
 
 
+@session_fixture
+def _trained_merges(spark: SparkSession, sf_dir: str) -> list:
+    """The BPE training loop: the learned (rank, pair, merged, cnt)
+    merge list, trained once per session and shared by training's
+    output and its application to the corpus."""
+    from tiered_storage_for_apache_kafka_spark.operators.dedup import (
+        tokens_cached,
+    )
+
+    toks = tokens_cached(spark, sf_dir)
+    words = (
+        toks.select(F.explode("toks").alias("w"))
+        .filter(F.col("w") != "")
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
+    )
+    vocab = words.select(
+        F.expr(_seq_expr("w")).alias("seq"), "f"
+    ).cache()
+    merges = []
+    for rank in range(1, BPE_MERGES + 1):
+        pairs = (
+            # the split is staged into a column: Catalyst does no
+            # loop-invariant code motion inside HOF lambdas, so
+            # split-in-the-lambda re-splits seq once per pair
+            vocab.select(F.expr("split(seq, ' ')").alias("sym"), "f")
+            .select(
+                F.explode(
+                    # size guard: a fully-merged single-symbol word
+                    # makes sequence(1, size-1) DESCEND to [1, 0] —
+                    # INVALID_ARRAY_INDEX under ANSI mode (same
+                    # hazard as _hashed_features' bigrams)
+                    F.expr(
+                        "CASE WHEN size(sym) >= 2 THEN "
+                        "transform(sequence(1, size(sym) - 1), "
+                        "i -> concat(sym[i - 1], ' ', sym[i])) "
+                        "ELSE CAST(array() AS array<string>) END"
+                    )
+                ).alias("pair"),
+                "f",
+            )
+            .groupBy("pair")
+            .agg(F.sum("f").cast("bigint").alias("cnt"))
+        )
+        best = pairs.orderBy(F.col("cnt").desc(), F.col("pair").asc()).limit(1)
+        row = best.collect()
+        if not row:
+            break
+        pair, cnt = row[0]["pair"], int(row[0]["cnt"])
+        merged = pair.replace(" ", "")
+        merges.append((rank, pair, merged, cnt))
+        lit_pair = pair.replace("'", "''")
+        lit_merged = merged.replace("'", "''")
+        new_vocab = vocab.select(
+            F.expr(
+                _apply_merge_sql("seq", f"'{lit_pair}'", f"'{lit_merged}'")
+            ).alias("seq"),
+            "f",
+        ).cache()
+        new_vocab.count()  # materialize before dropping the parent
+        vocab.unpersist()
+        vocab = new_vocab
+    vocab.unpersist()
+    return merges
+
+
 @query("bpe_train_merges", oracle=_bpe_oracle())
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAINED BPE merge table: {BPE_MERGES} rounds of pair-count →
@@ -130,68 +193,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     application is a JVM string expression (no UDF anywhere). This is
     the layout of production subword trainers (HuggingFace tokenizers'
     word-count pre-aggregation), expressed on Spark."""
-    from tiered_storage_for_apache_kafka_spark.operators.dedup import (
-        tokens_cached,
-    )
-
-    key = session_cache_key(spark, sf_dir)
-    merges = _BPE_CACHE.get(key)
-    if merges is None:
-        toks = tokens_cached(spark, sf_dir)
-        words = (
-            toks.select(F.explode("toks").alias("w"))
-            .filter(F.col("w") != "")
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
-        )
-        vocab = words.select(
-            F.expr(_seq_expr("w")).alias("seq"), "f"
-        ).cache()
-        merges = []
-        for rank in range(1, BPE_MERGES + 1):
-            pairs = (
-                # the split is staged into a column: Catalyst does no
-                # loop-invariant code motion inside HOF lambdas, so
-                # split-in-the-lambda re-splits seq once per pair
-                vocab.select(F.expr("split(seq, ' ')").alias("sym"), "f")
-                .select(
-                    F.explode(
-                        # size guard: a fully-merged single-symbol word
-                        # makes sequence(1, size-1) DESCEND to [1, 0] —
-                        # INVALID_ARRAY_INDEX under ANSI mode (same
-                        # hazard as _hashed_features' bigrams)
-                        F.expr(
-                            "CASE WHEN size(sym) >= 2 THEN "
-                            "transform(sequence(1, size(sym) - 1), "
-                            "i -> concat(sym[i - 1], ' ', sym[i])) "
-                            "ELSE CAST(array() AS array<string>) END"
-                        )
-                    ).alias("pair"),
-                    "f",
-                )
-                .groupBy("pair")
-                .agg(F.sum("f").cast("bigint").alias("cnt"))
-            )
-            best = pairs.orderBy(F.col("cnt").desc(), F.col("pair").asc()).limit(1)
-            row = best.collect()
-            if not row:
-                break
-            pair, cnt = row[0]["pair"], int(row[0]["cnt"])
-            merged = pair.replace(" ", "")
-            merges.append((rank, pair, merged, cnt))
-            lit_pair = pair.replace("'", "''")
-            lit_merged = merged.replace("'", "''")
-            new_vocab = vocab.select(
-                F.expr(
-                    _apply_merge_sql("seq", f"'{lit_pair}'", f"'{lit_merged}'")
-                ).alias("seq"),
-                "f",
-            ).cache()
-            new_vocab.count()  # materialize before dropping the parent
-            vocab.unpersist()
-            vocab = new_vocab
-        vocab.unpersist()
-        session_cache_put(_BPE_CACHE, key, merges)
+    merges = _trained_merges(spark, sf_dir)
     return local_rows_df(
         spark,
         merges, "merge_rank INT, pair STRING, merged STRING, cnt BIGINT"
@@ -246,12 +248,8 @@ def bpe_encode_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens_cached,
     )
 
-    # ensure the merge table is trained (and cached) for this corpus
-    bpe_train_merges(spark, sf_dir)
-    merges = _BPE_CACHE[session_cache_key(spark, sf_dir)]
-
     seq = _seq_expr("tok")
-    for _rank, pair, merged, _cnt in merges:
+    for _rank, pair, merged, _cnt in _trained_merges(spark, sf_dir):
         lp, lm = pair.replace("'", "''"), merged.replace("'", "''")
         seq = _apply_merge_sql(f"({seq})", f"'{lp}'", f"'{lm}'")
 

@@ -35,9 +35,8 @@ from tiered_storage_for_apache_kafka_spark.operators.dedup import (
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     lineage_cut,
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 from tiered_storage_for_apache_kafka_spark.tables import load_table, scan_parallel
 
 # split fractions in 256ths of the md5 bucket space: [0, TEST) test,
@@ -50,9 +49,8 @@ SAMPLE_BUCKET_UB = 64  # ~25% per stratum
 
 DECON_GRAM_WORDS = 5  # word 5-grams for benchmark-overlap detection
 
-_GRAMS5_CACHE: dict[tuple, DataFrame] = {}
 
-
+@session_fixture
 def _grams5_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, word-5-gram string) over the whole corpus,
     materialized once per (session, corpus) with its lineage cut — the
@@ -62,25 +60,20 @@ def _grams5_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     Tokenization comes from the shared token cache; the gram lambda
     stays fused into the explode (a staged `.select(grams)` measures
     ~5x slower — extra projection boundary)."""
-    key = session_cache_key(spark, sf_dir)
-    cached = _GRAMS5_CACHE.get(key)
-    if cached is None:
-        n = DECON_GRAM_WORDS
-        cached = lineage_cut(
-            tokens_cached(spark, sf_dir)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(1, greatest(size(toks) - {n - 1}, 1)), "
-                        f"i -> array_join(slice(toks, i, {n}), ' '))"
-                    )
-                ).alias("gram"),
-            )
-            .distinct()
+    n = DECON_GRAM_WORDS
+    return lineage_cut(
+        tokens_cached(spark, sf_dir)
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    f"transform(sequence(1, greatest(size(toks) - {n - 1}, 1)), "
+                    f"i -> array_join(slice(toks, i, {n}), ' '))"
+                )
+            ).alias("gram"),
         )
-        session_cache_put(_GRAMS5_CACHE, key, cached)
-    return cached
+        .distinct()
+    )
 BENCH_MOD = 97  # doc_id % 97 == 0 stands in for "the benchmark set"
 
 

@@ -25,9 +25,8 @@ from pyspark.sql import functions as F
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     lineage_cut,
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 from tiered_storage_for_apache_kafka_spark.tables import load_table, scan_parallel
 
 N_HASHES = 8
@@ -152,38 +151,26 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-_CC_CACHE: dict[tuple, DataFrame] = {}
-_TOKENS_CACHE: dict[tuple, DataFrame] = {}
-
-
+@session_fixture
 def tokens_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One cached (doc_id, toks array) materialization per (process,
     sf_dir) — the scan+split stage every token-derived operator family
     (3-word shingles, 4-word grams, 16-token substring windows, bigram
     repetition stats) shares, so the corpus is read and tokenized once
     however many dedup/quality passes run."""
-    cached = _TOKENS_CACHE.get(session_cache_key(spark, sf_dir))
-    if cached is None:
-        docs = scan_parallel(load_table(spark, sf_dir, "documents"), spark)
-        cached = lineage_cut(
-            docs.select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
-        )
-        session_cache_put(_TOKENS_CACHE, session_cache_key(spark, sf_dir), cached)
-    return cached
+    docs = scan_parallel(load_table(spark, sf_dir, "documents"), spark)
+    return lineage_cut(
+        docs.select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
+    )
 
 
+@session_fixture
 def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One cached shingle materialization per (process, sf_dir) — the
     tokenize-once stage every MinHash consumer (signatures, bands, sizes,
     both intersection sides) shares, exactly as a production pipeline
     tokenizes a corpus once for many downstream dedup passes."""
-    cached = _SHINGLE_CACHE.get(session_cache_key(spark, sf_dir))
-    if cached is None:
-        cached = lineage_cut(_shingles(spark, sf_dir))
-        session_cache_put(_SHINGLE_CACHE, session_cache_key(spark, sf_dir), cached)
-    return cached
+    return lineage_cut(_shingles(spark, sf_dir))
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -365,6 +352,7 @@ JOIN sizes nb ON nb.doc_id = i.doc_b
 WHERE {JACCARD_DEN} * i.n_inter >= {JACCARD_NUM} * (na.n + nb.n - i.n_inter)
 """,
 )
+@session_fixture
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup detection: LSH candidate pairs (same band key) verified
     with exact n-gram Jaccard; pairs kept when jaccard >= 0.2 (integer
@@ -374,9 +362,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection join, sizes) — cached so the scan+explode runs once; the
     verified pair set is itself cached per (process, sf_dir) because the
     canonicalization pass (`dedup_connected_components`) consumes it."""
-    cached = _PAIRS_CACHE.get(session_cache_key(spark, sf_dir))
-    if cached is not None:
-        return cached
     sh = _shingles_cached(spark, sf_dir)
     cand = _candidates_from_bands(_bands_from_wide(_wide_signatures(sh)))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -411,9 +396,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("n_inter").cast("double") / n_union, 6).alias("jaccard"),
         )
     )
-    result = lineage_cut(result)
-    session_cache_put(_PAIRS_CACHE, session_cache_key(spark, sf_dir), result)
-    return result
+    return lineage_cut(result)
 
 
 NGRAM_WORDS = 4  # n-gram Jaccard operates on word 4-grams
@@ -866,6 +849,7 @@ _CC_ORACLE_PREFIX = (
     "dedup_connected_components",
     oracle=_CC_ORACLE_PREFIX + "SELECT doc_id, canonical_doc_id FROM labeled",
 )
+@session_fixture
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-document selection: connected components of the verified
     near-duplicate graph (each doc labeled with the min doc_id reachable
@@ -889,9 +873,6 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers (cluster representatives, keep/drop joins) reuse it
     instead of replaying the loop.
     """
-    cached = _CC_CACHE.get(session_cache_key(spark, sf_dir))
-    if cached is not None:
-        return cached
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     edges = lineage_cut(
         pairs.union(pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
@@ -899,9 +880,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("doc_b", "dst")
     )
     labels, _rounds = propagate_min_labels(edges)
-    out = labels.select("doc_id", F.col("label").alias("canonical_doc_id"))
-    session_cache_put(_CC_CACHE, session_cache_key(spark, sf_dir), out)
-    return out
+    return labels.select("doc_id", F.col("label").alias("canonical_doc_id"))
 
 
 def propagate_min_labels(edges: DataFrame) -> tuple[DataFrame, int]:

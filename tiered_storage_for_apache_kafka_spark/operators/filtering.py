@@ -23,9 +23,8 @@ from tiered_storage_for_apache_kafka_spark.sources.local_df import (
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     lineage_cut,
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 
 LINE_TOKENS = 12
 
@@ -219,9 +218,7 @@ def _bucket_expr(tok: str) -> str:
     )
 
 
-_HASHED_CACHE: dict[tuple, DataFrame] = {}
-
-
+@session_fixture
 def _hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashed uni+bigram feature rows (doc_id, bucket) — shared by the
     pseudo-trained scorer, the trained classifier, and the DSIR
@@ -230,13 +227,7 @@ def _hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + per-token md5 bucketing is the feature plane every
     consumer shares (a production pipeline materializes the hashed
     feature table once per corpus snapshot, not per model)."""
-    key = session_cache_key(spark, sf_dir)
-    cached = _HASHED_CACHE.get(key)
-    if cached is not None:
-        return cached
-    hashed = lineage_cut(_hashed_features_raw(spark, sf_dir))
-    session_cache_put(_HASHED_CACHE, key, hashed)
-    return hashed
+    return lineage_cut(_hashed_features_raw(spark, sf_dir))
 
 
 def _hashed_features_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -331,8 +322,6 @@ BIAS_CNT = 8  # bias feature magnitude (tuned: stable at sf0.001-0.1)
 TRAIN_MOD = 5  # train on doc_id % TRAIN_MOD == 0 (20%), score the full corpus
 _BIAS_BUCKET = QUALITY_BUCKETS  # one bucket past the feature space
 
-_TRAINED_CACHE: dict[tuple, list] = {}
-
 
 def _trained_oracle() -> str:
     """DuckDB twin of the full integer-perceptron training loop: the
@@ -400,6 +389,76 @@ GROUP BY l.doc_id
     return sql
 
 
+def _labels_and_features(spark: SparkSession, sf_dir: str):
+    """(labels, feats) frames of the trained classifier: the synthetic
+    label per doc and its hashed feature counts plus the bias feature."""
+    from tiered_storage_for_apache_kafka_spark.operators.dedup import (
+        tokens_cached,
+    )
+
+    labels = tokens_cached(spark, sf_dir).select(
+        "doc_id",
+        F.when(F.size("toks") >= LABEL_TOKENS, 1).otherwise(-1).alias("y"),
+    )
+    # hashed features + a constant bias feature per doc (the intercept:
+    # without it a batch perceptron on this "length >= threshold" target
+    # oscillates between the all-positive and all-negative predictors)
+    feats = (
+        _hashed_features(spark, sf_dir)
+        .groupBy("doc_id", "bucket")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        .unionAll(
+            labels.select(
+                "doc_id",
+                F.lit(_BIAS_BUCKET).cast("bigint").alias("bucket"),
+                F.lit(BIAS_CNT).cast("bigint").alias("cnt"),
+            )
+        )
+    )
+    return labels, feats
+
+
+@session_fixture
+def _trained_weights(spark: SparkSession, sf_dir: str) -> list:
+    """The perceptron's learned (bucket, weight) table, sorted: trained
+    once per session, shared by every scoring of the full corpus."""
+    labels, feats = _labels_and_features(spark, sf_dir)
+    train_feats = feats.filter(F.col("doc_id") % TRAIN_MOD == 0).cache()
+    train_labels = labels.filter(F.col("doc_id") % TRAIN_MOD == 0)
+    weights: dict[int, int] = {}
+    for _round in range(TRAIN_ROUNDS):
+        if weights:
+            wdf = local_rows_df(
+                spark, sorted(weights.items()), "bucket BIGINT, wt BIGINT"
+            )
+            scores = (
+                train_feats.join(F.broadcast(wdf), "bucket", "left")
+                .groupBy("doc_id")
+                .agg(
+                    F.coalesce(
+                        F.sum(F.col("wt") * F.col("cnt")), F.lit(0)
+                    ).alias("s")
+                )
+            )
+        else:
+            scores = train_feats.groupBy("doc_id").agg(
+                F.lit(0).cast("bigint").alias("s")
+            )
+        mis = train_labels.join(scores, "doc_id").filter(
+            F.when(F.col("s") > 0, 1).otherwise(-1) != F.col("y")
+        )
+        delta = (
+            train_feats.join(mis.select("doc_id", "y"), "doc_id")
+            .groupBy("bucket")
+            .agg(F.sum(F.col("y") * F.col("cnt")).alias("d"))
+            .collect()
+        )
+        for row in delta:
+            weights[row["bucket"]] = weights.get(row["bucket"], 0) + row["d"]
+    train_feats.unpersist()
+    return sorted(weights.items())
+
+
 @query("quality_classifier_trained", oracle=_trained_oracle())
 def quality_classifier_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAINED quality classifier (the round-4 verdict ask #6): the same
@@ -432,71 +491,10 @@ def quality_classifier_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of corpus size; rounds are sequential Spark jobs exactly
     like Lloyd's iterations. Serving after training is the same
     broadcast-dim plan as `quality_classifier_score`."""
-    from tiered_storage_for_apache_kafka_spark.operators.dedup import (
-        tokens_cached,
+    labels, feats = _labels_and_features(spark, sf_dir)
+    wdf = local_rows_df(
+        spark, _trained_weights(spark, sf_dir), "bucket BIGINT, wt BIGINT"
     )
-
-    key = session_cache_key(spark, sf_dir)
-    labels = tokens_cached(spark, sf_dir).select(
-        "doc_id",
-        F.when(F.size("toks") >= LABEL_TOKENS, 1).otherwise(-1).alias("y"),
-    )
-    # hashed features + a constant bias feature per doc (the intercept:
-    # without it a batch perceptron on this "length >= threshold" target
-    # oscillates between the all-positive and all-negative predictors)
-    feats = (
-        _hashed_features(spark, sf_dir)
-        .groupBy("doc_id", "bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .unionAll(
-            labels.select(
-                "doc_id",
-                F.lit(_BIAS_BUCKET).cast("bigint").alias("bucket"),
-                F.lit(BIAS_CNT).cast("bigint").alias("cnt"),
-            )
-        )
-    )
-
-    cached = _TRAINED_CACHE.get(key)
-    if cached is None:
-        train_feats = feats.filter(F.col("doc_id") % TRAIN_MOD == 0).cache()
-        train_labels = labels.filter(F.col("doc_id") % TRAIN_MOD == 0)
-        weights: dict[int, int] = {}
-        for _round in range(TRAIN_ROUNDS):
-            if weights:
-                wdf = local_rows_df(
-        spark,
-                    sorted(weights.items()), "bucket BIGINT, wt BIGINT"
-                )
-                scores = (
-                    train_feats.join(F.broadcast(wdf), "bucket", "left")
-                    .groupBy("doc_id")
-                    .agg(
-                        F.coalesce(
-                            F.sum(F.col("wt") * F.col("cnt")), F.lit(0)
-                        ).alias("s")
-                    )
-                )
-            else:
-                scores = train_feats.groupBy("doc_id").agg(
-                    F.lit(0).cast("bigint").alias("s")
-                )
-            mis = train_labels.join(scores, "doc_id").filter(
-                F.when(F.col("s") > 0, 1).otherwise(-1) != F.col("y")
-            )
-            delta = (
-                train_feats.join(mis.select("doc_id", "y"), "doc_id")
-                .groupBy("bucket")
-                .agg(F.sum(F.col("y") * F.col("cnt")).alias("d"))
-                .collect()
-            )
-            for row in delta:
-                weights[row["bucket"]] = weights.get(row["bucket"], 0) + row["d"]
-        train_feats.unpersist()
-        cached = sorted(weights.items())
-        session_cache_put(_TRAINED_CACHE, key, cached)
-
-    wdf = local_rows_df(spark, cached, "bucket BIGINT, wt BIGINT")
     logits = (
         feats.join(F.broadcast(wdf), "bucket", "left")
         .groupBy("doc_id")

@@ -25,17 +25,15 @@ from tiered_storage_for_apache_kafka_spark.operators.dedup import (
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     lineage_cut,
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 
 PR_ITERS = 3
 R0 = 1_000_000
 BASE = 150_000  # (1 - 0.85) * 1e6
 
-_EDGES_CACHE: dict[tuple, DataFrame] = {}
 
-
+@session_fixture
 def _edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected edge list of the verified near-dup graph, one cached
     materialization per (process, sf_dir) — the same pattern as the
@@ -47,18 +45,13 @@ def _edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration job is a handful of tasks instead of rounds of 32-way
     shuffles of a few hundred rows. Above the gate the graph stays
     distributed and the iterations shuffle on dst as designed."""
-    cached = _EDGES_CACHE.get(session_cache_key(spark, sf_dir))
-    if cached is not None:
-        return cached
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.union(
         pairs.select(F.col("doc_b"), F.col("doc_a"))
     ).toDF("a", "b")
     if edges.count() < 1_000_000:
         edges = edges.repartition(1)
-    edges = lineage_cut(edges)
-    session_cache_put(_EDGES_CACHE, session_cache_key(spark, sf_dir), edges)
-    return edges
+    return lineage_cut(edges)
 
 
 def _pagerank_cte() -> str:

@@ -32,17 +32,15 @@ from tiered_storage_for_apache_kafka_spark.sources.local_df import (
 )
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 from tiered_storage_for_apache_kafka_spark.tables import load_table
 
 N_BUCKETS = 8
 INSERT_OFFSET = 10_000_000
 
-_MERGE_CACHE: dict[tuple, tuple[str, int]] = {}
 
-
+@session_fixture
 def _merged_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Base table (id, grp, v=id*3) bucket[8]-partitioned by id, then
     ONE merge batch derived from event_id arithmetic:
@@ -60,10 +58,6 @@ def _merged_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _MERGE_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("id")
     )
@@ -120,9 +114,7 @@ def _merged_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
         spark, batch, tdir, on=["id"], op_col="op", seq_col="seq",
         partition_spec=spec, now_ms=2_000,
     )
-    out = (tdir, len(meta["snapshots"]))
-    session_cache_put(_MERGE_CACHE, key, out)
-    return out
+    return tdir, len(meta["snapshots"])
 
 
 @query(
@@ -189,10 +181,7 @@ def iceberg_merge_upsert_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CDC_STREAM_CACHE: dict[tuple, tuple] = {}
-_MIRROR_EV_CACHE: dict[tuple, object] = {}
-
-
+@session_fixture
 def _cdc_streamed_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Three CDC micro-batches streamed through the exactly-once merge
     sink (`streaming/ingest.py::stream_cdc_to_iceberg`), one file per
@@ -219,10 +208,6 @@ def _cdc_streamed_table(spark: SparkSession, sf_dir: str) -> tuple:
         stream_cdc_to_iceberg,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _CDC_STREAM_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = sorted(
         r[0]
         for r in load_table(spark, sf_dir, "events")
@@ -282,9 +267,7 @@ def _cdc_streamed_table(spark: SparkSession, sf_dir: str) -> tuple:
     marker = int(
         (meta.get("properties") or {}).get(f"streaming.last-batch.{app_tag}")
     )
-    out = (tdir, len(meta["snapshots"]), marker)
-    session_cache_put(_CDC_STREAM_CACHE, key, out)
-    return out
+    return tdir, len(meta["snapshots"]), marker
 
 
 @query(
@@ -345,6 +328,32 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_fixture
+def _merged_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The merged table's `iceberg_cdc` keyed-changelog stream, drained.
+
+    Materialize + drop the memory sink: the drained stream is
+    checkpointed executor-side and cached per session, so reruns replay
+    the mirror without re-consuming the stream and the sink never pins
+    rows in the driver for the session lifetime."""
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg_stream import (
+        register_cdc,
+    )
+    from tiered_storage_for_apache_kafka_spark.streaming.ingest import (
+        run_stream_to_memory,
+    )
+
+    tdir, _n = _merged_table(spark, sf_dir)
+    register_cdc(spark)
+    return run_stream_to_memory(
+        spark.readStream.format("iceberg_cdc")
+        .option("path", tdir)
+        .load(),
+        "append",
+        materialize=True,
+    )
+
+
 @query(
     "streaming_cdc_mirror",
     oracle=f"""
@@ -381,30 +390,7 @@ def streaming_cdc_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one broadcast-size delete join."""
     from pyspark.sql import Window
 
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg_stream import (
-        register_cdc,
-    )
-    from tiered_storage_for_apache_kafka_spark.streaming.ingest import (
-        run_stream_to_memory,
-    )
-
-    tdir, _n = _merged_table(spark, sf_dir)
-    register_cdc(spark)
-    key = session_cache_key(spark, sf_dir)
-    ev = _MIRROR_EV_CACHE.get(key)
-    if ev is None:
-        # materialize + drop the memory sink: the drained stream is
-        # checkpointed executor-side and cached per session, so reruns
-        # replay the mirror without re-consuming the stream and the
-        # sink never pins rows in the driver for the session lifetime
-        ev = run_stream_to_memory(
-            spark.readStream.format("iceberg_cdc")
-            .option("path", tdir)
-            .load(),
-            "append",
-            materialize=True,
-        )
-        session_cache_put(_MIRROR_EV_CACHE, key, ev)
+    ev = _merged_changelog(spark, sf_dir)
     two_commits = (
         1
         if ev.select("_commit_seq").distinct().count() == 2
@@ -451,9 +437,7 @@ def streaming_cdc_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EQCONV_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _eqconv_table(spark: SparkSession, sf_dir: str) -> str:
     """A CDC table (two merge batches incl. a delete-then-resurrect)
     whose equality-delete plane is then CONVERTED to position deletes:
@@ -473,10 +457,6 @@ def _eqconv_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _EQCONV_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("id")
     )
@@ -512,7 +492,6 @@ def _eqconv_table(spark: SparkSession, sf_dir: str) -> str:
         partition_spec=spec, now_ms=3_000,
     )
     convert_equality_deletes(spark, tdir, now_ms=4_000)
-    session_cache_put(_EQCONV_CACHE, key, tdir)
     return tdir
 
 
@@ -606,9 +585,7 @@ def iceberg_eqconv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MIRROR_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _mirrored_table(spark: SparkSession, sf_dir: str) -> str:
     """Replication fixture: a source table (keys = distinct
     event_id % 400, v=id*3, bucket[4](id)) takes two merge batches —
@@ -628,10 +605,6 @@ def _mirrored_table(spark: SparkSession, sf_dir: str) -> str:
         mirror_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _MIRROR_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = (
         load_table(spark, sf_dir, "events")
         .select((F.col("event_id") % 400).alias("id"))
@@ -681,7 +654,6 @@ def _mirrored_table(spark: SparkSession, sf_dir: str) -> str:
         partition_spec=[("grp", "identity", None)],
     )
     q.awaitTermination()
-    session_cache_put(_MIRROR_CACHE, key, dst)
     return dst
 
 
@@ -744,9 +716,7 @@ def streaming_table_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REGISTRY_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _corpus_registry_table(spark: SparkSession, sf_dir: str) -> str:
     """The training-corpus REGISTRY maintained by CDC — the curation
     use of the merge plane: a content-addressed index (doc_id,
@@ -768,10 +738,6 @@ def _corpus_registry_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _REGISTRY_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -809,7 +775,6 @@ def _corpus_registry_table(spark: SparkSession, sf_dir: str) -> str:
         spark, revised.unionAll(takedowns).unionAll(arrivals), tdir,
         on=["doc_id"], op_col="op", partition_spec=spec, now_ms=2_000,
     )
-    session_cache_put(_REGISTRY_CACHE, key, tdir)
     return tdir
 
 
@@ -863,9 +828,7 @@ def cdc_corpus_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MERGE_EVO_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _merge_evolved_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Base table (id, grp, cnt INT = id % 1000) bucket[8] by id, then
     ONE schema-DRIFTED merge batch (r11 evolution plane,
@@ -885,10 +848,6 @@ def _merge_evolved_table(spark: SparkSession, sf_dir: str) -> tuple:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _MERGE_EVO_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("id")
     )
@@ -923,9 +882,7 @@ def _merge_evolved_table(spark: SparkSession, sf_dir: str) -> tuple:
         spark, deletes.unionAll(updates), tdir, on=["id"], op_col="op",
         partition_spec=spec, now_ms=2_000,
     )
-    out = (tdir, meta)
-    session_cache_put(_MERGE_EVO_CACHE, key, out)
-    return out
+    return tdir, meta
 
 
 @query(
@@ -996,9 +953,7 @@ def iceberg_merge_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DDL_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _ddl_lifecycle_table(spark: SparkSession, sf_dir: str) -> tuple:
     """The explicit-DDL lifecycle (r11, `commit.update_table_schema`):
     base table (id, grp, val, aux INT) bucket[8] by id; a CDC merge
@@ -1016,10 +971,6 @@ def _ddl_lifecycle_table(spark: SparkSession, sf_dir: str) -> tuple:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _DDL_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("id")
     )
@@ -1067,9 +1018,7 @@ def _ddl_lifecycle_table(spark: SparkSession, sf_dir: str) -> tuple:
     meta = write_iceberg_table(
         spark, inserts, tdir, now_ms=5_000, partition_spec=spec
     )
-    out = (tdir, meta, merge_snap)
-    session_cache_put(_DDL_CACHE, key, out)
-    return out
+    return tdir, meta, merge_snap
 
 
 @query(
@@ -1147,9 +1096,7 @@ def iceberg_schema_ddl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UPDATE_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _updated_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Base table (id, grp, v=id*3) bucket[8] by id, then ONE
     ``update_where`` (r11, `sources/iceberg/update.py`):
@@ -1161,10 +1108,6 @@ def _updated_table(spark: SparkSession, sf_dir: str) -> tuple:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _UPDATE_CACHE.get(key)
-    if cached is not None:
-        return cached
     base = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("id"),
         (F.col("event_id") % 10).cast("bigint").alias("grp"),
@@ -1176,9 +1119,7 @@ def _updated_table(spark: SparkSession, sf_dir: str) -> tuple:
     meta = update_where(
         spark, tdir, "id % 9 = 4", {"v": "v + id + 1000000"}, now_ms=2_000
     )
-    out = (tdir, meta)
-    session_cache_put(_UPDATE_CACHE, key, out)
-    return out
+    return tdir, meta
 
 
 @query(
@@ -1243,9 +1184,7 @@ def iceberg_update_where_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLBACK_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _rollback_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Base table from events (id, grp, v=id*3), a BAD batch (every id
     shifted into a disjoint range with poisoned values), then
@@ -1258,10 +1197,6 @@ def _rollback_table(spark: SparkSession, sf_dir: str) -> tuple:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _ROLLBACK_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("id")
     )
@@ -1291,9 +1226,7 @@ def _rollback_table(spark: SparkSession, sf_dir: str) -> tuple:
     meta = write_iceberg_table(
         spark, fixed, tdir, now_ms=4_000, partition_spec=spec
     )
-    out = (tdir, meta, base_snap)
-    session_cache_put(_ROLLBACK_CACHE, key, out)
-    return out
+    return tdir, meta, base_snap
 
 
 @query(
@@ -1355,9 +1288,7 @@ def iceberg_rollback_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REPLACE_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _replaced_table(spark: SparkSession, sf_dir: str) -> tuple:
     """events -> a grp-identity-partitioned table (grp=id%10, v=id*3),
     then ONE ``replace_partitions`` (r11) batch that touches cells
@@ -1369,10 +1300,6 @@ def _replaced_table(spark: SparkSession, sf_dir: str) -> tuple:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _REPLACE_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("id")
     )
@@ -1397,9 +1324,7 @@ def _replaced_table(spark: SparkSession, sf_dir: str) -> tuple:
     meta = replace_partitions(
         spark, into3.unionAll(into7), tdir, now_ms=2_000
     )
-    out = (tdir, meta)
-    session_cache_put(_REPLACE_CACHE, key, out)
-    return out
+    return tdir, meta
 
 
 @query(
@@ -1456,9 +1381,7 @@ def iceberg_replace_partitions_scan(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_RENAME_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _renamed_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Base table (id, grp, val=id*3) bucket[8] by id, then a RENAME
     lifecycle (r12, `commit.update_table_schema(rename=...)`):
@@ -1472,10 +1395,6 @@ def _renamed_table(spark: SparkSession, sf_dir: str) -> tuple:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _RENAME_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("id")
     )
@@ -1500,9 +1419,7 @@ def _renamed_table(spark: SparkSession, sf_dir: str) -> tuple:
         spark, inserts, tdir, now_ms=3_000, partition_spec=spec
     )
     meta = update_table_schema(tdir, rename={"amount": "amt"}, now_ms=4_000)
-    out = (tdir, meta, base_snap)
-    session_cache_put(_RENAME_CACHE, key, out)
-    return out
+    return tdir, meta, base_snap
 
 
 @query(
@@ -1607,9 +1524,7 @@ def iceberg_rename_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NESTED_RENAME_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _nested_renamed_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Base table (id, grp, env struct<src:string, v:bigint>) with
     v=id*3, then a NESTED rename lifecycle (r13,
@@ -1625,10 +1540,6 @@ def _nested_renamed_table(spark: SparkSession, sf_dir: str) -> tuple:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _NESTED_RENAME_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = load_table(spark, sf_dir, "events").select(
         F.col("event_id").alias("id")
     )
@@ -1657,9 +1568,7 @@ def _nested_renamed_table(spark: SparkSession, sf_dir: str) -> tuple:
         rename={"env": "envelope", "env.amount": "amt"},
         now_ms=4_000,
     )
-    out = (tdir, meta)
-    session_cache_put(_NESTED_RENAME_CACHE, key, out)
-    return out
+    return tdir, meta
 
 
 @query(
@@ -1793,9 +1702,7 @@ def iceberg_nested_rename_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_POST_UPDATE_MIRROR_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _post_update_mirrored(spark: SparkSession, sf_dir: str) -> tuple:
     """Replication ACROSS a row-level UPDATE (r12): source (keys =
     distinct event_id % 400, v=id*3, bucket[4](id)) takes a merge
@@ -1818,10 +1725,6 @@ def _post_update_mirrored(spark: SparkSession, sf_dir: str) -> tuple:
         mirror_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _POST_UPDATE_MIRROR_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = (
         load_table(spark, sf_dir, "events")
         .select((F.col("event_id") % 400).alias("id"))
@@ -1872,9 +1775,7 @@ def _post_update_mirrored(spark: SparkSession, sf_dir: str) -> tuple:
         # convergence came from crossing the window, not re-bootstrap
         and n_dst_after == n_dst_before + 1
     ) else 0
-    out = (dst, pin)
-    session_cache_put(_POST_UPDATE_MIRROR_CACHE, key, out)
-    return out
+    return dst, pin
 
 
 @query(
@@ -1927,9 +1828,7 @@ def iceberg_post_update_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DV_MIRROR_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _dv_retraction_mirrored(spark: SparkSession, sf_dir: str) -> tuple:
     """Replication ACROSS deletion-vector deletes (r13), including a
     SUPERSEDING one: source (keys = distinct event_id % 400, v=id*3,
@@ -1961,10 +1860,6 @@ def _dv_retraction_mirrored(spark: SparkSession, sf_dir: str) -> tuple:
         mirror_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _DV_MIRROR_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = (
         load_table(spark, sf_dir, "events")
         .select((F.col("event_id") % 400).alias("id"))
@@ -2019,9 +1914,7 @@ def _dv_retraction_mirrored(spark: SparkSession, sf_dir: str) -> tuple:
         # convergence came from crossing the window, not re-bootstrap
         and n_dst_after == n_dst_before + 1
     ) else 0
-    out = (dst, pin)
-    session_cache_put(_DV_MIRROR_CACHE, key, out)
-    return out
+    return dst, pin
 
 
 @query(
@@ -2076,9 +1969,7 @@ def iceberg_dv_retraction_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REF_RETENTION_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _ref_retention_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Per-ref retention fixture (r12): three appends (A, B, C=head);
     tag ``old-release`` on A with a max-ref-age that LAPSES, untimed
@@ -2096,10 +1987,6 @@ def _ref_retention_table(spark: SparkSession, sf_dir: str) -> tuple:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _REF_RETENTION_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = (
         load_table(spark, sf_dir, "events")
         .select((F.col("event_id") % 400).alias("id"))
@@ -2161,9 +2048,7 @@ def _ref_retention_table(spark: SparkSession, sf_dir: str) -> tuple:
         and snap_c in live
         and refs.get("audit", {}).get("min-snapshots-to-keep") == 2
     ) else 0
-    out = (tdir, pin)
-    session_cache_put(_REF_RETENTION_CACHE, key, out)
-    return out
+    return tdir, pin
 
 
 @query(
@@ -2216,11 +2101,11 @@ def iceberg_ref_retention_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NDV_CACHE: dict[tuple, tuple] = {}
 _NDV_K = 256
 _NDV_SPACE = 1 << 40
 
 
+@session_fixture
 def _ndv_stats_table(spark: SparkSession, sf_dir: str) -> tuple:
     """Statistics fixture (r12): table (id = distinct event_id,
     grp = id % 23), `compute_ndv_stats` on both columns with K=256 —
@@ -2238,10 +2123,6 @@ def _ndv_stats_table(spark: SparkSession, sf_dir: str) -> tuple:
         read_puffin_blobs,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _NDV_CACHE.get(key)
-    if cached is not None:
-        return cached
     ids = (
         load_table(spark, sf_dir, "events")
         .select(F.col("event_id").alias("id"))
@@ -2290,12 +2171,10 @@ def _ndv_stats_table(spark: SparkSession, sf_dir: str) -> tuple:
         # the commit path's file-list blob survived the re-pack
         and any(b["type"].endswith("file-list") for b in blobs)
     ) else 0
-    out = (
+    return (
         {c: int(b["properties"]["ndv"]) for c, b in ndv_blobs.items()},
         pin,
     )
-    session_cache_put(_NDV_CACHE, key, out)
-    return out
 
 
 def _ndv_oracle() -> str:

@@ -27,17 +27,13 @@ from tiered_storage_for_apache_kafka_spark.sources.local_df import (
 )
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 from tiered_storage_for_apache_kafka_spark.tables import load_table
 
 MICROS_PER_DAY = 86_400_000_000
 N_DAYS = 32  # fixture folds event_ids onto 32 distinct days at every sf
 N_BUCKETS = 4
-
-_DAY_CACHE: dict[tuple, str] = {}
-_BUCKET_CACHE: dict[tuple, str] = {}
 
 
 def _parallel_probe_rows(fn, items, max_workers: int = 8) -> list:
@@ -57,6 +53,7 @@ def _parallel_probe_rows(fn, items, max_workers: int = 8) -> list:
         return list(pool.map(fn, items))
 
 
+@session_fixture
 def _day_table(spark: SparkSession, sf_dir: str) -> str:
     """events -> a day(ts_us)-partitioned Iceberg table: synthetic
     timestamps put event_id on day ``event_id % N_DAYS`` (deterministic at
@@ -66,10 +63,6 @@ def _day_table(spark: SparkSession, sf_dir: str) -> str:
         transform_column,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _DAY_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = (
         load_table(spark, sf_dir, "events")
         .select(
@@ -93,7 +86,6 @@ def _day_table(spark: SparkSession, sf_dir: str) -> str:
         tdir, schema, partition_col="ts_day", now_ms=1_000,
         partition_transform="day", partition_source="ts_us",
     )
-    session_cache_put(_DAY_CACHE, key, tdir)
     return tdir
 
 
@@ -149,10 +141,7 @@ def iceberg_day_partition_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MULTI_CACHE: dict[tuple, str] = {}
-_EVO_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _multifield_table(spark: SparkSession, sf_dir: str) -> str:
     """events -> a ``(day(ts_us), bucket[4](event_id))`` Iceberg table —
     the canonical production composite spec: synthetic timestamps put
@@ -163,10 +152,6 @@ def _multifield_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _MULTI_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = (
         load_table(spark, sf_dir, "events")
         .select(
@@ -186,7 +171,6 @@ def _multifield_table(spark: SparkSession, sf_dir: str) -> str:
             ("id_bucket", f"bucket[{N_BUCKETS}]", "event_id"),
         ],
     )
-    session_cache_put(_MULTI_CACHE, key, tdir)
     return tdir
 
 
@@ -269,9 +253,7 @@ def iceberg_multifield_partition_scan(
     )
 
 
-_GLOBAL_DEL_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _global_delete_table(spark: SparkSession, sf_dir: str) -> str:
     """The composite (day, bucket) layout plus a GLOBAL equality
     delete: one unpartitioned-scope delete file kills event_ids
@@ -283,10 +265,6 @@ def _global_delete_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _GLOBAL_DEL_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = (
         load_table(spark, sf_dir, "events")
         .select(
@@ -309,7 +287,6 @@ def _global_delete_table(spark: SparkSession, sf_dir: str) -> str:
     commit_equality_deletes(
         spark, tdir, keys, ["event_id"], now_ms=2_000, global_scope=True
     )
-    session_cache_put(_GLOBAL_DEL_CACHE, key, tdir)
     return tdir
 
 
@@ -387,9 +364,7 @@ def iceberg_global_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STRBOUNDS_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _string_banded_table(spark: SparkSession, sf_dir: str) -> str:
     """documents written as ONE sorted task sliced into consecutive
     files (the sorted-compaction layout): each parquet file covers a
@@ -400,10 +375,6 @@ def _string_banded_table(spark: SparkSession, sf_dir: str) -> str:
         commit_append,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _STRBOUNDS_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = (
         load_table(spark, sf_dir, "documents")
         .select(
@@ -426,7 +397,6 @@ def _string_banded_table(spark: SparkSession, sf_dir: str) -> str:
         .parquet(tdir, mode="append")
     )
     commit_append(tdir, df.schema, now_ms=1_000)
-    session_cache_put(_STRBOUNDS_CACHE, key, tdir)
     return tdir
 
 
@@ -482,6 +452,7 @@ def iceberg_string_bounds_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rows
 
 
+@session_fixture
 def _evolved_table(spark: SparkSession, sf_dir: str) -> str:
     """A table that LIVED THROUGH partition evolution: generation 1
     (even 32-blocks of event_id) committed under ``day(ts_us)`` alone, then
@@ -495,10 +466,6 @@ def _evolved_table(spark: SparkSession, sf_dir: str) -> str:
         update_partition_spec,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _EVO_CACHE.get(key)
-    if cached is not None:
-        return cached
     base = (
         load_table(spark, sf_dir, "events")
         .select(
@@ -551,7 +518,6 @@ def _evolved_table(spark: SparkSession, sf_dir: str) -> str:
             ("id_bucket", f"bucket[{N_BUCKETS}]", "event_id"),
         ],
     )
-    session_cache_put(_EVO_CACHE, key, tdir)
     return tdir
 
 
@@ -623,9 +589,7 @@ def iceberg_spec_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STR_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _string_partition_table(spark: SparkSession, sf_dir: str) -> str:
     """documents -> an Iceberg table partitioned by
     ``(identity(lang), truncate[4](source))`` — STRING partition
@@ -637,10 +601,6 @@ def _string_partition_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _STR_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
@@ -652,7 +612,6 @@ def _string_partition_table(spark: SparkSession, sf_dir: str) -> str:
             ("src4", "truncate[4]", "source"),
         ],
     )
-    session_cache_put(_STR_CACHE, key, tdir)
     return tdir
 
 
@@ -738,6 +697,7 @@ def iceberg_string_partition_scan(
     )
 
 
+@session_fixture
 def _bucket_table(spark: SparkSession, sf_dir: str) -> str:
     """events -> a bucket[4](event_id)-partitioned Iceberg table, the
     partition column computed by the vectorized spec Murmur3."""
@@ -746,10 +706,6 @@ def _bucket_table(spark: SparkSession, sf_dir: str) -> str:
         transform_column,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _BUCKET_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     df = transform_column(df, "event_id", f"bucket[{N_BUCKETS}]", "id_bucket")
     tdir = tempfile.mkdtemp(prefix="iceberg-bucket-")
@@ -764,7 +720,6 @@ def _bucket_table(spark: SparkSession, sf_dir: str) -> str:
         partition_transform=f"bucket[{N_BUCKETS}]",
         partition_source="event_id",
     )
-    session_cache_put(_BUCKET_CACHE, key, tdir)
     return tdir
 
 
@@ -814,9 +769,7 @@ def iceberg_bucket_partition_scan(
     )
 
 
-_SHARD_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _sharded_writer_table(spark: SparkSession, sf_dir: str) -> str:
     """events -> a day(ts_us)-partitioned table written through
     :func:`write_iceberg_table` with ``writer_shards=4`` over a SKEWED
@@ -828,10 +781,6 @@ def _sharded_writer_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _SHARD_CACHE.get(key)
-    if cached is not None:
-        return cached
     day = F.when(F.col("event_id") % 10 < 9, 0).otherwise(
         1 + F.col("event_id") % 3
     )
@@ -846,7 +795,6 @@ def _sharded_writer_table(spark: SparkSession, sf_dir: str) -> str:
         partition_spec=[("ts_day", "day", "ts_us")],
         writer_shards=4,
     )
-    session_cache_put(_SHARD_CACHE, key, tdir)
     return tdir
 
 
@@ -924,9 +872,7 @@ def iceberg_sharded_writer_scan(
     )
 
 
-_GLOBDEL_EVO_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _global_delete_evolution_table(spark: SparkSession, sf_dir: str) -> str:
     """documents split across a partition-spec EVOLUTION with GLOBAL
     equality deletes on both sides (r9): generation 1 (even doc_ids)
@@ -943,10 +889,6 @@ def _global_delete_evolution_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _GLOBDEL_EVO_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
@@ -975,7 +917,6 @@ def _global_delete_evolution_table(spark: SparkSession, sf_dir: str) -> str:
     commit_equality_deletes(
         spark, tdir, keys2, ["doc_id"], now_ms=5_000, global_scope=True
     )
-    session_cache_put(_GLOBDEL_EVO_CACHE, key, tdir)
     return tdir
 
 
@@ -1032,9 +973,7 @@ def iceberg_global_delete_evolution_scan(
     )
 
 
-_SORTED_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _sorted_writer_table(spark: SparkSession, sf_dir: str) -> str:
     """events -> a day-partitioned table written with
     ``sort_by=["event_id"]`` and a per-task file cap, so each day
@@ -1045,10 +984,6 @@ def _sorted_writer_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _SORTED_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_table(spark, sf_dir, "events").select(
         F.col("event_id"),
         (
@@ -1068,7 +1003,6 @@ def _sorted_writer_table(spark: SparkSession, sf_dir: str) -> str:
         partition_spec=[("ts_day", "day", "ts_us")],
         sort_by=["event_id"], max_records_per_file=mrpf,
     )
-    session_cache_put(_SORTED_CACHE, key, tdir)
     return tdir
 
 
@@ -1128,9 +1062,7 @@ def iceberg_sorted_write_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZORDER_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _zorder_table(spark: SparkSession, sf_dir: str) -> str:
     """events -> two derived dimensions (x = event_id % 64,
     y = floor(event_id / 64) % 64), compacted with
@@ -1142,10 +1074,6 @@ def _zorder_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _ZORDER_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_table(spark, sf_dir, "events").select(
         F.col("event_id"),
         (F.col("event_id") % 64).alias("x"),
@@ -1159,7 +1087,6 @@ def _zorder_table(spark: SparkSession, sf_dir: str) -> str:
         spark, tdir, now_ms=2_000,
         zorder_by=["x", "y"], max_records_per_file=mrpf,
     )
-    session_cache_put(_ZORDER_CACHE, key, tdir)
     return tdir
 
 
@@ -1221,9 +1148,7 @@ def iceberg_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RPD_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _pos_delete_churn_table(spark: SparkSession, sf_dir: str) -> str:
     """events -> a day(ts_us) table that takes THREE separate
     position-delete commits (the CDC churn shape: every micro-batch
@@ -1236,10 +1161,6 @@ def _pos_delete_churn_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _RPD_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_table(spark, sf_dir, "events").select(
         F.col("event_id"),
         (
@@ -1256,13 +1177,10 @@ def _pos_delete_churn_table(spark: SparkSession, sf_dir: str) -> str:
     commit_position_deletes(spark, tdir, "event_id % 89 = 0", now_ms=3_000)
     commit_position_deletes(spark, tdir, "event_id % 83 = 0", now_ms=4_000)
     rewrite_position_deletes(spark, tdir, now_ms=5_000)
-    session_cache_put(_RPD_CACHE, key, tdir)
     return tdir
 
 
-_NULL_CELL_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _null_cell_table(spark: SparkSession, sf_dir: str) -> str:
     """events -> an identity-partitioned table with a NULL partition
     cell (cat NULL for event_id % 5 = 0), plus both delete planes
@@ -1275,10 +1193,6 @@ def _null_cell_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _NULL_CELL_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_table(spark, sf_dir, "events").select(
         F.col("event_id"),
         F.when(F.col("event_id") % 5 == 0, F.lit(None).cast("string"))
@@ -1302,7 +1216,6 @@ def _null_cell_table(spark: SparkSession, sf_dir: str) -> str:
         spark, tdir, keys, ["event_id"], now_ms=3_000,
         allow_null_partition=True,
     )
-    session_cache_put(_NULL_CELL_CACHE, key, tdir)
     return tdir
 
 
@@ -1360,9 +1273,7 @@ def iceberg_null_partition_scan(
     )
 
 
-_ZORDER_TEMPORAL_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _zorder_temporal_table(spark: SparkSession, sf_dir: str) -> str:
     """events -> a DATE dimension (epoch + event_id % 64 days) and an
     int dimension (floor(event_id / 64) % 64), z-order-rewritten — the
@@ -1374,10 +1285,6 @@ def _zorder_temporal_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _ZORDER_TEMPORAL_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_table(spark, sf_dir, "events").select(
         F.col("event_id"),
         F.date_add(
@@ -1394,7 +1301,6 @@ def _zorder_temporal_table(spark: SparkSession, sf_dir: str) -> str:
         spark, tdir, now_ms=2_000,
         zorder_by=["d", "y"], max_records_per_file=mrpf,
     )
-    session_cache_put(_ZORDER_TEMPORAL_CACHE, key, tdir)
     return tdir
 
 
@@ -1457,9 +1363,7 @@ def iceberg_zorder_temporal_scan(
     )
 
 
-_TS_WINDOW_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _timestamp_banded_table(spark: SparkSession, sf_dir: str) -> str:
     """events -> a TIMESTAMP column (hourly from event_id), written
     SORTED by it with a record cap — time-banded files whose exact
@@ -1469,10 +1373,6 @@ def _timestamp_banded_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _TS_WINDOW_CACHE.get(key)
-    if cached is not None:
-        return cached
     df = load_table(spark, sf_dir, "events").select(
         F.col("event_id"),
         F.timestamp_micros(
@@ -1486,7 +1386,6 @@ def _timestamp_banded_table(spark: SparkSession, sf_dir: str) -> str:
         spark, df, tdir, now_ms=1_000,
         sort_by=["ts"], max_records_per_file=mrpf,
     )
-    session_cache_put(_TS_WINDOW_CACHE, key, tdir)
     return tdir
 
 
@@ -1539,9 +1438,7 @@ def iceberg_timestamp_window_scan(
     )
 
 
-_RPD_EVO_CACHE: dict[tuple, str] = {}
-
-
+@session_fixture
 def _rpd_evolution_table(spark: SparkSession, sf_dir: str) -> str:
     """events split across a partition-spec evolution with delete churn
     in BOTH generations (r10): even event_ids write under day(ts_us)
@@ -1558,10 +1455,6 @@ def _rpd_evolution_table(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_table,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _RPD_EVO_CACHE.get(key)
-    if cached is not None:
-        return cached
     base = load_table(spark, sf_dir, "events").select(
         F.col("event_id"),
         (
@@ -1596,7 +1489,6 @@ def _rpd_evolution_table(spark: SparkSession, sf_dir: str) -> str:
         spark, tdir, "event_id % 2 = 1 AND event_id % 15 = 0", now_ms=7_000
     )
     rewrite_position_deletes(spark, tdir, now_ms=8_000)
-    session_cache_put(_RPD_EVO_CACHE, key, tdir)
     return tdir
 
 

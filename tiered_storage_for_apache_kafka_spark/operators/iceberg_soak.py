@@ -47,9 +47,8 @@ from tiered_storage_for_apache_kafka_spark.sources.local_df import (
 )
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 from tiered_storage_for_apache_kafka_spark.tables import load_table
 
 N_BATCHES = 8
@@ -62,8 +61,6 @@ N_BATCHES = 8
 DV1_PRED = "offset % 5 = 2"
 DV2_PRED = "offset % 7 = 3"
 FINAL_PRED = "offset % 5 = 2 OR offset % 7 = 3"
-
-_SOAK_CACHE: dict[tuple, tuple] = {}
 
 #: Bump when the gauntlet schedule / predicates / batch layout change:
 #: the version is part of the persisted-fixture path, so a stale
@@ -124,6 +121,7 @@ def _consume(spark, tdir: str, ckpt: int, counts: dict) -> tuple[int, int]:
     return head, len(windows)
 
 
+@session_fixture
 def _run_gauntlet(spark: SparkSession, sf_dir: str) -> tuple:
     """Build the soak table and run the full composed schedule once per
     (session, sf). Returns (table_dir, maintained counts, counters)."""
@@ -140,11 +138,6 @@ def _run_gauntlet(spark: SparkSession, sf_dir: str) -> tuple:
         rewrite_manifests,
     )
 
-    key = session_cache_key(spark, sf_dir)
-    cached = _SOAK_CACHE.get(key)
-    if cached is not None:
-        return cached
-
     # cross-session persistence (r7 verdict ask #4): the gauntlet's
     # ~12 s first-run build was the suite's largest single fixture
     # cell. The schedule is deterministic in (sf_dir, fixture version),
@@ -160,11 +153,9 @@ def _run_gauntlet(spark: SparkSession, sf_dir: str) -> tuple:
     if os.path.exists(marker):
         with open(marker) as f:
             saved = _json.load(f)
-        result = (
+        return (
             os.path.join(root, "table"), saved["counts"], saved["counters"]
         )
-        session_cache_put(_SOAK_CACHE, key, result)
-        return result
     persist = False
     try:
         os.mkdir(root)  # atomic claim
@@ -290,7 +281,6 @@ def _run_gauntlet(spark: SparkSession, sf_dir: str) -> tuple:
         with open(tmp_marker, "w") as f:
             _json.dump({"counts": result[1], "counters": result[2]}, f)
         os.replace(tmp_marker, marker)
-    session_cache_put(_SOAK_CACHE, key, result)
     return result
 
 

@@ -102,14 +102,17 @@ def lineage_cut(df: DataFrame) -> DataFrame:
       - ``checkpoint``: reliable checkpoint to
         ``spark.sparkContext.setCheckpointDir``'s location — plan
         truncation AND durability, at the cost of writing the
-        partitions to the checkpoint filesystem. Falls back to an
-        automatic temp dir when no checkpoint dir is set.
+        partitions to the checkpoint filesystem. With no checkpoint
+        dir set, a ``local`` master falls back to an automatic temp
+        dir; any other master raises ``ValueError``, because a temp
+        dir on the driver is not reachable from remote executors.
 
     Same session-lifetime semantics in all modes: storage lives and
     dies with the SparkSession, nothing persists across processes/runs.
-    The build happens eagerly here (one job) rather than lazily on
-    first action — for these caches the first consumer always
-    materialized them anyway.
+    Every mode materializes EAGERLY here (one job) rather than lazily
+    on first action, so a ``session.session_fixture`` builder runs its
+    upstream — and any side effects in it — exactly once, under the
+    fixture's lock, however many consumers act on the result.
     """
     import os
     import tempfile
@@ -118,10 +121,18 @@ def lineage_cut(df: DataFrame) -> DataFrame:
     if mode == "persist":
         from pyspark import StorageLevel
 
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        df.count()  # fills every partition's block, as the checkpoints do
+        return df
     if mode == "checkpoint":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
+            if not (sc.master == "local" or sc.master.startswith("local[")):
+                raise ValueError(
+                    "SPARK_GRAFT_SHARED_CACHE_MODE=checkpoint on master "
+                    f"{sc.master!r} needs a checkpoint dir every executor "
+                    "can reach: call spark.sparkContext.setCheckpointDir first"
+                )
             sc.setCheckpointDir(
                 tempfile.mkdtemp(prefix="spark-graft-checkpoint-")
             )
@@ -132,60 +143,3 @@ def lineage_cut(df: DataFrame) -> DataFrame:
             f"localCheckpoint|persist|checkpoint, got {mode!r}"
         )
     return df.localCheckpoint()
-
-
-def session_cache_key(spark, sf_dir: str) -> tuple[str, str]:
-    """Key for module-level DataFrame caches: a cached DataFrame's
-    lineage is bound to the session that built it, so a same-process
-    session restart must never serve a stale entry (it would reference a
-    dead JVM context). applicationId is unique per SparkContext."""
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
-def session_cache_put(cache: dict, key: tuple, value) -> None:
-    """Insert into a session-keyed module cache, evicting every entry
-    belonging to a different (dead) session first: a same-process
-    SparkSession restart must not pin cached DataFrames — and their
-    plan/py4j handles — of a dead JVM context forever. Keys are the
-    :func:`session_cache_key` tuples, so ``key[0]`` is the session."""
-    for stale in [k for k in cache if k[0] != key[0]]:
-        del cache[stale]
-    cache[key] = value
-
-
-#: Queries whose construction populates the cross-query session caches
-# (tokens_cached, the tiered store, the minhash signature matrix, the
-# trained models): run these SEQUENTIALLY first so the thread-pool pass
-# below never races two builders of the same shared cache.
-CACHE_WARMUP = [
-    "dedup_exact",  # tokens_cached
-    "tiered_roundtrip_agg",  # _tier + _records
-    "minhash_signatures",  # _WIDE_SIG_CACHE
-    "dedup_minhash_lsh",  # _PAIRS_CACHE (the verified LSH pair set)
-    "dedup_connected_components",  # _CC_CACHE (labels over the pairs)
-    "pagerank_dup_graph",  # _EDGES_CACHE (graph edges over the pairs)
-    "kmeans_embedding_clusters",
-    "ann_ivf_topk",  # _IVF_AFF_CACHE (coarse-quantizer cell assignment,
-    # shared with semdedup_keep_drop)
-    "bm25_topk_docs",  # _BM25_CACHE (scored postings frame, shared with
-    # hybrid_rrf_retrieval)
-    "benchmark_decontamination",  # _GRAMS5_CACHE (word-5-gram inventory,
-    # shared with incremental_dedup_verdicts)
-    "quality_classifier_trained",
-    "iceberg_metadata_summary",
-    "iceberg_rest_commit",  # _ICEBERG_REST_CACHE (REST-committed twin)
-    "iceberg_row_delete_scan",  # _ICEBERG_DEL_CACHE (row-delta twin)
-    "iceberg_upsert_scan",  # _ICEBERG_UPSERT_CACHE (upsert twin) +
-    # _UPSERT_HEAD/_BEFORE_CACHE (shared per-key count frames)
-    "iceberg_changelog_scan",  # _UPSERT_CHANGELOG_CACHE (typed changelog,
-    # shared with changelog_materialized_counts)
-    "iceberg_tag_read",  # _ICEBERG_TAG_CACHE (tagged twin)
-    "iceberg_bounds_pruned_scan",  # _ICEBERG_BANDS_CACHE (banded twin,
-    # shared with iceberg_incremental_scan + streaming_iceberg_incremental)
-    "streaming_iceberg_incremental",  # _ICEBERG_STREAM_READ_CACHE (sink dir)
-    "iceberg_dv_scan",  # _ICEBERG_DV_CACHE (deletion-vector twin)
-    "iceberg_rewrite_datafiles",  # _ICEBERG_RWDF_CACHE (compacted twin)
-    "tiered_read_committed",  # _TXN_CACHE (transactional tiered store,
-    # shared with txn_aborted_index_scan, leader_epoch_checkpoint_scan,
-    # and producer_state_snapshot_scan)
-]

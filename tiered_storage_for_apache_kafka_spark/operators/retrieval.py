@@ -22,9 +22,8 @@ from tiered_storage_for_apache_kafka_spark.operators.dedup import tokens_cached
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     lineage_cut,
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 from tiered_storage_for_apache_kafka_spark.operators.similarity import _DOT
 from tiered_storage_for_apache_kafka_spark.tables import load_table
 
@@ -50,9 +49,7 @@ def _score_sql(n: str, df: str, tf: str, dl: str, tot: str) -> str:
     return _SCORE.format(n=n, df=df, tf=tf, dl=dl, tot=tot, k1=K1, k1p1=K1 + 1, b1=B1, b=B)
 
 
-_BM25_CACHE: dict[tuple, DataFrame] = {}
-
-
+@session_fixture
 def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_matched_terms, score) for every doc matching ≥1 query
     term — postings pruned to the query's terms before any shuffle,
@@ -60,12 +57,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     RRF fusion, so the scored frame (a few hundred matching docs) is
     materialized once per (session, corpus) with its lineage cut — the
     two consumers each re-ran the whole postings pipeline otherwise."""
-    key = session_cache_key(spark, sf_dir)
-    cached = _BM25_CACHE.get(key)
-    if cached is None:
-        cached = lineage_cut(_bm25_scored_plan(spark, sf_dir))
-        session_cache_put(_BM25_CACHE, key, cached)
-    return cached
+    return lineage_cut(_bm25_scored_plan(spark, sf_dir))
 
 
 def _bm25_scored_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,9 +26,8 @@ from pyspark.sql import functions as F
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     lineage_cut,
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 from tiered_storage_for_apache_kafka_spark.tables import load_table
 
 N_QUERIES = 8
@@ -275,9 +274,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_CENTROIDS = 16
 N_PROBE = 2
 
-_IVF_AFF_CACHE: dict[tuple, DataFrame] = {}
 
-
+@session_fixture
 def _ivf_affinity_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cid, crnk) rows with crnk <= N_PROBE: each vector's
     N_PROBE nearest of the first-N_CENTROIDS coarse quantizer, ranked by
@@ -288,40 +286,35 @@ def _ivf_affinity_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage_cut discipline as the token/shingle caches. The window runs
     over |corpus| x N_CENTROIDS *narrow* rows (ids + one double; the
     embedding payload never enters the exchange)."""
-    key = session_cache_key(spark, sf_dir)
-    cached = _IVF_AFF_CACHE.get(key)
-    if cached is None:
-        vecs = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").alias("emb")
+    vecs = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").alias("emb")
+    )
+    norm = F.sqrt(F.expr(_DOT.format(a="emb", b="emb")))
+    vn = vecs.withColumn("v_norm", norm)
+    cent = (
+        vn.filter(F.col("vec_id") < N_CENTROIDS)
+        .select(
+            F.col("vec_id").alias("cid"),
+            F.col("emb").alias("c_emb"),
+            F.col("v_norm").alias("c_norm"),
         )
-        norm = F.sqrt(F.expr(_DOT.format(a="emb", b="emb")))
-        vn = vecs.withColumn("v_norm", norm)
-        cent = (
-            vn.filter(F.col("vec_id") < N_CENTROIDS)
-            .select(
-                F.col("vec_id").alias("cid"),
-                F.col("emb").alias("c_emb"),
-                F.col("v_norm").alias("c_norm"),
-            )
-        )
-        cos_vc = F.round(
-            F.expr(_DOT.format(a="emb", b="c_emb"))
-            / (F.col("v_norm") * F.col("c_norm")),
-            4,
-        )
-        w_aff = Window.partitionBy("vec_id").orderBy(
-            F.col("aff").desc(), F.col("cid").asc()
-        )
-        affinity = (
-            vn.crossJoin(F.broadcast(cent))
-            .select("vec_id", "cid", cos_vc.alias("aff"))
-            .withColumn("crnk", F.row_number().over(w_aff))
-            .filter(F.col("crnk") <= N_PROBE)
-            .select("vec_id", "cid", "crnk")
-        )
-        cached = lineage_cut(affinity)
-        session_cache_put(_IVF_AFF_CACHE, key, cached)
-    return cached
+    )
+    cos_vc = F.round(
+        F.expr(_DOT.format(a="emb", b="c_emb"))
+        / (F.col("v_norm") * F.col("c_norm")),
+        4,
+    )
+    w_aff = Window.partitionBy("vec_id").orderBy(
+        F.col("aff").desc(), F.col("cid").asc()
+    )
+    affinity = (
+        vn.crossJoin(F.broadcast(cent))
+        .select("vec_id", "cid", cos_vc.alias("aff"))
+        .withColumn("crnk", F.row_number().over(w_aff))
+        .filter(F.col("crnk") <= N_PROBE)
+        .select("vec_id", "cid", "crnk")
+    )
+    return lineage_cut(affinity)
 
 
 @query(

@@ -29,9 +29,8 @@ from tiered_storage_for_apache_kafka_spark.operators.registry import (
     minor_units,
     minor_units_sql,
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 from tiered_storage_for_apache_kafka_spark.sources.segment_source import (
     decode_events,
     manager_conf,
@@ -44,41 +43,26 @@ OFFSET_RANGE_LO = 100
 OFFSET_RANGE_HI = 599
 
 
-_TIER_CACHE: dict[tuple, tuple[DataFrame, dict]] = {}
-_REC_CACHE: dict[tuple, DataFrame] = {}
-
-
-# the one session-keying policy, shared with the dedup/graph caches
-_cache_key = session_cache_key
-
-
+@session_fixture
 def _tier(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     """Tier the events table once per (session, sf_dir); subsequent tiered
     queries are pure read-path measurements over the same store."""
-    cached = _TIER_CACHE.get(_cache_key(spark, sf_dir))
-    if cached is not None:
-        return cached
     events = load_table(spark, sf_dir, "events")
     root = tempfile.mkdtemp(prefix="tiered-segments-")
     conf = manager_conf(root, chunk_size=4096, compression=True)
     # lineage_cut materializes eagerly: uploads happen exactly once
     manifests = lineage_cut(tier_events_table(spark, events, conf))
-    session_cache_put(_TIER_CACHE, _cache_key(spark, sf_dir), (manifests, conf))
     return manifests, conf
 
 
+@session_fixture
 def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full decoded record set, fetched+detransformed once and cached —
     the executor-side analog of the reference's chunk cache (R9): every
     full-scan consumer shares one materialization instead of re-running
     ranged GETs + decode per query."""
-    cached = _REC_CACHE.get(_cache_key(spark, sf_dir))
-    if cached is not None:
-        return cached
     manifests, conf = _tier(spark, sf_dir)
-    rec = lineage_cut(read_tiered_records(spark, manifests, conf))
-    session_cache_put(_REC_CACHE, _cache_key(spark, sf_dir), rec)
-    return rec
+    return lineage_cut(read_tiered_records(spark, manifests, conf))
 
 
 @query(
@@ -524,9 +508,6 @@ def engine_metrics_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_TIER_CACHE: dict[tuple, DataFrame] = {}
-
-
 @query(
     "streaming_tier_commit",
     oracle="""
@@ -549,6 +530,7 @@ SELECT partition, start_offset, end_offset, n_records
 FROM seg
 """,
 )
+@session_fixture
 def streaming_tier_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING ingest lifecycle, end-to-end and driver-checked: the
     event stream is tiered through `foreachBatch` (each micro-batch runs
@@ -560,9 +542,6 @@ def streaming_tier_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the streaming commit path writes exactly the segments the
     batch path would. Parity: the reference's per-closed-segment upload
     (`RemoteLogManager` task loop) expressed as Structured Streaming."""
-    cached = _STREAM_TIER_CACHE.get(_cache_key(spark, sf_dir))
-    if cached is not None:
-        return cached
     from tiered_storage_for_apache_kafka_spark.streaming.ingest import (
         stream_tier_events,
     )
@@ -572,17 +551,13 @@ def streaming_tier_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest_dir = os.path.join(root, "manifests")
     checkpoint = os.path.join(root, "ckpt")
     stream_tier_events(spark, sf_dir, conf, manifest_dir, checkpoint)
-    out = lineage_cut(
+    return lineage_cut(
         spark.read.parquet(manifest_dir)
         .select("partition", "start_offset", "end_offset", "n_records")
     )
-    session_cache_put(_STREAM_TIER_CACHE, _cache_key(spark, sf_dir), out)
-    return out
 
 
-_ICEBERG_CACHE: dict[tuple, tuple] = {}  # (session, sf) -> (tdir, rows)
-
-
+@session_fixture
 def _iceberg_table(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     """Commit the envelope as an Iceberg table once per (session, sf);
     returns (table_dir, per-partition summary rows from the metadata)."""
@@ -595,10 +570,6 @@ def _iceberg_table(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
         write_table,
     )
 
-    key = _cache_key(spark, sf_dir)
-    cached = _ICEBERG_CACHE.get(key)
-    if cached is not None:
-        return cached
     env = records_to_envelope(_records(spark, sf_dir)).repartition(4, "partition")
     tdir = tempfile.mkdtemp(prefix="iceberg-table-")
     write_table(env, tdir)
@@ -620,7 +591,6 @@ def _iceberg_table(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
         (part, p["files"], p["records"], int(cur["sequence-number"]))
         for part, p in sorted(per_part.items())
     ]
-    session_cache_put(_ICEBERG_CACHE, key, (tdir, rows))
     return tdir, rows
 
 
@@ -706,9 +676,7 @@ def iceberg_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_REST_CACHE: dict[tuple, tuple] = {}
-
-
+@session_fixture
 def _iceberg_rest_table(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     """Commit the envelope as an Iceberg table THROUGH the REST-catalog
     protocol (two commits → two snapshots), once per (session, sf);
@@ -728,10 +696,6 @@ def _iceberg_rest_table(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
         write_table,
     )
 
-    key = _cache_key(spark, sf_dir)
-    cached = _ICEBERG_REST_CACHE.get(key)
-    if cached is not None:
-        return cached
     env = records_to_envelope(_records(spark, sf_dir)).repartition(4, "partition")
     tdir = tempfile.mkdtemp(prefix="iceberg-rest-")
     write_table(env, tdir)
@@ -764,7 +728,6 @@ def _iceberg_rest_table(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
         (part, p["files"], p["records"], n_snapshots)
         for part, p in sorted(per_part.items())
     ]
-    session_cache_put(_ICEBERG_REST_CACHE, key, (tdir, rows))
     return tdir, rows
 
 
@@ -859,7 +822,40 @@ def iceberg_puffin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_ICEBERG_CACHE: dict[tuple, str] = {}
+@session_fixture
+def _streaming_iceberg_table(spark: SparkSession, sf_dir: str):
+    """Stream the envelope into an Iceberg table once per (session, sf);
+    returns the table dir."""
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
+        read_table_metadata,
+    )
+    from tiered_storage_for_apache_kafka_spark.streaming.ingest import (
+        stream_envelope_to_iceberg,
+        stream_events,
+    )
+
+    tdir = tempfile.mkdtemp(prefix="stream-iceberg-")
+    ckpt = tempfile.mkdtemp(prefix="stream-iceberg-ck-")
+    envelope = stream_events(spark, sf_dir).select(
+        (F.col("event_id") % 4).cast("int").alias("partition"),
+        F.struct(
+            (F.col("event_id") % 4).cast("int").alias("partition"),
+            F.col("event_id").alias("offset"),
+            F.unix_micros("ts").alias("timestamp_us"),
+        ).alias("kafka"),
+        F.col("event_type").cast("binary").alias("key"),
+        F.to_json(F.struct("user_id", "value", "props")).cast("binary").alias(
+            "value"
+        ),
+    )
+    q = stream_envelope_to_iceberg(envelope, tdir, ckpt)
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError("streaming Iceberg commit did not finish in 300 s")
+    state = read_table_metadata(tdir)
+    if state is None or not state["metadata"]["snapshots"]:
+        raise RuntimeError("streaming Iceberg commit produced no snapshot")
+    return tdir
 
 
 @query(
@@ -892,36 +888,8 @@ def streaming_iceberg_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_iceberg_table,
         read_table_metadata,
     )
-    from tiered_storage_for_apache_kafka_spark.streaming.ingest import (
-        stream_envelope_to_iceberg,
-        stream_events,
-    )
 
-    key = _cache_key(spark, sf_dir)
-    tdir = _STREAM_ICEBERG_CACHE.get(key)
-    if tdir is None:
-        tdir = tempfile.mkdtemp(prefix="stream-iceberg-")
-        ckpt = tempfile.mkdtemp(prefix="stream-iceberg-ck-")
-        envelope = stream_events(spark, sf_dir).select(
-            (F.col("event_id") % 4).cast("int").alias("partition"),
-            F.struct(
-                (F.col("event_id") % 4).cast("int").alias("partition"),
-                F.col("event_id").alias("offset"),
-                F.unix_micros("ts").alias("timestamp_us"),
-            ).alias("kafka"),
-            F.col("event_type").cast("binary").alias("key"),
-            F.to_json(F.struct("user_id", "value", "props")).cast("binary").alias(
-                "value"
-            ),
-        )
-        q = stream_envelope_to_iceberg(envelope, tdir, ckpt)
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("streaming Iceberg commit did not finish in 300 s")
-        state = read_table_metadata(tdir)
-        if state is None or not state["metadata"]["snapshots"]:
-            raise RuntimeError("streaming Iceberg commit produced no snapshot")
-        session_cache_put(_STREAM_ICEBERG_CACHE, key, tdir)
+    tdir = _streaming_iceberg_table(spark, sf_dir)
     state = read_table_metadata(tdir)
     n_snapshots = len(state["metadata"]["snapshots"])
     env = read_iceberg_table(spark, tdir)
@@ -936,7 +904,38 @@ def streaming_iceberg_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_TT_CACHE: dict[tuple, tuple] = {}
+@session_fixture
+def _iceberg_tt_table(spark: SparkSession, sf_dir: str):
+    """Commit the envelope, then 25 duplicate partition-0 rows, once per
+    (session, sf); returns (table_dir, first snapshot id)."""
+    from pyspark.sql import functions as FX
+
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
+        commit_append,
+        read_table_metadata,
+    )
+    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
+        records_to_envelope,
+        write_table,
+    )
+
+    env = records_to_envelope(_records(spark, sf_dir)).repartition(
+        4, "partition"
+    )
+    tdir = tempfile.mkdtemp(prefix="iceberg-tt-")
+    write_table(env, tdir)
+    commit_append(tdir, env.schema)
+    first_snapshot = read_table_metadata(tdir)["metadata"][
+        "current-snapshot-id"
+    ]
+    extra = (
+        env.filter(FX.col("partition") == 0)
+        .limit(25)
+        .repartition(1, "partition")
+    )
+    write_table(extra, tdir)
+    commit_append(tdir, extra.schema)
+    return tdir, first_snapshot
 
 
 @query(
@@ -959,41 +958,12 @@ def iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition counts from each. The oracle recomputes both from raw
     `events`; equal hashes prove historical manifests still plan
     exactly the historical file set after later appends."""
-    from pyspark.sql import functions as FX
-
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
-        commit_append,
         read_iceberg_table,
         read_iceberg_table_at,
-        read_table_metadata,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
-        records_to_envelope,
-        write_table,
     )
 
-    key = _cache_key(spark, sf_dir)
-    cached = _ICEBERG_TT_CACHE.get(key)
-    if cached is None:
-        env = records_to_envelope(_records(spark, sf_dir)).repartition(
-            4, "partition"
-        )
-        tdir = tempfile.mkdtemp(prefix="iceberg-tt-")
-        write_table(env, tdir)
-        commit_append(tdir, env.schema)
-        first_snapshot = read_table_metadata(tdir)["metadata"][
-            "current-snapshot-id"
-        ]
-        extra = (
-            env.filter(FX.col("partition") == 0)
-            .limit(25)
-            .repartition(1, "partition")
-        )
-        write_table(extra, tdir)
-        commit_append(tdir, extra.schema)
-        session_cache_put(_ICEBERG_TT_CACHE, key, (tdir, first_snapshot))
-        cached = (tdir, first_snapshot)
-    tdir, first_snapshot = cached
+    tdir, first_snapshot = _iceberg_tt_table(spark, sf_dir)
     now = read_iceberg_table(spark, tdir).groupBy("partition").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_records_now")
     )
@@ -1005,7 +975,34 @@ def iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_COMPACT_CACHE: dict[tuple, str] = {}
+@session_fixture
+def _iceberg_compact_table(spark: SparkSession, sf_dir: str):
+    """Commit the envelope in two appends and compact their manifests into
+    one, once per (session, sf); returns the table dir."""
+    from pyspark.sql import functions as FX
+
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
+        commit_append,
+        rewrite_manifests,
+    )
+    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
+        records_to_envelope,
+        write_table,
+    )
+
+    env = records_to_envelope(_records(spark, sf_dir))
+    tdir = tempfile.mkdtemp(prefix="iceberg-compact-")
+    # two appends: partitions {0,1} then {2,3} -> two manifests
+    write_table(
+        env.filter(FX.col("partition") < 2).repartition(2, "partition"), tdir
+    )
+    commit_append(tdir, env.schema)
+    write_table(
+        env.filter(FX.col("partition") >= 2).repartition(2, "partition"), tdir
+    )
+    commit_append(tdir, env.schema)
+    rewrite_manifests(tdir)
+    return tdir
 
 
 @query(
@@ -1029,35 +1026,12 @@ def iceberg_compaction_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the structural constants (1 compacted manifest, 3 snapshots =
     2 appends + 1 replace). Equal hashes prove compaction preserved
     exactly the committed row set."""
-    from pyspark.sql import functions as FX
-
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
-        commit_append,
         read_iceberg_table,
         read_table_metadata,
-        rewrite_manifests,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
-        records_to_envelope,
-        write_table,
     )
 
-    key = _cache_key(spark, sf_dir)
-    tdir = _ICEBERG_COMPACT_CACHE.get(key)
-    if tdir is None:
-        env = records_to_envelope(_records(spark, sf_dir))
-        tdir = tempfile.mkdtemp(prefix="iceberg-compact-")
-        # two appends: partitions {0,1} then {2,3} -> two manifests
-        write_table(
-            env.filter(FX.col("partition") < 2).repartition(2, "partition"), tdir
-        )
-        commit_append(tdir, env.schema)
-        write_table(
-            env.filter(FX.col("partition") >= 2).repartition(2, "partition"), tdir
-        )
-        commit_append(tdir, env.schema)
-        rewrite_manifests(tdir)
-        session_cache_put(_ICEBERG_COMPACT_CACHE, key, tdir)
+    tdir = _iceberg_compact_table(spark, sf_dir)
     back = read_table_metadata(tdir)
     n_manifests = len(back["manifest_list"])
     n_snapshots = len(back["metadata"]["snapshots"])
@@ -1070,7 +1044,35 @@ def iceberg_compaction_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_DEL_CACHE: dict[tuple, tuple] = {}
+@session_fixture
+def _iceberg_del_table(spark: SparkSession, sf_dir: str):
+    """Commit the envelope, then position-delete offsets ≡ 3 mod 5, once
+    per (session, sf); returns (table_dir, pre-delete snapshot id, total
+    position deletes)."""
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
+        commit_append,
+        commit_position_deletes,
+        read_table_metadata,
+    )
+    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
+        records_to_envelope,
+        write_table,
+    )
+
+    env = records_to_envelope(_records(spark, sf_dir)).repartition(
+        4, "partition"
+    )
+    tdir = tempfile.mkdtemp(prefix="iceberg-del-")
+    write_table(env, tdir)
+    commit_append(tdir, env.schema)
+    first_snapshot = read_table_metadata(tdir)["metadata"][
+        "current-snapshot-id"
+    ]
+    meta = commit_position_deletes(spark, tdir, "kafka.offset % 5 = 3")
+    n_del = int(
+        meta["snapshots"][-1]["summary"]["total-position-deletes"]
+    )
+    return tdir, first_snapshot, n_del
 
 
 @query(
@@ -1109,38 +1111,11 @@ def iceberg_row_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete set when small (AQE) and shuffles on (file, pos) otherwise —
     the same strategy Spark's Iceberg source picks."""
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
-        commit_append,
-        commit_position_deletes,
         read_iceberg_table,
         read_iceberg_table_at,
-        read_table_metadata,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
-        records_to_envelope,
-        write_table,
     )
 
-    key = _cache_key(spark, sf_dir)
-    cached = _ICEBERG_DEL_CACHE.get(key)
-    if cached is None:
-        env = records_to_envelope(_records(spark, sf_dir)).repartition(
-            4, "partition"
-        )
-        tdir = tempfile.mkdtemp(prefix="iceberg-del-")
-        write_table(env, tdir)
-        commit_append(tdir, env.schema)
-        first_snapshot = read_table_metadata(tdir)["metadata"][
-            "current-snapshot-id"
-        ]
-        meta = commit_position_deletes(spark, tdir, "kafka.offset % 5 = 3")
-        n_del = int(
-            meta["snapshots"][-1]["summary"]["total-position-deletes"]
-        )
-        session_cache_put(
-            _ICEBERG_DEL_CACHE, key, (tdir, first_snapshot, n_del)
-        )
-        cached = (tdir, first_snapshot, n_del)
-    tdir, first_snapshot, n_del = cached
+    tdir, first_snapshot, n_del = _iceberg_del_table(spark, sf_dir)
     live = (
         read_iceberg_table(spark, tdir)
         .select(
@@ -1175,8 +1150,6 @@ def iceberg_row_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_UPSERT_CACHE: dict[tuple, tuple] = {}
-
 # Shared per-key aggregates over the upsert fixture: three queries
 # (iceberg_upsert_scan, iceberg_changelog_scan,
 # changelog_materialized_counts) consume the same head counts /
@@ -1185,89 +1158,138 @@ _ICEBERG_UPSERT_CACHE: dict[tuple, tuple] = {}
 # materialized once per (session, fixture) with their lineage cut (the
 # established cross-query cache discipline; every frame is key-count /
 # delta sized, never corpus sized).
-_UPSERT_HEAD_CACHE: dict[tuple, DataFrame] = {}
-_UPSERT_BEFORE_CACHE: dict[tuple, DataFrame] = {}
-_UPSERT_CHANGELOG_CACHE: dict[tuple, DataFrame] = {}
+
+
+def _upsert_head_id(spark: SparkSession, sf_dir: str):
+    """The upsert fixture's CURRENT snapshot id, from one driver-side
+    metadata read (~ms)."""
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
+        _current_state_meta,
+    )
+
+    tdir, _ = _iceberg_upsert_table(spark, sf_dir)
+    _v, meta, _t = _current_state_meta(tdir)
+    return meta.get("current-snapshot-id")
 
 
 def _upsert_head_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n) live per-key counts at the upsert fixture's head.
 
-    The cache key includes the table's CURRENT snapshot id (ADVICE
-    r13): head counts are a function of the head, so a future query
-    committing again to the fixture invalidates this entry by
-    construction instead of silently reading stale counts. The id
-    comes from one driver-side metadata read (~ms)."""
+    Keyed on the table's CURRENT snapshot id too (ADVICE r13): head
+    counts are a function of the head, so a future query committing
+    again to the fixture invalidates this entry by construction instead
+    of silently reading stale counts."""
+    return _upsert_head_counts_at(spark, sf_dir, _upsert_head_id(spark, sf_dir))
+
+
+@session_fixture
+def _upsert_head_counts_at(
+    spark: SparkSession, sf_dir: str, snapshot_id
+) -> DataFrame:
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
         read_iceberg_table,
     )
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-        _current_state_meta,
+
+    tdir, _ = _iceberg_upsert_table(spark, sf_dir)
+    return lineage_cut(
+        read_iceberg_table(spark, tdir)
+        .select(F.col("key").cast("string").alias("event_type"))
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
 
-    tdir, _ = _ICEBERG_UPSERT_CACHE[_cache_key(spark, sf_dir)]
-    _v, meta, _t = _current_state_meta(tdir)
-    key = (*_cache_key(spark, sf_dir), meta.get("current-snapshot-id"))
-    cached = _UPSERT_HEAD_CACHE.get(key)
-    if cached is None:
-        cached = lineage_cut(
-            read_iceberg_table(spark, tdir)
-            .select(F.col("key").cast("string").alias("event_type"))
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        )
-        session_cache_put(_UPSERT_HEAD_CACHE, key, cached)
-    return cached
 
-
+@session_fixture
 def _upsert_before_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, n) per-key counts at the pre-upsert snapshot."""
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
         read_iceberg_table_at,
     )
 
-    key = _cache_key(spark, sf_dir)
-    cached = _UPSERT_BEFORE_CACHE.get(key)
-    if cached is None:
-        tdir, first_snapshot = _ICEBERG_UPSERT_CACHE[key]
-        cached = lineage_cut(
-            read_iceberg_table_at(spark, tdir, first_snapshot)
-            .select(F.col("key").cast("string").alias("event_type"))
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        )
-        session_cache_put(_UPSERT_BEFORE_CACHE, key, cached)
-    return cached
+    tdir, first_snapshot = _iceberg_upsert_table(spark, sf_dir)
+    return lineage_cut(
+        read_iceberg_table_at(spark, tdir, first_snapshot)
+        .select(F.col("key").cast("string").alias("event_type"))
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
 
 
 def _upsert_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, _change_type) typed net row-level changes between the
-    pre-upsert snapshot and the head — delta-sized."""
+    pre-upsert snapshot and the head — delta-sized. Keyed on the head
+    snapshot too: the changelog window ends at the CURRENT snapshot
+    (same staleness rule as _upsert_head_counts)."""
+    return _upsert_changelog_at(spark, sf_dir, _upsert_head_id(spark, sf_dir))
+
+
+@session_fixture
+def _upsert_changelog_at(
+    spark: SparkSession, sf_dir: str, snapshot_id
+) -> DataFrame:
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
         read_iceberg_changelog,
     )
 
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-        _current_state_meta,
+    tdir, first_snapshot = _iceberg_upsert_table(spark, sf_dir)
+    return lineage_cut(
+        read_iceberg_changelog(spark, tdir, first_snapshot).select(
+            F.col("key").cast("string").alias("event_type"),
+            "_change_type",
+        )
     )
 
-    tdir, first_snapshot = _ICEBERG_UPSERT_CACHE[_cache_key(spark, sf_dir)]
-    # keyed on the head snapshot too: the changelog window ends at the
-    # CURRENT snapshot (same staleness rule as _upsert_head_counts)
-    _v, meta, _t = _current_state_meta(tdir)
-    key = (*_cache_key(spark, sf_dir), meta.get("current-snapshot-id"))
-    cached = _UPSERT_CHANGELOG_CACHE.get(key)
-    if cached is None:
-        cached = lineage_cut(
-            read_iceberg_changelog(spark, tdir, first_snapshot).select(
-                F.col("key").cast("string").alias("event_type"),
-                "_change_type",
-            )
-        )
-        session_cache_put(_UPSERT_CHANGELOG_CACHE, key, cached)
-    return cached
 
 UPSERT_REPLACEMENT_ROWS = 25
+
+
+@session_fixture
+def _iceberg_upsert_table(spark: SparkSession, sf_dir: str):
+    """Commit the envelope, equality-delete the two first event-type keys
+    and re-append UPSERT_REPLACEMENT_ROWS rows of the first, once per
+    (session, sf); returns (table_dir, pre-upsert snapshot id)."""
+    from pyspark.sql import functions as FX
+
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
+        commit_append,
+        commit_equality_deletes,
+        read_table_metadata,
+    )
+    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
+        records_to_envelope,
+        write_table,
+    )
+
+    env = records_to_envelope(_records(spark, sf_dir)).repartition(
+        4, "partition"
+    )
+    tdir = tempfile.mkdtemp(prefix="iceberg-upsert-")
+    write_table(env, tdir)
+    commit_append(tdir, env.schema)
+    first_snapshot = read_table_metadata(tdir)["metadata"][
+        "current-snapshot-id"
+    ]
+    types = sorted(
+        r[0]
+        for r in env.select(
+            FX.col("key").cast("string")
+        ).distinct().collect()
+    )[:2]
+    type_bytes = [t.encode() for t in types]
+    keys = (
+        env.where(FX.col("key").isin(type_bytes))
+        .select("partition", "key")
+        .distinct()
+    )
+    commit_equality_deletes(spark, tdir, keys, ["key"])
+    replacement = (
+        env.where(FX.col("key") == FX.lit(type_bytes[0]))
+        .limit(UPSERT_REPLACEMENT_ROWS)
+        .repartition(1, "partition")
+    )
+    write_table(replacement, tdir)
+    commit_append(tdir, env.schema)
+    return tdir, first_snapshot
 
 
 @query(
@@ -1305,53 +1327,7 @@ def iceberg_upsert_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the key set is a broadcast; neither the delete commit nor
     the merge-on-read anti-join re-shuffles the corpus
     (`sources/iceberg/scan.py::_apply_equality_deletes`)."""
-    from pyspark.sql import functions as FX
-
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
-        commit_append,
-        commit_equality_deletes,
-        read_table_metadata,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
-        records_to_envelope,
-        write_table,
-    )
-
-    key = _cache_key(spark, sf_dir)
-    cached = _ICEBERG_UPSERT_CACHE.get(key)
-    if cached is None:
-        env = records_to_envelope(_records(spark, sf_dir)).repartition(
-            4, "partition"
-        )
-        tdir = tempfile.mkdtemp(prefix="iceberg-upsert-")
-        write_table(env, tdir)
-        commit_append(tdir, env.schema)
-        first_snapshot = read_table_metadata(tdir)["metadata"][
-            "current-snapshot-id"
-        ]
-        types = sorted(
-            r[0]
-            for r in env.select(
-                FX.col("key").cast("string")
-            ).distinct().collect()
-        )[:2]
-        type_bytes = [t.encode() for t in types]
-        keys = (
-            env.where(FX.col("key").isin(type_bytes))
-            .select("partition", "key")
-            .distinct()
-        )
-        commit_equality_deletes(spark, tdir, keys, ["key"])
-        replacement = (
-            env.where(FX.col("key") == FX.lit(type_bytes[0]))
-            .limit(UPSERT_REPLACEMENT_ROWS)
-            .repartition(1, "partition")
-        )
-        write_table(replacement, tdir)
-        commit_append(tdir, env.schema)
-        session_cache_put(_ICEBERG_UPSERT_CACHE, key, (tdir, first_snapshot))
-        cached = (tdir, first_snapshot)
-    tdir, first_snapshot = cached
+    tdir, first_snapshot = _iceberg_upsert_table(spark, sf_dir)
     live = _upsert_head_counts(spark, sf_dir).select(
         "event_type", F.col("n").alias("n_live_raw")
     )
@@ -1513,7 +1489,34 @@ def rlmm_event_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_TAG_CACHE: dict[tuple, tuple] = {}
+@session_fixture
+def _iceberg_tag_table(spark: SparkSession, sf_dir: str):
+    """Commit the envelope, tag it corpus-v1 and append offsets ≡ 7 mod 10
+    again, once per (session, sf); returns the table dir."""
+    from pyspark.sql import functions as FX
+
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
+        commit_append,
+        create_ref,
+    )
+    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
+        records_to_envelope,
+        write_table,
+    )
+
+    env = records_to_envelope(_records(spark, sf_dir)).repartition(
+        4, "partition"
+    )
+    tdir = tempfile.mkdtemp(prefix="iceberg-tag-")
+    write_table(env, tdir)
+    commit_append(tdir, env.schema)
+    create_ref(tdir, "corpus-v1", "tag")
+    extra = env.where(
+        FX.col("kafka.offset") % 10 == 7
+    ).repartition(1, "partition")
+    write_table(extra, tdir)
+    commit_append(tdir, env.schema)
+    return tdir
 
 
 @query(
@@ -1540,37 +1543,12 @@ def iceberg_tag_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ref resolution is one metadata read; both reads plan
     through manifest-level pruning like every other snapshot read."""
-    from pyspark.sql import functions as FX
-
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
-        commit_append,
-        create_ref,
         read_iceberg_table,
         read_iceberg_table_ref,
     )
-    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
-        records_to_envelope,
-        write_table,
-    )
 
-    key = _cache_key(spark, sf_dir)
-    cached = _ICEBERG_TAG_CACHE.get(key)
-    if cached is None:
-        env = records_to_envelope(_records(spark, sf_dir)).repartition(
-            4, "partition"
-        )
-        tdir = tempfile.mkdtemp(prefix="iceberg-tag-")
-        write_table(env, tdir)
-        commit_append(tdir, env.schema)
-        create_ref(tdir, "corpus-v1", "tag")
-        extra = env.where(
-            FX.col("kafka.offset") % 10 == 7
-        ).repartition(1, "partition")
-        write_table(extra, tdir)
-        commit_append(tdir, env.schema)
-        session_cache_put(_ICEBERG_TAG_CACHE, key, (tdir,))
-        cached = (tdir,)
-    (tdir,) = cached
+    tdir = _iceberg_tag_table(spark, sf_dir)
     tagged = (
         read_iceberg_table_ref(spark, tdir, "corpus-v1")
         .select(F.col("key").cast("string").alias("event_type"))
@@ -1588,11 +1566,10 @@ def iceberg_tag_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_BANDS_CACHE: dict[tuple, tuple] = {}
-
 BOUNDS_BAND = 500  # offsets per banded commit (sorted-write layout)
 
 
+@session_fixture
 def _ensure_banded_table(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per session/sf) the sorted-offset-band Iceberg table
     the bounds/incremental/streaming queries share: one commit per
@@ -1624,52 +1601,47 @@ def _ensure_banded_table(spark: SparkSession, sf_dir: str) -> str:
         records_to_envelope,
     )
 
-    key = _cache_key(spark, sf_dir)
-    cached = _ICEBERG_BANDS_CACHE.get(key)
-    if cached is None:
-        env = records_to_envelope(_records(spark, sf_dir))
-        tdir = tempfile.mkdtemp(prefix="iceberg-bands-")
-        schema = env.schema  # envelope schema — __band never enters it
-        banded = env.withColumn(
-            "__band", FX.expr(f"kafka.offset div {BOUNDS_BAND}")
-        )
-        with pinned_write_confs(spark):
-            banded.repartition("__band", "partition").write.mode(
-                "append"
-            ).partitionBy("partition", "__band").parquet(tdir)
-        # hoist each band file out of its __band=B dir (the hive layer
-        # only exists to split files; readers must see partition=P/*.parquet
-        # exactly like write_table produces) and group paths per band
-        files_by_band: dict[int, list[str]] = {}
-        for pdir in os.scandir(tdir):
-            if not (pdir.is_dir() and pdir.name.startswith("partition=")):
+    env = records_to_envelope(_records(spark, sf_dir))
+    tdir = tempfile.mkdtemp(prefix="iceberg-bands-")
+    schema = env.schema  # envelope schema — __band never enters it
+    banded = env.withColumn(
+        "__band", FX.expr(f"kafka.offset div {BOUNDS_BAND}")
+    )
+    with pinned_write_confs(spark):
+        banded.repartition("__band", "partition").write.mode(
+            "append"
+        ).partitionBy("partition", "__band").parquet(tdir)
+    # hoist each band file out of its __band=B dir (the hive layer
+    # only exists to split files; readers must see partition=P/*.parquet
+    # exactly like write_table produces) and group paths per band
+    files_by_band: dict[int, list[str]] = {}
+    for pdir in os.scandir(tdir):
+        if not (pdir.is_dir() and pdir.name.startswith("partition=")):
+            continue
+        for bdir in os.scandir(pdir.path):
+            if not (bdir.is_dir() and bdir.name.startswith("__band=")):
                 continue
-            for bdir in os.scandir(pdir.path):
-                if not (bdir.is_dir() and bdir.name.startswith("__band=")):
+            band = int(bdir.name.split("=", 1)[1])
+            for f in os.scandir(bdir.path):
+                if not f.name.endswith(".parquet"):
+                    os.remove(f.path)  # hadoop .crc sidecars
                     continue
-                band = int(bdir.name.split("=", 1)[1])
-                for f in os.scandir(bdir.path):
-                    if not f.name.endswith(".parquet"):
-                        os.remove(f.path)  # hadoop .crc sidecars
-                        continue
-                    dest = os.path.join(
-                        pdir.path, f"band-{band:05d}-{f.name}"
-                    )
-                    os.rename(f.path, dest)
-                    files_by_band.setdefault(band, []).append(dest)
-                os.rmdir(bdir.path)
-        base_ms = int(time.time() * 1000)
-        for i, band in enumerate(sorted(files_by_band)):
-            commit_append(
-                tdir,
-                schema,
-                now_ms=base_ms + i,
-                files=sorted(files_by_band[band]),
-                assume_new_files=True,  # each path committed exactly once
-            )
-        session_cache_put(_ICEBERG_BANDS_CACHE, key, (tdir,))
-        cached = (tdir,)
-    return cached[0]
+                dest = os.path.join(
+                    pdir.path, f"band-{band:05d}-{f.name}"
+                )
+                os.rename(f.path, dest)
+                files_by_band.setdefault(band, []).append(dest)
+            os.rmdir(bdir.path)
+    base_ms = int(time.time() * 1000)
+    for i, band in enumerate(sorted(files_by_band)):
+        commit_append(
+            tdir,
+            schema,
+            now_ms=base_ms + i,
+            files=sorted(files_by_band[band]),
+            assume_new_files=True,  # each path committed exactly once
+        )
+    return tdir
 
 
 @query(
@@ -1803,7 +1775,33 @@ def iceberg_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_STREAM_READ_CACHE: dict[tuple, str] = {}
+@session_fixture
+def _iceberg_stream_read_sink(spark: SparkSession, sf_dir: str):
+    """Stream the banded table through the iceberg_inc source into a
+    parquet sink once per (session, sf); returns the sink dir."""
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg_stream import register
+
+    tdir = _ensure_banded_table(spark, sf_dir)
+    register(spark)
+    out = tempfile.mkdtemp(prefix="iceberg-stream-read-")
+    ckpt = tempfile.mkdtemp(prefix="iceberg-stream-read-ck-")
+    q = (
+        spark.readStream.format("iceberg_inc")
+        .option("path", tdir)
+        .option("maxSnapshotsPerTrigger", "1")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(
+            "streaming Iceberg incremental read did not finish in 300 s"
+        )
+    return out
 
 
 @query(
@@ -1835,34 +1833,7 @@ def streaming_iceberg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     that snapshot's appended files (cost tracks the delta); the
     throttle turns a backfill into bounded batches — the same contract
     as the segment stream source and Iceberg's JVM streaming read."""
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg_stream import (
-        register,
-    )
-
-    key = _cache_key(spark, sf_dir)
-    out = _ICEBERG_STREAM_READ_CACHE.get(key)
-    if out is None:
-        tdir = _ensure_banded_table(spark, sf_dir)
-        register(spark)
-        out = tempfile.mkdtemp(prefix="iceberg-stream-read-")
-        ckpt = tempfile.mkdtemp(prefix="iceberg-stream-read-ck-")
-        q = (
-            spark.readStream.format("iceberg_inc")
-            .option("path", tdir)
-            .option("maxSnapshotsPerTrigger", "1")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "streaming Iceberg incremental read did not finish in 300 s"
-            )
-        session_cache_put(_ICEBERG_STREAM_READ_CACHE, key, out)
+    out = _iceberg_stream_read_sink(spark, sf_dir)
     return (
         spark.read.parquet(out)
         .groupBy(F.col("partition"))
@@ -2001,7 +1972,37 @@ def changelog_materialized_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_ICEBERG_DV_CACHE: dict[tuple, tuple] = {}
+@session_fixture
+def _iceberg_dv_table(spark: SparkSession, sf_dir: str):
+    """Commit the envelope, then delete offsets ≡ 2 mod 7 with deletion
+    vectors, once per (session, sf); returns (table_dir, pre-delete
+    snapshot id, deleted row count)."""
+    from tiered_storage_for_apache_kafka_spark.sources.deletion_vectors import (
+        commit_deletion_vectors,
+    )
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
+        commit_append,
+        read_table_metadata,
+    )
+    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
+        records_to_envelope,
+        write_table,
+    )
+
+    env = records_to_envelope(_records(spark, sf_dir)).repartition(
+        4, "partition"
+    )
+    tdir = tempfile.mkdtemp(prefix="iceberg-dv-")
+    write_table(env, tdir)
+    commit_append(tdir, env.schema)
+    first_snapshot = read_table_metadata(tdir)["metadata"][
+        "current-snapshot-id"
+    ]
+    meta = commit_deletion_vectors(spark, tdir, "kafka.offset % 7 = 2")
+    n_del = int(
+        meta["snapshots"][-1]["summary"]["total-position-deletes"]
+    )
+    return tdir, first_snapshot, n_del
 
 
 @query(
@@ -2031,41 +2032,12 @@ def iceberg_dv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     `events`. Compared to v2 parquet position deletes, the delete set
     rides in O(bitmap) bytes instead of parquet rows — the deleted
     positions never pass through the driver either way."""
-    from tiered_storage_for_apache_kafka_spark.sources.deletion_vectors import (
-        commit_deletion_vectors,
-    )
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
-        commit_append,
         read_iceberg_table,
         read_iceberg_table_at,
-        read_table_metadata,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
-        records_to_envelope,
-        write_table,
     )
 
-    key = _cache_key(spark, sf_dir)
-    cached = _ICEBERG_DV_CACHE.get(key)
-    if cached is None:
-        env = records_to_envelope(_records(spark, sf_dir)).repartition(
-            4, "partition"
-        )
-        tdir = tempfile.mkdtemp(prefix="iceberg-dv-")
-        write_table(env, tdir)
-        commit_append(tdir, env.schema)
-        first_snapshot = read_table_metadata(tdir)["metadata"][
-            "current-snapshot-id"
-        ]
-        meta = commit_deletion_vectors(spark, tdir, "kafka.offset % 7 = 2")
-        n_del = int(
-            meta["snapshots"][-1]["summary"]["total-position-deletes"]
-        )
-        session_cache_put(
-            _ICEBERG_DV_CACHE, key, (tdir, first_snapshot, n_del)
-        )
-        cached = (tdir, first_snapshot, n_del)
-    tdir, first_snapshot, n_del = cached
+    tdir, first_snapshot, n_del = _iceberg_dv_table(spark, sf_dir)
     live = (
         read_iceberg_table(spark, tdir)
         .select(
@@ -2097,7 +2069,44 @@ def iceberg_dv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ICEBERG_RWDF_CACHE: dict[tuple, tuple] = {}
+@session_fixture
+def _iceberg_rwdf_table(spark: SparkSession, sf_dir: str):
+    """Commit the envelope, delete offsets ≡ 1 mod 6 with deletion vectors
+    and rewrite the data files, once per (session, sf); returns
+    (table_dir, pre-delete snapshot id, data files, delete files) of the
+    rewritten head."""
+    from tiered_storage_for_apache_kafka_spark.sources.deletion_vectors import (
+        commit_deletion_vectors,
+    )
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
+        _plan_snapshot,
+        commit_append,
+        read_table_metadata,
+        rewrite_data_files,
+    )
+    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
+        records_to_envelope,
+        write_table,
+    )
+
+    env = records_to_envelope(_records(spark, sf_dir)).repartition(
+        4, "partition"
+    )
+    tdir = tempfile.mkdtemp(prefix="iceberg-rwdf-")
+    write_table(env, tdir)
+    commit_append(tdir, env.schema)
+    first_snapshot = read_table_metadata(tdir)["metadata"][
+        "current-snapshot-id"
+    ]
+    commit_deletion_vectors(spark, tdir, "kafka.offset % 6 = 1")
+    meta = rewrite_data_files(spark, tdir)
+    cur = next(
+        s
+        for s in meta["snapshots"]
+        if s["snapshot-id"] == meta["current-snapshot-id"]
+    )
+    data, deletes = _plan_snapshot(cur, None)
+    return tdir, first_snapshot, len(data), len(deletes)
 
 
 @query(
@@ -2128,49 +2137,14 @@ def iceberg_rewrite_datafiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost nothing else. Scale shape: one distributed read + one
     distributed write; the driver only stats O(#files) footers —
     `sources/iceberg/maintenance.py::_rewrite_data_files_once`."""
-    from tiered_storage_for_apache_kafka_spark.sources.deletion_vectors import (
-        commit_deletion_vectors,
-    )
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
-        _plan_snapshot,
-        commit_append,
         read_iceberg_table,
         read_iceberg_table_at,
-        read_table_metadata,
-        rewrite_data_files,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
-        records_to_envelope,
-        write_table,
     )
 
-    key = _cache_key(spark, sf_dir)
-    cached = _ICEBERG_RWDF_CACHE.get(key)
-    if cached is None:
-        env = records_to_envelope(_records(spark, sf_dir)).repartition(
-            4, "partition"
-        )
-        tdir = tempfile.mkdtemp(prefix="iceberg-rwdf-")
-        write_table(env, tdir)
-        commit_append(tdir, env.schema)
-        first_snapshot = read_table_metadata(tdir)["metadata"][
-            "current-snapshot-id"
-        ]
-        commit_deletion_vectors(spark, tdir, "kafka.offset % 6 = 1")
-        meta = rewrite_data_files(spark, tdir)
-        cur = next(
-            s
-            for s in meta["snapshots"]
-            if s["snapshot-id"] == meta["current-snapshot-id"]
-        )
-        data, deletes = _plan_snapshot(cur, None)
-        session_cache_put(
-            _ICEBERG_RWDF_CACHE,
-            key,
-            (tdir, first_snapshot, len(data), len(deletes)),
-        )
-        cached = (tdir, first_snapshot, len(data), len(deletes))
-    tdir, first_snapshot, n_data_files, n_delete_files = cached
+    tdir, first_snapshot, n_data_files, n_delete_files = _iceberg_rwdf_table(
+        spark, sf_dir
+    )
     live = (
         read_iceberg_table(spark, tdir)
         .select(

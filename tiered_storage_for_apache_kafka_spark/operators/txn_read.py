@@ -61,9 +61,8 @@ from tiered_storage_for_apache_kafka_spark.kafka_wire import (
 from tiered_storage_for_apache_kafka_spark.operators.registry import (
     lineage_cut,
     query,
-    session_cache_key,
-    session_cache_put,
 )
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
 from tiered_storage_for_apache_kafka_spark.sources.segment_source import (
     TOPIC,
     TOPIC_ID,
@@ -90,8 +89,6 @@ ABORT_PHASE = 3
 PRODUCER_BASE = 9000
 N_PRODUCERS = 3
 EPOCH_EVERY = 4  # leader epoch bumps every EPOCH_EVERY transactions
-
-_TXN_CACHE: dict[tuple, tuple[DataFrame, dict]] = {}
 
 
 def tier_transactional_rows(
@@ -273,17 +270,12 @@ def tier_transactional_events(
     )
 
 
+@session_fixture
 def _tier_txn(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
-    cached = _TXN_CACHE.get(session_cache_key(spark, sf_dir))
-    if cached is not None:
-        return cached
     events = load_table(spark, sf_dir, "events")
     root = tempfile.mkdtemp(prefix="tiered-txn-")
     conf = manager_conf(root, chunk_size=4096, compression=True)
     manifests = lineage_cut(tier_transactional_events(spark, events, conf))
-    session_cache_put(
-        _TXN_CACHE, session_cache_key(spark, sf_dir), (manifests, conf)
-    )
     return manifests, conf
 
 

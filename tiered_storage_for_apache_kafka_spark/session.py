@@ -14,7 +14,9 @@ for the 1000-executor / 100 TB case and merely *also* works locally:
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -100,6 +102,65 @@ def get_spark(
     return builder.getOrCreate()
 
 
+_MISSING = object()
+
+
+def session_fixture(build):
+    """Decorator: cache ``build(spark, sf_dir, *args)`` once per session.
+
+    This is the one mechanism for every shared intermediate the engine
+    reuses across queries of a session (token frames, the tiered store,
+    Iceberg twins, trained models, table loads). The policy:
+
+    - **Key.** ``(spark.sparkContext.applicationId, sf_dir, *args)``,
+      one dict per decorated function. A cached DataFrame's lineage is
+      bound to the session that built it, so a same-process session
+      restart (a new applicationId) never sees a stale entry. Extra
+      positional arguments must be hashable.
+    - **Single build per key.** A hit is one key lookup and one dict
+      get. A miss builds under a per-key lock: concurrent first
+      consumers wait for the one builder instead of repeating its
+      side effects (uploads, Iceberg commits). A builder that raises
+      caches nothing and releases the lock, so the next call rebuilds.
+    - **Dead-session eviction.** Inserting an entry evicts the entries
+      and locks of every other session, so a restart does not pin the
+      DataFrames (and py4j handles) of a dead JVM context.
+    - **Eager materialization.** A builder materializes the shared
+      DataFrame it returns, normally through
+      ``operators.registry.lineage_cut``, which is eager in every
+      ``SPARK_GRAFT_SHARED_CACHE_MODE``. The build's jobs and side
+      effects therefore run once, under the lock, rather than in
+      whichever consumer acts first.
+
+    The decorated function keeps ``build``'s name and docstring, so it
+    can be registered as a query itself.
+    """
+    cache: dict[tuple, object] = {}
+    locks: dict[tuple, threading.Lock] = {}
+    guard = threading.Lock()
+
+    @functools.wraps(build)
+    def fixture(spark, sf_dir, *args):
+        key = (spark.sparkContext.applicationId, sf_dir, *args)
+        value = cache.get(key, _MISSING)
+        if value is not _MISSING:
+            return value
+        with guard:
+            lock = locks.setdefault(key, threading.Lock())
+        with lock:
+            value = cache.get(key, _MISSING)
+            if value is _MISSING:
+                value = build(spark, sf_dir, *args)
+                with guard:
+                    for d in (cache, locks):
+                        for stale in [k for k in d if k[0] != key[0]]:
+                            del d[stale]
+                    cache[key] = value
+        return value
+
+    return fixture
+
+
 # ---------------------------------------------------------------------------
 # Session-portable write confs (r11)
 #
@@ -126,7 +187,7 @@ _PINNED_WRITE_CONFS = {
     "spark.sql.parquet.fieldId.write.enabled": "true",
 }
 
-_PIN_LOCK = None  # created lazily; threading import kept off module import
+_PIN_LOCK = threading.Lock()
 # per-SparkSession pin state: id(session) -> [depth, {conf: saved}]
 _PIN_STATE: dict[int, list] = {}
 
@@ -144,11 +205,6 @@ class pinned_write_confs:
         self._spark = spark
 
     def __enter__(self):
-        global _PIN_LOCK
-        if _PIN_LOCK is None:
-            import threading
-
-            _PIN_LOCK = threading.Lock()
         with _PIN_LOCK:
             state = _PIN_STATE.get(id(self._spark))
             if state is None:

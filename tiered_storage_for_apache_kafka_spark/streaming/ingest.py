@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
+
 #: per-process start counter for default streaming query names (below)
 _QUERY_NAME_SEQ = _itertools.count()
 
@@ -54,25 +56,13 @@ def _auto_query_name(base: str, checkpoint_dir: str) -> str:
     return f"{base}-{digest}-{next(_QUERY_NAME_SEQ)}"
 
 
-# (applicationId, sf_dir) -> raw events schema: the footer inference is
-# a per-call JVM round-trip over an immutable file (same policy as
-# tables._LOAD_CACHE)
-_RAW_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
+@session_fixture
 def _raw_events_schema(spark: SparkSession, sf_dir: str):
+    """Raw events schema, once per session: footer inference is a JVM
+    round-trip over an immutable file."""
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _RAW_SCHEMA_CACHE.get(key)
-    if cached is None:
-        cached = spark.read.parquet(
-            os.path.join(sf_dir, "events.parquet")
-        ).schema
-        for stale in [k for k in _RAW_SCHEMA_CACHE if k[0] != key[0]]:
-            del _RAW_SCHEMA_CACHE[stale]
-        _RAW_SCHEMA_CACHE[key] = cached
-    return cached
+    return spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tiered_storage_for_apache_kafka_spark.session import session_fixture
+
 TABLE_NAMES = [
     "region",
     "nation",
@@ -48,23 +50,16 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-# (applicationId, sf_dir, name) -> DataFrame. A DataFrame is an
-# immutable plan handle, so handing every caller the same object is
-# safe; rebuilding it per call paid a ~60 ms py4j + footer-inference
-# round-trip, which across a ~200-query bench pass (1-3 load_table
-# calls each, two passes) added tens of seconds of pure driver-side
-# re-listing of the same immutable files. Entries of dead sessions are
-# evicted on insert (same policy as the operator-level caches).
-_LOAD_CACHE: dict[tuple, DataFrame] = {}
-
-
+@session_fixture
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one driver table. A DataFrame is an immutable plan handle, so
+    handing every caller of a session the same object is safe; rebuilding
+    it per call paid a ~60 ms py4j + footer-inference round-trip, which
+    across a ~200-query bench pass (1-3 load_table calls each, two
+    passes) added tens of seconds of driver-side re-listing of the same
+    immutable files."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _LOAD_CACHE.get(key)
-    if cached is not None:
-        return cached
     if name == "events":
         # Some testdata generations write events.ts as TIMESTAMP(NANOS),
         # which Spark rejects unless nanosAsLong is set. Callers may pass
@@ -77,9 +72,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_ts(df)
-    for stale in [k for k in _LOAD_CACHE if k[0] != key[0]]:
-        del _LOAD_CACHE[stale]
-    _LOAD_CACHE[key] = df
     return df
 
 
