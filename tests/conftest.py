@@ -13,3 +13,22 @@ def spark():
     spark = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def join_form(monkeypatch):
+    """Force every merge-on-read per-file metadata attach into its
+    broadcast-join form (literal budget 0). Yields the list of attach
+    calls made, so a test can assert that the form really ran."""
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import scan
+
+    calls = []
+    attach = scan._attach_file_meta
+
+    def counted(*args, **kwargs):
+        calls.append(args[2])
+        return attach(*args, **kwargs)
+
+    monkeypatch.setattr(scan, "_ATTACH_LITERALS", 0)
+    monkeypatch.setattr(scan, "_attach_file_meta", counted)
+    yield calls

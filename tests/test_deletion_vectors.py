@@ -1043,3 +1043,21 @@ class TestWriteAuditPublish:
         with pytest.raises(ValueError, match="tag"):
             fast_forward(table, "audit", target="release", now_ms=5_000)
 
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "test_commit_and_read",
+        "test_sequence_rule_new_appends_not_retro_deleted",
+        "test_second_dv_commit_unions",
+        "test_rematch_skips_dv_deleted_rows",
+        "test_time_travel_sees_pre_dv_rows",
+    ],
+)
+def test_dv_reads_in_join_form(spark, table, join_form, name):
+    """The DV and position-delete read tests above with the literal
+    budget at 0. The DV plane filters its entries at plan time and
+    attaches nothing, so this guards the fused position/DV anti-join
+    rather than a second attach form."""
+    getattr(TestDeletionVectors(), name)(spark, table)

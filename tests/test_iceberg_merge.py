@@ -1216,3 +1216,23 @@ def test_merge_map_payload_column(spark):
             spark, bad, tdir, on=["id"], partition_spec=BUCKET_SPEC,
             now_ms=3_000,
         )
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_merge_upsert_full_lifecycle,
+        test_merge_same_snapshot_sequence_semantics,
+        test_merge_mutable_partition_source_goes_global,
+        test_merge_time_travel_sees_pre_merge_state,
+        test_repeated_merges_accumulate,
+        test_merge_across_spec_evolution,
+        test_merge_promoted_key_column_still_retracts,
+    ],
+    ids=lambda f: f.__name__,
+)
+def test_equality_delete_reads_in_join_form(spark, join_form, case):
+    """The equality-delete read tests above with every merge-on-read
+    metadata attach in its broadcast-join form."""
+    case(spark)
+    assert join_form

@@ -651,3 +651,20 @@ def test_random_nested_ddl_program_matches_model(spark, tmp_path, seed):
         )
     assert any(t == "op_nested_rename" for t in trace)
     assert any(t == "op_arr_rename" for t in trace)
+
+
+def test_random_mutation_program_matches_model_join_form(
+    spark, tmp_path, join_form
+):
+    """Seed 7 with every merge-on-read metadata attach in its
+    broadcast-join form: the same model, row for row."""
+    test_random_mutation_program_matches_model(spark, tmp_path, 7)
+    assert join_form
+
+
+def test_random_ddl_program_matches_model_join_form(
+    spark, tmp_path, join_form
+):
+    """Seed 101 of the DDL program in the broadcast-join form."""
+    test_random_ddl_program_matches_model(spark, tmp_path, 101)
+    assert join_form

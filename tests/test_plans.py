@@ -636,14 +636,19 @@ def test_dsir_model_broadcast_topk_take_ordered(spark):
     assert "PythonUDF" not in plan and "BatchEvalPython" not in plan
 
 
-def test_iceberg_merge_on_read_plan_shapes(spark):
+def test_iceberg_merge_on_read_plan_shapes(spark, monkeypatch):
     """Position deletes: a snapshot WITHOUT deletes scans exactly as
     before (no anti-join, no _metadata projection); a snapshot WITH
     deletes applies them as one (file, pos) anti-join over a native
-    columnar scan — no Python crossing anywhere."""
+    columnar scan — no Python crossing anywhere. With equality and
+    position deletes each committed twice and data newer than both,
+    each plane reads its delete files in ONE scan; at the default
+    literal budget the per-file metadata is plan literals (no metadata
+    frame), at budget 0 a broadcast frame."""
     from pyspark.sql import functions as F
 
     from tiered_storage_for_apache_kafka_spark.sources import iceberg as ice
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import scan
     from tiered_storage_for_apache_kafka_spark.sources.table_mode import (
         write_table,
     )
@@ -675,6 +680,29 @@ def test_iceberg_merge_on_read_plan_shapes(spark):
     assert merged_df.columns == ice.read_iceberg_table_at(
         spark, tdir, 1
     ).columns
+
+    ice.commit_position_deletes(spark, tdir, "offset % 5 = 4")
+    for key in [(1, 1), (2, 2)]:
+        ice.commit_equality_deletes(
+            spark, tdir,
+            spark.createDataFrame([key], "partition int, offset bigint"),
+            ["offset"],
+        )
+    newer = df.where("offset < 8").withColumn("offset", F.col("offset") + 1000)
+    write_table(newer, tdir)
+    ice.commit_append(tdir, newer.schema)
+
+    def metadata_frame(plan):
+        return "ExistingRDD" in plan or "LogicalRDD" in plan
+
+    literal = plan_of(ice.read_iceberg_table(spark, tdir))
+    # one scan for the data files, one per delete plane
+    assert literal.count("FileScan parquet") == 3, literal
+    assert not metadata_frame(literal), literal
+    monkeypatch.setattr(scan, "_ATTACH_LITERALS", 0)
+    joined = plan_of(ice.read_iceberg_table(spark, tdir))
+    assert joined.count("FileScan parquet") == 3, joined
+    assert metadata_frame(joined), joined
 
 
 def test_weighted_sample_pps_plan(spark):

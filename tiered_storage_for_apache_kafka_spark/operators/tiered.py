@@ -1097,7 +1097,7 @@ def iceberg_row_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     files are never rewritten (merge-on-read). The query reads the
     CURRENT view (deletes applied via the sequence-number-aware
     (file, pos) anti-join — `sources/iceberg/scan.py::
-    _apply_position_deletes`), the pre-delete snapshot via ``VERSION AS
+    _read_plan_with_identity`), the pre-delete snapshot via ``VERSION AS
     OF`` (sees every row), and the snapshot summary's cumulative
     ``total-position-deletes``; the oracle recomputes all three from
     raw `events`. Equal hashes prove the delete plane is exact: the

@@ -59,13 +59,11 @@ from tiered_storage_for_apache_kafka_spark.sources.local_df import (
 
 from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
     FORMAT_VERSION,
-    _apply_equality_deletes,
-    _apply_position_deletes,
     _current_schema_struct,
     _current_state_meta,
     _default_table_name,
     _plan_snapshot,
-    _read_with_positions,
+    _read_plan_with_identity,
     manifest_entry_schema,
     write_avro_ocf,
 )
@@ -205,18 +203,8 @@ def write_deletion_vectors(
     if not data:
         return []
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    df = _read_with_positions(
-        spark, table_dir, meta, [d["file_path"] for d in data]
-    )
     # already-deleted rows (any representation) must not re-match
-    eq = [d for d in deletes if d.get("content") == 2]
-    pos, dv = split_position_deletes(deletes)
-    if eq:
-        df = _apply_equality_deletes(spark, df, data, eq, meta)
-    if pos:
-        df = _apply_position_deletes(spark, df, data, pos)
-    if dv:
-        df = apply_deletion_vectors(spark, df, data, dv)
+    df = _read_plan_with_identity(spark, table_dir, meta, data, deletes)
 
     matched = df.where(cond).select("__iceberg_file", "__iceberg_pos")
 
@@ -249,7 +237,7 @@ def write_deletion_vectors(
         est_new += 2 * int(r["n"]) + 40 * n_cont + 64
     data_seq = {d["file_path"]: d["_seq"] for d in data}
     live_dv: dict[str, list[dict]] = {}
-    for e in dv:
+    for e in split_position_deletes(deletes)[1]:
         ref = e.get("referenced_data_file")
         dseq = data_seq.get(ref)
         if dseq is not None and e["_seq"] >= dseq and ref in counts:
@@ -868,25 +856,3 @@ def _dv_delete_rows(spark, data_entries, dv_entries):
         _explode_dv_rows, "__iceberg_file string, __iceberg_pos bigint"
     )
     return dels, applicable
-
-
-def apply_deletion_vectors(spark, df_pos, data_entries, dv_entries):
-    """Merge-on-read for DV entries: decode each applicable bitmap
-    executor-side, explode to (file, pos) rows, anti-join the scan —
-    the same physical strategy as parquet position deletes, with the
-    bitmap explode replacing the delete-file scan (see
-    :func:`_dv_delete_rows`)."""
-    dels, applicable = _dv_delete_rows(spark, data_entries, dv_entries)
-    if dels is None:
-        return df_pos
-    # a DV entry's record_count is its bitmap cardinality (spec), so the
-    # exploded (file, pos) row count is known at plan time — same
-    # broadcast rule as the parquet position-delete side
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.scan import (
-        _maybe_broadcast_deletes,
-    )
-
-    dels = _maybe_broadcast_deletes(dels, applicable)
-    return df_pos.join(
-        dels, ["__iceberg_file", "__iceberg_pos"], "left_anti"
-    )

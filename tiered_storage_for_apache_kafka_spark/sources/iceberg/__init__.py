@@ -123,15 +123,12 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.merge import (  # noq
 
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.scan import (  # noqa: F401
     _NORM_FILE_RE,
-    _apply_equality_deletes,
-    _apply_position_deletes,
     _bounds_overlap,
     _empty_table_df,
     _plan_from_meta,
     _plan_snapshot,
     _read_plan_with_identity,
     _read_snapshot,
-    _read_with_positions,
     _resolve_bounds,
     plan_scan,
     read_iceberg_table,

@@ -30,10 +30,8 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.ocf import (
     write_avro_ocf,
 )
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.scan import (
-    _apply_equality_deletes,
-    _apply_position_deletes,
     _plan_snapshot,
-    _read_with_positions,
+    _read_plan_with_identity,
 )
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
     _advance_main,
@@ -198,33 +196,17 @@ def match_position_deletes(
         return None, ctx
     ctx["data"] = data
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    df = _read_with_positions(spark, table_dir, meta, [d["file_path"] for d in data])
+    # match against the MERGED view: a row already deleted (by any
+    # plane) must not re-match (duplicate delete rows are spec-legal but
+    # inflate added-position-deletes and every later delete scan)
+    df = _read_plan_with_identity(spark, table_dir, meta, data, deletes)
     if prep is not None:
         # caller-provided projection hook: lets the predicate reference
         # DERIVED columns (e.g. recomputed partition transforms for the
         # cell-membership match in replace_partitions) without the scan
-        # schema carrying them
+        # schema carrying them; it only adds columns, so applying it to
+        # the merged view selects the same rows
         df = prep(df)
-    # match against the MERGED view: a row already deleted (by either
-    # kind) must not re-match (duplicate delete rows are spec-legal but
-    # inflate added-position-deletes and every later delete scan)
-    from tiered_storage_for_apache_kafka_spark.sources.deletion_vectors import (
-        apply_deletion_vectors,
-        split_position_deletes,
-    )
-
-    eq = [d for d in deletes if d.get("content") == 2]
-    pos, dv = split_position_deletes(deletes)
-    if eq:
-        df = _apply_equality_deletes(
-            spark, df, data, eq, meta
-        )
-    if pos:
-        df = _apply_position_deletes(
-            spark, df, data, pos
-        )
-    if dv:
-        df = apply_deletion_vectors(spark, df, data, dv)
     return df.where(cond), ctx
 
 
@@ -1343,17 +1325,13 @@ def _convert_equality_deletes_once(
 
     from tiered_storage_for_apache_kafka_spark.sources.deletion_vectors import (
         _tombstone_superseded,
-        apply_deletion_vectors,
-        split_position_deletes,
     )
     from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
-        spec_field_type,
         spec_typed_cols,
     )
     from tiered_storage_for_apache_kafka_spark.sources.iceberg.scan import (
         _apply_eq_delete_group,
-        _apply_position_deletes,
-        _read_with_positions,
+        _eq_delete_groups,
     )
     from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
         _specs_by_id,
@@ -1374,57 +1352,26 @@ def _convert_equality_deletes_once(
     if not eqs or not data:
         return base
     schema_struct = _current_schema_struct(base)
-    id_to_name = {f["id"]: f["name"] for f in schema_struct["fields"]}
     specs_by_id = _specs_by_id(base)
     default_sid = int(_default_spec(base)["spec-id"])
 
-    df = _read_with_positions(
-        spark, table_dir, base, [d["file_path"] for d in data]
-    )
     # exclude rows ALREADY position-deleted (either plane): their
     # identity is covered; re-adding it would double-count the
     # position counter and inflate every later delete scan
-    others = [d for d in deletes if d.get("content") != 2]
-    pos, dv = split_position_deletes(others)
-    if pos:
-        df = _apply_position_deletes(spark, df, data, pos)
-    if dv:
-        df = apply_deletion_vectors(spark, df, data, dv)
-
-    # the rows each equality-delete group WOULD retract, with identity:
-    # per (key-column set, spec generation) — the same grouping the
-    # merge-on-read scan applies, inverted to a semi-join
-    from pyspark.sql.types import StructType
-
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.schema import (
-        iceberg_schema_to_spark,
+    df = _read_plan_with_identity(
+        spark, table_dir, base, data,
+        [d for d in deletes if d.get("content") != 2],
     )
 
-    table_spark = iceberg_schema_to_spark(schema_struct)
+    # the rows each equality-delete group WOULD retract, with identity:
+    # the merge-on-read scan's groups, inverted to semi-joins
     matches = None
-    for ids_tuple in sorted({tuple(d["equality_ids"]) for d in eqs}):
-        grp = [d for d in eqs if tuple(d["equality_ids"]) == ids_tuple]
-        eq_cols = [id_to_name[i] for i in ids_tuple]
-        # explicit CURRENT-schema key types: a promoted key column's
-        # older delete files hold narrower pages that inference would
-        # misread (same hardening as the merge-on-read scan)
-        eq_schema = StructType([table_spark[c] for c in eq_cols])
-        by_spec: dict[int, list[dict]] = {}
-        for d in grp:
-            by_spec.setdefault(
-                int(d.get("_spec_id", default_sid)), []
-            ).append(d)
-        for sid in sorted(by_spec):
-            spec = specs_by_id.get(sid) or _default_spec(base)
-            field_types = [
-                spec_field_type(f, schema_struct) for f in spec["fields"]
-            ]
-            m = _apply_eq_delete_group(
-                spark, df, data, by_spec[sid], eq_cols, spec["fields"],
-                field_types, id_to_name, join_type="left_semi",
-                eq_schema=eq_schema,
-            ).select("__iceberg_file", "__iceberg_pos")
-            matches = m if matches is None else matches.unionAll(m)
+    for eq_cols, spec, group in _eq_delete_groups(base, schema_struct, eqs):
+        m = _apply_eq_delete_group(
+            spark, df, data, group, eq_cols, spec, schema_struct,
+            join_type="left_semi",
+        ).select("__iceberg_file", "__iceberg_pos")
+        matches = m if matches is None else matches.unionAll(m)
     matches = matches.distinct()
 
     # write one sorted position-delete file per touched cell, under

@@ -31,19 +31,16 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
 )
 
 
-#: Max distinct (sequence, partition) delete-file groups folded into
-#: per-group literal scans before falling back to the metadata-frame
-#: broadcast-join shape; and max planned data files folded into a
-#: literal path->sequence map. Both bound PLAN size (each group is one
-#: scan branch; each file is two literals), not data size — at 100 TB
-#: a table with hundreds of live delete commits or >1k planned files
-#: keeps the join shape, which scales without plan bloat.
-_DELETE_LITERAL_GROUPS = int(
-    os.environ.get("SPARK_GRAFT_DELETE_LITERAL_GROUPS", "32")
-)
-_SEQ_LITERAL_FILES = int(
-    os.environ.get("SPARK_GRAFT_SEQ_LITERAL_FILES", "256")
-)
+#: Plan-size budget of :func:`_attach_file_meta`: the most literal
+#: values one attach folds into the plan as a map literal. Past it
+#: the metadata rides a broadcast-joined frame instead, whose plan
+#: stays the same size however many files the table has.
+_ATTACH_LITERALS = 512
+
+#: Delete rows (summed manifest ``record_count``) up to which
+#: :func:`_maybe_broadcast_deletes` broadcasts a delete set; a
+#: (file, pos) pair hashes to ~100 B, so this is a <=~100 MB relation.
+_BROADCAST_DELETE_ROWS = 1_000_000
 
 
 def _maybe_broadcast_deletes(dels, entries):
@@ -51,25 +48,114 @@ def _maybe_broadcast_deletes(dels, entries):
     plan's own manifest statistics prove it small: every planned delete
     entry carries ``record_count``, so the total number of delete rows
     is known at plan time without touching the data. Without the hint
-    the delete subtree bottoms out in a ``createDataFrame`` metadata
-    frame with unknown stats, the optimizer estimates it huge, and the
-    initial plan sort-merge-joins — shuffling and sorting the FULL data
-    scan on the join key before AQE can demote the join. The threshold
-    is rows-based and env-parameterised (a (file, pos) pair hashes to
-    ~100 B, so the default 1M rows is a <=~100 MB relation — safe on
-    any executor sizing); tables whose live delete set outgrows it fall
-    back to the planner's choice, which is the correct 100 TB shape."""
+    the delete subtree's statistics are unknown, the optimizer
+    estimates it huge, and the initial plan sort-merge-joins —
+    shuffling and sorting the FULL data scan on the join key before AQE
+    can demote the join. Delete sets past
+    :data:`_BROADCAST_DELETE_ROWS` (or with an entry lacking its count)
+    are left to the planner's choice, the correct shape at scale."""
     from pyspark.sql import functions as F
 
     counts = [e.get("record_count") for e in entries]
     if any(c is None for c in counts):
         return dels
-    limit = int(
-        os.environ.get("SPARK_GRAFT_DELETE_BROADCAST_ROWS", "1000000")
-    )
-    if sum(int(c) for c in counts) <= limit:
+    if sum(int(c) for c in counts) <= _BROADCAST_DELETE_ROWS:
         return F.broadcast(dels)
     return dels
+
+
+def _attach_file_meta(spark, df, key_col: str, by_path: dict, fields):
+    """Attach per-file planning metadata to ``df`` as new columns,
+    keyed by its file-path column ``key_col``: ``by_path`` maps a raw
+    file path to a tuple of values, ``fields`` names and types them as
+    ``(column, spark type)`` pairs.
+
+    This is the one attach every merge-on-read delete plane uses (the
+    equality-delete file's sequence number and partition tuple, the
+    position-delete file's sequence number, the data file's sequence
+    number). Up to :data:`_ATTACH_LITERALS` literal values it is a
+    map literal looked up per row — no extra job, no join;
+    past the budget it broadcast-joins a ``local_rows_df`` frame, whose
+    plan does not grow with the file count. Both forms give a path
+    missing from ``by_path`` null values (a left join), so they select
+    the same rows by construction."""
+    from pyspark.sql import functions as F
+
+    if len(by_path) * (1 + len(fields)) <= _ATTACH_LITERALS:
+        # one JSON string literal parsed under the map type: Catalyst
+        # folds it to a map literal at plan time, and it costs one
+        # py4j call where a create_map of F.lit columns costs several
+        # per value (2.5 s for 300 files, measured on four cores)
+        names = [n for n, _t in fields]
+        map_type = "map<string, struct<{}>>".format(
+            ", ".join(f"{n}: {t}" for n, t in fields)
+        )
+        lookup = F.element_at(
+            F.from_json(
+                F.lit(
+                    json.dumps(
+                        {p: dict(zip(names, v)) for p, v in by_path.items()}
+                    )
+                ),
+                map_type,
+            ),
+            F.col(key_col),
+        )
+        return df.select("*", *[lookup[n].alias(n) for n in names])
+    frame = local_rows_df(
+        spark,
+        [(path, *vals) for path, vals in sorted(by_path.items())],
+        ", ".join([f"{key_col} string"] + [f"{n} {t}" for n, t in fields]),
+    )
+    return df.join(F.broadcast(frame), key_col, "left")
+
+
+def _scope_by_path(entries: list[dict], scope) -> dict:
+    """``{delete file path: scope(entry)}`` over a plane's entries. A
+    path listed under two different scopes is refused: the spec gives
+    one delete file one sequence number and one partition tuple, and a
+    path-keyed attach could honour only one of them."""
+    out: dict = {}
+    for e in entries:
+        s = scope(e)
+        if out.setdefault(e["file_path"], s) != s:
+            raise ValueError(
+                f"delete file {e['file_path']} is live under two scopes: "
+                f"{out[e['file_path']]} and {s}"
+            )
+    return out
+
+
+def _eq_delete_groups(meta, schema_struct, eq_entries):
+    """Split live equality-delete entries into the groups one anti-join
+    (or semi-join) can apply: one per (``equality_ids``, partition spec)
+    pair, yielded as ``(eq_cols, spec, entries)``. Key sets may differ
+    between delete files (a delete on ``id`` next to one on ``v``), and
+    after spec evolution older delete files keep matching by the spec
+    they were committed with (their manifest's spec-id). The merge-on-read
+    scan chains the groups as anti-joins; ``convert_equality_deletes``
+    unions them as semi-joins."""
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
+        _default_spec,
+        _specs_by_id,
+    )
+
+    id_to_name = {f["id"]: f["name"] for f in schema_struct["fields"]}
+    specs = _specs_by_id(meta)
+    default = _default_spec(meta)
+    groups: dict[tuple, list[dict]] = {}
+    for d in eq_entries:
+        key = (
+            tuple(d["equality_ids"]),
+            int(d.get("_spec_id", default["spec-id"])),
+        )
+        groups.setdefault(key, []).append(d)
+    for ids, sid in sorted(groups):
+        yield (
+            [id_to_name[i] for i in ids],
+            specs.get(sid) or default,
+            groups[(ids, sid)],
+        )
 
 
 def _apply_equality_deletes(
@@ -82,18 +168,8 @@ def _apply_equality_deletes(
     STRICTLY greater than the data file's (vs <= for position deletes —
     an equality delete never touches rows committed with it or after
     it, which is what makes CDC upserts [delete key + re-append] safe
-    in one or adjacent commits).
-
-    Scale shape: delete files are small key sets — broadcast; the data
-    side attaches its per-file sequence number via a broadcast O(files)
-    map and anti-joins without re-shuffling the corpus."""
-    from pyspark.sql import functions as F
-
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-        _default_spec,
-        _specs_by_id,
-    )
-
+    in one or adjacent commits). One anti-join per
+    :func:`_eq_delete_groups` group, chained."""
     # resolve under the schema version of the snapshot being read
     # (schema_id; default current): a column DROPPED by a later DDL
     # commit still resolves for time-travel reads whose snapshot's eq
@@ -105,174 +181,95 @@ def _apply_equality_deletes(
             (s for s in meta.get("schemas", []) if s["schema-id"] == schema_id),
             schema_struct,
         )
-    id_to_name = {f["id"]: f["name"] for f in schema_struct["fields"]}
-    ids_set = {tuple(d["equality_ids"]) for d in eq_entries}
-    if len(ids_set) != 1:
-        raise NotImplementedError(
-            f"mixed equality_ids across delete files: {sorted(ids_set)}"
-        )
-    eq_cols = [id_to_name[i] for i in next(iter(ids_set))]
-    # the partition-scope match runs under the spec each delete file
-    # was committed with (its manifest's spec-id) — after spec
-    # evolution, older delete files keep matching by their own fields
-    specs = _specs_by_id(meta)
-    default_sid = _default_spec(meta)["spec-id"]
-    by_spec: dict[int, list[dict]] = {}
-    for d in eq_entries:
-        by_spec.setdefault(int(d.get("_spec_id", default_sid)), []).append(d)
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
-        spec_field_type,
-    )
-
-    # the delete files are read under an EXPLICIT schema typed from the
-    # CURRENT table schema: after an int->long promotion the live delete
-    # set mixes int32 and int64 key pages, which plain inference would
-    # misread (first-footer wins) — the explicit wider type up-casts old
-    # files in place, exactly like the data path
-    from pyspark.sql.types import StructType
-
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.schema import (
-        iceberg_schema_to_spark,
-    )
-
-    table_spark = iceberg_schema_to_spark(schema_struct)
-    eq_schema = StructType([table_spark[c] for c in eq_cols])
-    for sid in sorted(by_spec):
-        spec = specs.get(sid) or _default_spec(meta)
-        field_types = [
-            spec_field_type(f, schema_struct) for f in spec["fields"]
-        ]
+    for eq_cols, spec, group in _eq_delete_groups(
+        meta, schema_struct, eq_entries
+    ):
         df_pos = _apply_eq_delete_group(
-            spark, df_pos, data_entries, by_spec[sid], eq_cols,
-            spec["fields"], field_types, id_to_name, eq_schema=eq_schema,
+            spark, df_pos, data_entries, group, eq_cols, spec, schema_struct
         )
     return df_pos
 
 
 def _apply_eq_delete_group(
-    spark, df_pos, data_entries, eq_entries, eq_cols, spec_fields,
-    field_types, id_to_name, join_type: str = "left_anti",
-    eq_schema=None,
+    spark, df_pos, data_entries, eq_entries, eq_cols, spec, schema_struct,
+    join_type: str = "left_anti",
 ):
-    """One spec's equality-delete anti-join (see
-    :func:`_apply_equality_deletes`): the data side recomputes every
-    transformed spec field from its source column executor-side (same
-    kernel the writer and rewrite_data_files use), identity fields
-    match on the schema column directly, and the delete rows broadcast
-    with their per-file partition tuple + sequence number (columns
-    typed per spec field — string partition values included).
+    """One :func:`_eq_delete_groups` group's equality-delete join: the
+    data side recomputes every transformed spec field from its source
+    column executor-side (same kernel the writer and rewrite_data_files
+    use), identity fields match on the schema column directly, and the
+    group's delete files are ONE multi-path read carrying each file's
+    partition tuple and sequence number through
+    :func:`_attach_file_meta` (columns typed per spec field — string
+    partition values included). The data side attaches its per-file
+    sequence number the same way — or not at all when every planned
+    data file is provably OLDER than every delete (the strictly-greater
+    rule is then constant-true).
+
+    The delete files are read under an EXPLICIT schema typed from
+    ``schema_struct``: after an int->long promotion the live delete set
+    mixes int32 and int64 key pages, which plain inference would misread
+    (first-footer wins) — the explicit wider type up-casts old files in
+    place, exactly like the data path.
 
     ``join_type="left_semi"`` inverts the selection: the rows the
     deletes WOULD retract, with their ``(__iceberg_file,
     __iceberg_pos)`` identity — what :func:`deletes.
     convert_equality_deletes` materializes into position-delete
-    files.
-
-    Metadata attachment is folded to PLAN TIME where bounded (r14,
-    same rationale as :func:`_pos_delete_rows`): delete files sharing
-    a (sequence, partition tuple) share one scan branch carrying those
-    values as typed literals instead of a broadcast metadata join; the
-    data side's per-file sequence number attaches as a literal
-    path->seq map — or not at all when every planned data file is
-    provably OLDER than every delete (the strictly-greater rule is
-    then constant-true). Past the literal bounds, both fall back to
-    the broadcast-join shape."""
+    files."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
+        spec_field_type,
+    )
+
+    spec_fields = spec["fields"]
     part_names = [f["name"] for f in spec_fields]
-    del_reader = spark.read
-    if eq_schema is not None:
-        del_reader = del_reader.schema(eq_schema)
-    key_of = {
-        d["file_path"]: (
+    id_to_name = {f["id"]: f["name"] for f in schema_struct["fields"]}
+    table_spark = iceberg_schema_to_spark(schema_struct)
+    scope = _scope_by_path(
+        eq_entries,
+        lambda d: (
             int(d["_seq"]),
             tuple(d["partition"].get(n) for n in part_names),
-        )
-        for d in eq_entries
-    }
-    groups: dict[tuple, set] = {}
-    for p, k in key_of.items():
-        groups.setdefault(k, set()).add(p)
-    if len(groups) <= _DELETE_LITERAL_GROUPS:
-        parts_dfs = []
-        for (seq, pvals) in sorted(
-            groups, key=lambda k: (k[0], tuple(str(v) for v in k[1]))
-        ):
-            branch = del_reader.parquet(*sorted(groups[(seq, pvals)])).select(
-                *[F.col(c).alias(f"__eq_{c}") for c in eq_cols],
-                F.lit(seq).cast("bigint").alias("__iceberg_del_seq"),
-                *[
-                    F.lit(v).cast(field_types[i]).alias(
-                        f"__iceberg_del_part_{i}"
-                    )
-                    for i, v in enumerate(pvals)
-                ],
-            )
-            parts_dfs.append(branch)
-        dels = parts_dfs[0]
-        for b in parts_dfs[1:]:
-            dels = dels.unionByName(b)
-    else:
-        del_meta = local_rows_df(
-            spark,
-            sorted(
-                {
-                    (
-                        d["file_path"],
-                        d["_seq"],
-                        *[d["partition"].get(n) for n in part_names],
-                    )
-                    for d in eq_entries
-                }
-            ),
-            ", ".join(
-                ["__iceberg_dfile string", "__iceberg_del_seq bigint"]
-                + [
-                    f"__iceberg_del_part_{i} {t}"
-                    for i, t in enumerate(field_types)
-                ]
-            ),
-        )
-        dels = (
-            del_reader.parquet(*sorted({d["file_path"] for d in eq_entries}))
-            .select(
-                *[F.col(c).alias(f"__eq_{c}") for c in eq_cols],
-                _norm_file_expr(
-                    F.col("_metadata.file_path")
-                ).alias("__iceberg_dfile"),
-            )
-            .join(F.broadcast(del_meta), "__iceberg_dfile")
-        )
-    dels = _maybe_broadcast_deletes(dels, eq_entries)
+        ),
+    )
     data_seq = {d["file_path"]: int(d["_seq"]) for d in data_entries}
-    min_del_seq = min(seq for seq, _p in key_of.values())
+    min_del_seq = min(seq for seq, _p in scope.values())
     seq_clause = bool(data_seq) and max(data_seq.values()) >= min_del_seq
-    if not seq_clause:
-        # every planned data file predates every delete: the
-        # strictly-greater rule holds for all pairs, no attach at all
-        df2 = df_pos
-    elif len(data_seq) <= _SEQ_LITERAL_FILES:
-        seq_map = F.create_map(
-            *[
-                x
-                for f, s in sorted(data_seq.items())
-                for x in (F.lit(f), F.lit(s))
-            ]
-        )
-        df2 = df_pos.withColumn(
-            "__iceberg_data_seq",
-            F.element_at(seq_map, F.col("__iceberg_file")),
-        )
-    else:
-        df2 = df_pos.join(
-            F.broadcast(
-                local_rows_df(
-                    spark,
-                    [(d["file_path"], d["_seq"]) for d in data_entries],
-                    "__iceberg_file string, __iceberg_data_seq bigint",
-                )
+    fields = [
+        (f"__iceberg_del_part_{i}", spec_field_type(f, schema_struct))
+        for i, f in enumerate(spec_fields)
+    ]
+    if seq_clause:
+        fields.append(("__iceberg_del_seq", "bigint"))
+    dels = (
+        spark.read.schema(StructType([table_spark[c] for c in eq_cols]))
+        .parquet(*sorted(scope))
+        .select(
+            *[F.col(c).alias(f"__eq_{c}") for c in eq_cols],
+            _norm_file_expr(F.col("_metadata.file_path")).alias(
+                "__iceberg_dfile"
             ),
-            "__iceberg_file",
+        )
+    )
+    if fields:
+        dels = _attach_file_meta(
+            spark, dels, "__iceberg_dfile",
+            {
+                p: pvals + ((seq,) if seq_clause else ())
+                for p, (seq, pvals) in scope.items()
+            },
+            fields,
+        )
+    dels = _maybe_broadcast_deletes(dels.drop("__iceberg_dfile"), eq_entries)
+    df2 = df_pos
+    if seq_clause:
+        df2 = _attach_file_meta(
+            spark, df2, "__iceberg_file",
+            {p: (s,) for p, s in data_seq.items()},
+            [("__iceberg_data_seq", "bigint")],
         )
     part_cols = []
     computed: list[str] = []
@@ -758,7 +755,7 @@ def read_iceberg_table(
     Tables that carry position-delete files (a row-delta commit via
     :func:`commit_position_deletes`) are read merge-on-read: the scan
     anti-joins the delete set on (file, row position) — see
-    :func:`_apply_position_deletes`."""
+    :func:`_read_plan_with_identity`."""
     from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
         _default_spec,
     )
@@ -847,20 +844,25 @@ def _read_plan_with_identity(
     spark, table_dir: str, meta: dict, data: list[dict],
     deletes: list[dict], schema_id: int | None = None,
 ):
-    """Scan an explicit data-file plan with the (file, pos) identity
-    columns retained and the given delete files applied — the shared
-    core of snapshot reads and the changelog's plan-split scans
-    (deletes match per (file, pos) / per key, so applying them against
-    a SUBSET of the snapshot's data files is sound).
+    """The merged view of an explicit data-file plan: the planned files
+    scanned with the ``(__iceberg_file, __iceberg_pos)`` identity
+    columns retained and the given delete files applied — equality
+    deletes, then the parquet position-delete and DV planes. Every
+    reader of a merged view goes through here: snapshot and time-travel
+    reads, the changelog's plan-split scans, compaction, the
+    position-delete and DV match of a new delete commit, and
+    ``convert_equality_deletes`` (deletes match per (file, pos) / per
+    key, so applying them against a SUBSET of the snapshot's data files
+    is sound).
 
-    Two plan-shape rules (r14, guide §2.4): a delete plane whose
-    manifest ``record_count`` totals ZERO is skipped outright (its
-    anti-join subtree could never remove a row — entries with empty
-    delete files occur after converts/compactions); and the parquet
-    position-delete and DV planes FUSE into one anti-join — both
-    produce (file, pos) row sets, and set subtraction by the same key
-    is one union-then-anti-join, halving the broadcast builds when a
-    table carries both representations."""
+    Two plan-shape rules: a delete plane whose manifest
+    ``record_count`` totals ZERO is skipped outright (its anti-join
+    subtree could never remove a row — entries with empty delete files
+    occur after converts/compactions); and the parquet position-delete
+    and DV planes FUSE into one anti-join — both produce (file, pos)
+    row sets, and set subtraction by the same key is one
+    union-then-anti-join, halving the broadcast builds when a table
+    carries both representations."""
     from tiered_storage_for_apache_kafka_spark.sources.deletion_vectors import (
         _dv_delete_rows,
         split_position_deletes,
@@ -952,95 +954,41 @@ def _read_with_positions(
 
 
 def _pos_delete_rows(spark, data_entries, delete_entries):
-    """The snapshot's applicable position-delete rows as a
-    ``(__iceberg_file, __iceberg_pos)`` DataFrame, with the spec's
-    sequence-number rule — a position delete applies only to data
-    files whose data sequence number is <= the delete file's — folded
-    to PLAN TIME: both sequence maps are O(files) planning metadata the
-    driver already holds, so attaching them as broadcast-join frames
-    (the pre-r14 shape) paid two broadcast-build jobs per read for a
-    decision computable before the first job. Delete files sharing a
-    sequence number share one scan branch; a branch only carries a
-    NOT-IN filter when some planned data file is NEWER than its
-    deletes (rows appended after a delete are never retro-deleted).
-    Delete rows referencing unplanned files survive into the frame and
-    match nothing in the anti-join — same result, no metadata join.
-    Tables with more live delete commits than the literal-group bound
-    keep the join shape (plan size stays bounded at 100 TB)."""
+    """The applicable position-delete rows as a ``(__iceberg_file,
+    __iceberg_pos)`` DataFrame: ONE multi-path read of every delete
+    file, with the spec's sequence-number rule — a position delete
+    applies only to data files whose data sequence number is <= the
+    delete file's. When no planned data file is newer than the oldest
+    delete the rule holds for every pair and nothing is attached;
+    otherwise both sequence numbers attach per file through
+    :func:`_attach_file_meta` (the delete file's keyed by its own path,
+    the data file's by the path the delete row names) and filter the
+    rows. Delete rows referencing unplanned files match nothing in the
+    anti-join (or get a null data sequence number and are dropped) —
+    the same result either way."""
     from pyspark.sql import functions as F
 
-    by_seq: dict[int, set[str]] = {}
-    for d in delete_entries:
-        by_seq.setdefault(int(d["_seq"]), set()).add(d["file_path"])
-    if len(by_seq) > _DELETE_LITERAL_GROUPS:
-        return _pos_delete_rows_joined(spark, data_entries, delete_entries)
+    del_seq = _scope_by_path(delete_entries, lambda d: int(d["_seq"]))
     data_seq = {d["file_path"]: int(d["_seq"]) for d in data_entries}
-    parts = []
-    for s in sorted(by_seq):
-        df = spark.read.parquet(*sorted(by_seq[s])).select(
-            F.col("file_path").alias("__iceberg_file"),
-            F.col("pos").alias("__iceberg_pos"),
+    dels = spark.read.parquet(*sorted(del_seq)).select(
+        F.col("file_path").alias("__iceberg_file"),
+        F.col("pos").alias("__iceberg_pos"),
+        _norm_file_expr(F.col("_metadata.file_path")).alias(
+            "__iceberg_dfile"
+        ),
+    )
+    if max(data_seq.values(), default=0) > min(del_seq.values()):
+        dels = _attach_file_meta(
+            spark, dels, "__iceberg_dfile",
+            {p: (s,) for p, s in del_seq.items()},
+            [("__iceberg_del_seq", "bigint")],
         )
-        disallowed = sorted(f for f, ds in data_seq.items() if ds > s)
-        if disallowed:
-            df = df.where(~F.col("__iceberg_file").isin(disallowed))
-        parts.append(df)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _pos_delete_rows_joined(spark, data_entries, delete_entries):
-    """The broadcast-join form of :func:`_pos_delete_rows` — the shape
-    that stays plan-bounded when a table carries many live delete
-    commits (each literal group is a scan branch; hundreds would bloat
-    the plan more than two metadata broadcasts cost)."""
-    from pyspark.sql import functions as F
-
-    data_seq = local_rows_df(
-        spark,
-        [(d["file_path"], d["_seq"]) for d in data_entries],
-        "__iceberg_file string, __iceberg_data_seq bigint",
-    )
-    del_files = sorted({(d["file_path"], d["_seq"]) for d in delete_entries})
-    del_seq = local_rows_df(
-        spark,
-        del_files, "__iceberg_dfile string, __iceberg_del_seq bigint"
-    )
-    return (
-        spark.read.parquet(*[p for p, _ in del_files])
-        .select(
-            F.col("file_path").alias("__iceberg_file"),
-            F.col("pos").alias("__iceberg_pos"),
-            _norm_file_expr(
-                F.col("_metadata.file_path")
-            ).alias("__iceberg_dfile"),
-        )
-        .join(F.broadcast(del_seq), "__iceberg_dfile")
-        .join(F.broadcast(data_seq), "__iceberg_file")
-        .where(F.col("__iceberg_del_seq") >= F.col("__iceberg_data_seq"))
-        .select("__iceberg_file", "__iceberg_pos")
-    )
-
-
-def _apply_position_deletes(spark, df_pos, data_entries, delete_entries):
-    """Merge-on-read: anti-join the data scan against the snapshot's
-    position-delete rows on (data file path, row position) — see
-    :func:`_pos_delete_rows` for the plan-time sequence-number fold.
-
-    Scale shape: the delete parquet scan is a normal distributed read;
-    the final anti-join broadcasts the delete set when its manifest
-    ``record_count`` total proves it small and shuffles on (file, pos)
-    otherwise — the same physical strategy Spark's Iceberg source
-    picks."""
-    dels = _maybe_broadcast_deletes(
-        _pos_delete_rows(spark, data_entries, delete_entries),
-        delete_entries,
-    )
-    # callers drop __iceberg_file/__iceberg_pos once all delete layers
-    # have been applied
-    return df_pos.join(dels, ["__iceberg_file", "__iceberg_pos"], "left_anti")
+        dels = _attach_file_meta(
+            spark, dels, "__iceberg_file",
+            {p: (s,) for p, s in data_seq.items()},
+            [("__iceberg_data_seq", "bigint")],
+        ).where(F.col("__iceberg_del_seq") >= F.col("__iceberg_data_seq"))
+    return dels.select("__iceberg_file", "__iceberg_pos")
 
 
 # -- maintenance: time travel + snapshot expiration ---------------------------
