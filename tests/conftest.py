@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from tiered_storage_for_apache_kafka_spark.session import get_spark
@@ -15,11 +17,12 @@ def spark():
     spark.stop()
 
 
-@pytest.fixture
-def join_form(monkeypatch):
+@contextlib.contextmanager
+def join_form_attach():
     """Force every merge-on-read per-file metadata attach into its
-    broadcast-join form (literal budget 0). Yields the list of attach
-    calls made, so a test can assert that the form really ran."""
+    broadcast-join form (literal budget 0) for the duration of the
+    block. Yields the list of attach calls made, so a caller can
+    assert that the form really ran."""
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import scan
 
     calls = []
@@ -29,6 +32,21 @@ def join_form(monkeypatch):
         calls.append(args[2])
         return attach(*args, **kwargs)
 
-    monkeypatch.setattr(scan, "_ATTACH_LITERALS", 0)
-    monkeypatch.setattr(scan, "_attach_file_meta", counted)
-    yield calls
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(scan, "_ATTACH_LITERALS", 0)
+        mp.setattr(scan, "_attach_file_meta", counted)
+        yield calls
+
+
+@pytest.fixture
+def join_form():
+    """:func:`join_form_attach` over a whole test."""
+    with join_form_attach() as calls:
+        yield calls
+
+
+@pytest.fixture
+def join_form_block():
+    """:func:`join_form_attach` itself, for a test that runs only some
+    of its reads in the join form."""
+    return join_form_attach

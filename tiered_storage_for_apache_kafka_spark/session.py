@@ -21,41 +21,6 @@ import threading
 from pyspark.sql import SparkSession
 
 
-#: Default driver heap where physical memory allows it, in MiB.
-_DRIVER_MEM_MAX_MB = 24 * 1024
-
-#: Share of physical memory the default driver heap may take.
-_DRIVER_MEM_SHARE = 0.5
-
-
-def default_driver_memory(physical_bytes: int | None) -> str:
-    """The default ``spark.driver.memory``: 24g, capped at half of
-    physical memory.
-
-    ``local[N]`` runs everything in the driver JVM: executors' working
-    memory, every persisted family cache, and shuffle buffers all share
-    this heap. 8g GC-thrashed at sf0.1 (random 5-8 s spikes on
-    otherwise sub-second queries); 24g keeps full-run GC quiet on a
-    128 GiB box. On a smaller host 24g exceeds the machine, and the
-    kernel may kill the JVM before the heap is ever full: the test
-    suite's JVM reached 8.1 GB RSS on a 16 GB, four-core host with the
-    Python workers and the test process alongside. Half of physical
-    memory leaves them the other half. With ``physical_bytes`` unknown
-    (None) the default stays 24g. On a real cluster this knob is
-    per-executor memory territory and the default is irrelevant."""
-    if not physical_bytes:
-        return f"{_DRIVER_MEM_MAX_MB}m"
-    cap = int(physical_bytes * _DRIVER_MEM_SHARE) >> 20
-    return f"{min(_DRIVER_MEM_MAX_MB, cap)}m"
-
-
-def _physical_memory_bytes() -> int | None:
-    try:
-        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    except (AttributeError, OSError, ValueError):
-        return None
-
-
 def get_spark(
     app_name: str = "tiered-storage-spark",
     master: str | None = None,
@@ -117,12 +82,13 @@ def get_spark(
         # pruning plane (r10) needs the exact micros min/max INT64
         # publishes
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        # see default_driver_memory; SPARK_GRAFT_DRIVER_MEM overrides
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-            or default_driver_memory(_physical_memory_bytes()),
-        )
+        # local[N] runs everything in the driver JVM: executors' working
+        # memory, every persisted family cache, and shuffle buffers all
+        # share this heap. 8g GC-thrashed at sf0.1 (random 5-8s spikes on
+        # otherwise sub-second queries); 24g keeps full-run GC quiet on a
+        # 128 GiB box. On a real cluster this knob is per-executor memory
+        # territory and the default is irrelevant.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         # the sharded test suite runs 7 concurrent local JVMs on 32
         # cores; under that load a freshly forked Python worker can
         # miss the default 15 s connect-back window (observed once:
