@@ -20,7 +20,7 @@ def spark():
 @contextlib.contextmanager
 def join_form_attach():
     """Force every merge-on-read per-file metadata attach into its
-    broadcast-join form (literal budget 0) for the duration of the
+    broadcast-join form (attach budget 0) for the duration of the
     block. Yields the list of attach calls made, so a caller can
     assert that the form really ran."""
     from tiered_storage_for_apache_kafka_spark.sources.iceberg import scan
@@ -33,7 +33,7 @@ def join_form_attach():
         return attach(*args, **kwargs)
 
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(scan, "_ATTACH_LITERALS", 0)
+        mp.setattr(scan, "_ATTACH_PROBES", 0)
         mp.setattr(scan, "_attach_file_meta", counted)
         yield calls
 

@@ -1045,19 +1045,24 @@ class TestWriteAuditPublish:
 
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        "test_commit_and_read",
-        "test_sequence_rule_new_appends_not_retro_deleted",
-        "test_second_dv_commit_unions",
-        "test_rematch_skips_dv_deleted_rows",
-        "test_time_travel_sees_pre_dv_rows",
-    ],
-)
-def test_dv_reads_in_join_form(spark, table, join_form, name):
-    """The DV and position-delete read tests above with the literal
-    budget at 0. The DV plane filters its entries at plan time and
-    attaches nothing, so this guards the fused position/DV anti-join
-    rather than a second attach form."""
-    getattr(TestDeletionVectors(), name)(spark, table)
+def test_position_and_dv_planes_fuse_in_join_form(spark, table, join_form):
+    """Position deletes, a newer append, then DVs, with the attach
+    budget at 0: the position plane attaches its sequence numbers as a
+    broadcast frame (the append is newer than the deletes), and the
+    fused position/DV anti-join keeps the appended rows the position
+    deletes must not touch."""
+    from tiered_storage_for_apache_kafka_spark.sources.deletion_vectors import (
+        commit_deletion_vectors,
+    )
+    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
+        commit_position_deletes,
+    )
+
+    commit_position_deletes(spark, table, "v < 10", now_ms=2_000)
+    _append_batch(spark, table, 1000, 1020, 3_000)
+    commit_deletion_vectors(spark, table, "v % 10 = 5", now_ms=4_000)
+    assert _values(spark, table) == [
+        v for v in list(range(10, 200)) + list(range(1000, 1020))
+        if v % 10 != 5
+    ]
+    assert join_form

@@ -29,7 +29,7 @@ def _plan(df) -> str:
 
 
 def _has_metadata_frame(plan: str) -> bool:
-    return "ExistingRDD" in plan or "LogicalRDD" in plan
+    return "Generate inline" in plan
 
 
 def _ids(spark, tdir) -> list[int]:
@@ -70,52 +70,51 @@ def test_mixed_key_equality_deletes_read_before_conversion(spark):
 
 
 def _banded_table(spark, n_files: int) -> str:
-    """``n_files`` data files in ``n_files`` appends (one per commit),
-    position deletes over all of them, then one more append — so the
-    newest data file is newer than the deletes and the position plane
-    must attach sequence numbers."""
+    """``n_files`` data files in ``n_files`` appends (one per commit):
+    a position delete after the first, another over all of them after
+    the last — so ``n_files - 1`` data files are newer than the oldest
+    delete and the position plane must attach their sequence numbers."""
     tdir = tempfile.mkdtemp(prefix="mor-banded-")
-    schema = None
     for b in range(n_files):
         df = spark.range(b * 10, b * 10 + 10).select(
             F.col("id"), (F.col("id") * 2).alias("v")
         ).coalesce(1)
         df.write.parquet(tdir, mode="append")
-        schema = df.schema
-        commit_append(tdir, schema, now_ms=1_000 + b)
-    commit_position_deletes(spark, tdir, "id % 4 = 1", now_ms=5_000)
-    df = spark.range(1000, 1010).select(
-        F.col("id"), (F.col("id") * 2).alias("v")
-    ).coalesce(1)
-    df.write.parquet(tdir, mode="append")
-    commit_append(tdir, schema, now_ms=6_000)
+        commit_append(tdir, df.schema, now_ms=1_000 + 10 * b)
+        if b == 0:
+            commit_position_deletes(spark, tdir, "id % 4 = 1", now_ms=1_005)
+    commit_position_deletes(spark, tdir, "id % 4 = 2", now_ms=5_000)
     return tdir
 
 
 def test_position_plane_takes_join_form_past_budget(spark, monkeypatch):
-    """The literal budget bounds the plan: with the budget below the
-    table's data-file count, the position plane's sequence numbers
-    ride a broadcast-joined frame, and the rows are those of the
+    """The budget counts map-key comparisons: the 18 delete rows look
+    up the 5 data files newer than the oldest delete, 90 comparisons.
+    At a budget of 90 that attach is a map literal; one below, it
+    rides a broadcast-joined frame, and the rows are those of the
     literal form."""
     n_files = 6
     tdir = _banded_table(spark, n_files)
-    expected = sorted(
-        [i for i in range(n_files * 10) if i % 4 != 1] + list(range(1000, 1010))
-    )
+    expected = [
+        i for i in range(n_files * 10)
+        if i % 4 != 2 and not (i < 10 and i % 4 == 1)
+    ]
     literal = read_iceberg_table(spark, tdir)
     assert not _has_metadata_frame(_plan(literal))
     assert sorted(r["id"] for r in literal.collect()) == expected
-    monkeypatch.setattr(scan, "_ATTACH_LITERALS", n_files)
+    monkeypatch.setattr(scan, "_ATTACH_PROBES", 90)
+    assert not _has_metadata_frame(_plan(read_iceberg_table(spark, tdir)))
+    monkeypatch.setattr(scan, "_ATTACH_PROBES", 89)
     joined = read_iceberg_table(spark, tdir)
     assert _has_metadata_frame(_plan(joined))
     assert sorted(r["id"] for r in joined.collect()) == expected
 
 
-@pytest.mark.parametrize("budget", [scan._ATTACH_LITERALS, 0])
+@pytest.mark.parametrize("budget", [scan._ATTACH_PROBES, 0])
 def test_delete_file_under_two_scopes_refused(spark, monkeypatch, budget):
     """A delete path carrying two (sequence, partition) scopes cannot
     be keyed by path: both attach forms refuse it at plan time."""
-    monkeypatch.setattr(scan, "_ATTACH_LITERALS", budget)
+    monkeypatch.setattr(scan, "_ATTACH_PROBES", budget)
     spec = {"spec-id": 0, "fields": [
         {"name": "grp", "transform": "identity", "source-id": 2,
          "field-id": 1000},

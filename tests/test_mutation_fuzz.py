@@ -63,7 +63,7 @@ JOIN_FORM_SEEDS = {7, 101}
 
 
 def _in_both_attach_forms(read, join_form_block, attach_calls):
-    """``read()`` at the default literal budget and again with every
+    """``read()`` at the default attach budget and again with every
     merge-on-read metadata attach in its broadcast-join form: both must
     agree. Appends the join-form attach calls to ``attach_calls``, so
     a program can assert that the join form really ran."""

@@ -643,8 +643,8 @@ def test_iceberg_merge_on_read_plan_shapes(spark, monkeypatch):
     columnar scan — no Python crossing anywhere. With equality and
     position deletes each committed twice and data newer than both,
     each plane reads its delete files in ONE scan; at the default
-    literal budget the per-file metadata is plan literals (no metadata
-    frame), at budget 0 a broadcast frame."""
+    attach budget the per-file metadata is plan literals (no metadata
+    frame), at budget 0 a broadcast frame built in the JVM."""
     from pyspark.sql import functions as F
 
     from tiered_storage_for_apache_kafka_spark.sources import iceberg as ice
@@ -693,16 +693,18 @@ def test_iceberg_merge_on_read_plan_shapes(spark, monkeypatch):
     ice.commit_append(tdir, newer.schema)
 
     def metadata_frame(plan):
-        return "ExistingRDD" in plan or "LogicalRDD" in plan
+        return "Generate inline" in plan
 
     literal = plan_of(ice.read_iceberg_table(spark, tdir))
     # one scan for the data files, one per delete plane
     assert literal.count("FileScan parquet") == 3, literal
     assert not metadata_frame(literal), literal
-    monkeypatch.setattr(scan, "_ATTACH_LITERALS", 0)
+    monkeypatch.setattr(scan, "_ATTACH_PROBES", 0)
     joined = plan_of(ice.read_iceberg_table(spark, tdir))
     assert joined.count("FileScan parquet") == 3, joined
     assert metadata_frame(joined), joined
+    # the frame is built in the JVM: no Python-fed RDD to broadcast
+    assert "ExistingRDD" not in joined and "LogicalRDD" not in joined
 
 
 def test_weighted_sample_pps_plan(spark):

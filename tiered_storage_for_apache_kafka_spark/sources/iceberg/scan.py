@@ -31,11 +31,17 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
 )
 
 
-#: Plan-size budget of :func:`_attach_file_meta`: the most literal
-#: values one attach folds into the plan as a map literal. Past it
-#: the metadata rides a broadcast-joined frame instead, whose plan
-#: stays the same size however many files the table has.
-_ATTACH_LITERALS = 512
+#: Budget of :func:`_attach_file_meta`'s map-literal form, in key
+#: comparisons: a map lookup scans the keys in turn, so one attach
+#: costs (files in the map) x (rows looked up). Past the budget a
+#: broadcast hash join is cheaper despite its extra job. Measured with
+#: ``scripts/attach_crossover.py`` on four cores (median of three reads
+#: per form): the map form led below 2e4 comparisons (8-file tables,
+#: 0.50-0.78 s against 0.61-0.91 s a read), the two tied from 1e5 to
+#: 3e7, and the join led from 2e8 (3.6 s against 2.6 s, 512 files) to
+#: 1.8x at 8e8 (1,024 files, 9.6 s against 5.4 s). The budget sits
+#: inside the tie.
+_ATTACH_PROBES = 1_000_000
 
 #: Delete rows (summed manifest ``record_count``) up to which
 #: :func:`_maybe_broadcast_deletes` broadcasts a delete set; a
@@ -64,32 +70,37 @@ def _maybe_broadcast_deletes(dels, entries):
     return dels
 
 
-def _attach_file_meta(spark, df, key_col: str, by_path: dict, fields):
+def _attach_file_meta(
+    spark, df, key_col: str, by_path: dict, fields, row_entries
+):
     """Attach per-file planning metadata to ``df`` as new columns,
     keyed by its file-path column ``key_col``: ``by_path`` maps a raw
     file path to a tuple of values, ``fields`` names and types them as
-    ``(column, spark type)`` pairs.
+    ``(column, spark type)`` pairs, and ``row_entries`` are the
+    manifest entries of the files ``df`` reads, whose ``record_count``
+    sum is the number of rows looked up.
 
     This is the one attach every merge-on-read delete plane uses (the
     equality-delete file's sequence number and partition tuple, the
     position-delete file's sequence number, the data file's sequence
-    number). Up to :data:`_ATTACH_LITERALS` literal values it is a
-    map literal looked up per row — no extra job, no join;
-    past the budget it broadcast-joins a ``local_rows_df`` frame, whose
-    plan does not grow with the file count. Both forms give a path
-    missing from ``by_path`` null values (a left join), so they select
-    the same rows by construction."""
+    number). While files x rows stays within :data:`_ATTACH_PROBES` it
+    is a map literal looked up per row — no extra job, no join; past
+    it, or with a row count unknown, it broadcast-joins the same
+    metadata as a frame of rows, whose lookup is a hash probe. Both
+    forms give a path missing from ``by_path`` null values (a left
+    join), so they select the same rows by construction."""
     from pyspark.sql import functions as F
 
-    if len(by_path) * (1 + len(fields)) <= _ATTACH_LITERALS:
+    names = [n for n, _t in fields]
+    types = ", ".join(f"{n}: {t}" for n, t in fields)
+    counts = [e.get("record_count") for e in row_entries]
+    if None not in counts and (
+        len(by_path) * sum(int(c) for c in counts) <= _ATTACH_PROBES
+    ):
         # one JSON string literal parsed under the map type: Catalyst
         # folds it to a map literal at plan time, and it costs one
         # py4j call where a create_map of F.lit columns costs several
         # per value (2.5 s for 300 files, measured on four cores)
-        names = [n for n, _t in fields]
-        map_type = "map<string, struct<{}>>".format(
-            ", ".join(f"{n}: {t}" for n, t in fields)
-        )
         lookup = F.element_at(
             F.from_json(
                 F.lit(
@@ -97,15 +108,27 @@ def _attach_file_meta(spark, df, key_col: str, by_path: dict, fields):
                         {p: dict(zip(names, v)) for p, v in by_path.items()}
                     )
                 ),
-                map_type,
+                f"map<string, struct<{types}>>",
             ),
             F.col(key_col),
         )
         return df.select("*", *[lookup[n].alias(n) for n in names])
-    frame = local_rows_df(
-        spark,
-        [(path, *vals) for path, vals in sorted(by_path.items())],
-        ", ".join([f"{key_col} string"] + [f"{n} {t}" for n, t in fields]),
+    # the same JSON as an array exploded into rows: the frame is built
+    # in the JVM, so its broadcast needs no Python worker
+    frame = spark.range(1, numPartitions=1).select(
+        F.inline(
+            F.from_json(
+                F.lit(
+                    json.dumps(
+                        [
+                            {key_col: p, **dict(zip(names, v))}
+                            for p, v in by_path.items()
+                        ]
+                    )
+                ),
+                f"array<struct<{key_col}: string, {types}>>",
+            )
+        )
     )
     return df.join(F.broadcast(frame), key_col, "left")
 
@@ -202,9 +225,11 @@ def _apply_eq_delete_group(
     partition tuple and sequence number through
     :func:`_attach_file_meta` (columns typed per spec field — string
     partition values included). The data side attaches its per-file
-    sequence number the same way — or not at all when every planned
-    data file is provably OLDER than every delete (the strictly-greater
-    rule is then constant-true).
+    sequence number the same way, but only for the data files NOT
+    older than every delete: an older file is retracted by any delete
+    it matches, so it attaches nothing and compares as older, and
+    when no planned file is that new the sequence clause is dropped
+    (the strictly-greater rule is then constant-true).
 
     The delete files are read under an EXPLICIT schema typed from
     ``schema_struct``: after an int->long promotion the live delete set
@@ -235,9 +260,15 @@ def _apply_eq_delete_group(
             tuple(d["partition"].get(n) for n in part_names),
         ),
     )
-    data_seq = {d["file_path"]: int(d["_seq"]) for d in data_entries}
     min_del_seq = min(seq for seq, _p in scope.values())
-    seq_clause = bool(data_seq) and max(data_seq.values()) >= min_del_seq
+    # a data file older than every delete is deleted by each one it
+    # matches: only the others need their sequence number attached
+    data_seq = {
+        d["file_path"]: int(d["_seq"])
+        for d in data_entries
+        if int(d["_seq"]) >= min_del_seq
+    }
+    seq_clause = bool(data_seq)
     fields = [
         (f"__iceberg_del_part_{i}", spec_field_type(f, schema_struct))
         for i, f in enumerate(spec_fields)
@@ -261,7 +292,7 @@ def _apply_eq_delete_group(
                 p: pvals + ((seq,) if seq_clause else ())
                 for p, (seq, pvals) in scope.items()
             },
-            fields,
+            fields, eq_entries,
         )
     dels = _maybe_broadcast_deletes(dels.drop("__iceberg_dfile"), eq_entries)
     df2 = df_pos
@@ -269,7 +300,7 @@ def _apply_eq_delete_group(
         df2 = _attach_file_meta(
             spark, df2, "__iceberg_file",
             {p: (s,) for p, s in data_seq.items()},
-            [("__iceberg_data_seq", "bigint")],
+            [("__iceberg_data_seq", "bigint")], data_entries,
         )
     part_cols = []
     computed: list[str] = []
@@ -289,7 +320,9 @@ def _apply_eq_delete_group(
             part_cols.append(df2[f["name"]])
     cond = None
     if seq_clause:
-        cond = df2["__iceberg_data_seq"] < dels["__iceberg_del_seq"]
+        cond = F.coalesce(
+            df2["__iceberg_data_seq"], F.lit(min_del_seq - 1)
+        ) < dels["__iceberg_del_seq"]
     for i, pc in enumerate(part_cols):
         clause = pc.eqNullSafe(dels[f"__iceberg_del_part_{i}"])
         cond = clause if cond is None else cond & clause
@@ -958,37 +991,56 @@ def _pos_delete_rows(spark, data_entries, delete_entries):
     __iceberg_pos)`` DataFrame: ONE multi-path read of every delete
     file, with the spec's sequence-number rule — a position delete
     applies only to data files whose data sequence number is <= the
-    delete file's. When no planned data file is newer than the oldest
-    delete the rule holds for every pair and nothing is attached;
-    otherwise both sequence numbers attach per file through
-    :func:`_attach_file_meta` (the delete file's keyed by its own path,
-    the data file's by the path the delete row names) and filter the
-    rows. Delete rows referencing unplanned files match nothing in the
-    anti-join (or get a null data sequence number and are dropped) —
-    the same result either way."""
+    delete file's. Only the data files newer than the oldest delete
+    can break the rule, so only they attach a sequence number — keyed
+    by the path the delete row names, through
+    :func:`_attach_file_meta` — and every other file compares as old
+    enough. The delete side's sequence number is a literal when the
+    plane's delete files share one, and otherwise attaches keyed by
+    each delete file's own path. When no planned data file is newer
+    than the oldest delete, nothing is attached. Delete rows
+    referencing unplanned files survive the filter and match nothing
+    in the anti-join."""
     from pyspark.sql import functions as F
 
     del_seq = _scope_by_path(delete_entries, lambda d: int(d["_seq"]))
-    data_seq = {d["file_path"]: int(d["_seq"]) for d in data_entries}
+    min_del_seq = min(del_seq.values())
+    # only a data file newer than some delete can escape one
+    newer = {
+        d["file_path"]: (int(d["_seq"]),)
+        for d in data_entries
+        if int(d["_seq"]) > min_del_seq
+    }
     dels = spark.read.parquet(*sorted(del_seq)).select(
         F.col("file_path").alias("__iceberg_file"),
         F.col("pos").alias("__iceberg_pos"),
-        _norm_file_expr(F.col("_metadata.file_path")).alias(
-            "__iceberg_dfile"
-        ),
     )
-    if max(data_seq.values(), default=0) > min(del_seq.values()):
+    if not newer:
+        return dels
+    del_seq_col = F.lit(min_del_seq)
+    if len(set(del_seq.values())) > 1:
+        # the row's own delete file decides; one shared sequence
+        # number spares every delete row the path normalization
         dels = _attach_file_meta(
-            spark, dels, "__iceberg_dfile",
+            spark,
+            dels.select(
+                "*",
+                _norm_file_expr(F.col("_metadata.file_path")).alias(
+                    "__iceberg_dfile"
+                ),
+            ),
+            "__iceberg_dfile",
             {p: (s,) for p, s in del_seq.items()},
-            [("__iceberg_del_seq", "bigint")],
+            [("__iceberg_del_seq", "bigint")], delete_entries,
         )
-        dels = _attach_file_meta(
-            spark, dels, "__iceberg_file",
-            {p: (s,) for p, s in data_seq.items()},
-            [("__iceberg_data_seq", "bigint")],
-        ).where(F.col("__iceberg_del_seq") >= F.col("__iceberg_data_seq"))
-    return dels.select("__iceberg_file", "__iceberg_pos")
+        del_seq_col = F.col("__iceberg_del_seq")
+    return _attach_file_meta(
+        spark, dels, "__iceberg_file", newer,
+        [("__iceberg_data_seq", "bigint")], delete_entries,
+    ).where(
+        del_seq_col
+        >= F.coalesce(F.col("__iceberg_data_seq"), F.lit(min_del_seq))
+    ).select("__iceberg_file", "__iceberg_pos")
 
 
 # -- maintenance: time travel + snapshot expiration ---------------------------
