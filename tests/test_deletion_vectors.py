@@ -921,7 +921,7 @@ class TestSortedCompaction:
         assert _values(spark, table) == list(range(200)) + list(range(1000, 1200))
 
     def test_sort_order_reaches_catalog_metadata(self):
-        from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
+        from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
             apply_updates,
         )
 

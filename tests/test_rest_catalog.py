@@ -13,12 +13,14 @@ import shutil
 
 import pytest
 
+from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
+    apply_updates,
+    check_requirements,
+)
 from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
     CommitConflictError,
     FakeRestCatalogServer,
     RestCatalogClient,
-    apply_updates,
-    check_requirements,
 )
 
 

@@ -1537,8 +1537,8 @@ def iceberg_tag_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag (`read_iceberg_table_ref`, the reproducible-training-corpus
     read) and the branch head, and the oracle recomputes both counts
     from raw `events`. Equal hashes prove the tag pinned exactly the
-    pre-append snapshot, survived the later commit (refs are preserved
-    by `_advance_main`), and resolves through the same pruned metadata
+    pre-append snapshot, survived the later commit (a commit's
+    `set-snapshot-ref` moves only its own ref), and resolves through the same pruned metadata
     scan as any time travel.
 
     Scale: ref resolution is one metadata read; both reads plan

@@ -64,6 +64,7 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
     _default_table_name,
     _plan_snapshot,
     _read_plan_with_identity,
+    commit_with_retries,
     manifest_entry_schema,
     write_avro_ocf,
 )
@@ -445,18 +446,12 @@ def commit_deletion_vectors(
     manifest entries carry the DV locator fields. Matching zero rows
     returns the current metadata unchanged. Catalog-routed commits
     re-plan and retry on lost races, like the v2 path."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
-    )
-
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     if catalog is not None and table_name is None:
         table_name = _default_table_name(table_dir)
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        version, base, table_name = _current_state_meta(
+
+    def attempt():
+        version, base, _name = _current_state_meta(
             table_dir, catalog, table_name
         )
         stats = write_deletion_vectors(
@@ -465,17 +460,12 @@ def commit_deletion_vectors(
         )
         if not stats:
             return base
-        try:
-            return _commit_dv_once(
-                table_dir, version, base, stats, partition_col, now_ms,
-                catalog, table_name,
-            )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
+        return _commit_dv_once(
+            table_dir, version, base, stats, partition_col, now_ms,
+            catalog, table_name,
+        )
+
+    return commit_with_retries(attempt, catalog, max_commit_retries)
 
 
 def _commit_dv_once(
@@ -490,10 +480,8 @@ def _commit_dv_once(
 ) -> dict:
     """One DV snapshot commit — the DV twin of iceberg._commit_deletes_
     once, sharing its downstream machinery via _finish_delete_commit."""
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
-        _finish_delete_commit,
-    )
     from tiered_storage_for_apache_kafka_spark.sources.iceberg.deletes import (
+        _finish_delete_commit,
         _resolve_partition_names,
     )
     from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
@@ -570,7 +558,7 @@ def _commit_dv_once(
     )
     return _finish_delete_commit(
         table_dir, version, base, stats, now_ms, catalog, table_name,
-        seq, snapshot_id, commit_uuid, manifest_path, manifest_len,
+        seq, commit_uuid, manifest_path, manifest_len,
         len(entries), prior_manifests=prior_manifests,
         removed_pos_deletes=removed_pos, summary_extra=summary_extra,
     )

@@ -49,19 +49,18 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.schema import (  # no
 )
 
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (  # noqa: F401
-    _advance_main,
+    _commit_requirements,
     _current_schema_struct,
     _current_state_meta,
     _default_table_name,
     _load_current_metadata,
     _load_prior_state,
-    _maintenance_requirements,
-    _maintenance_state,
     _parse_current_manifests,
     _prev_summary_counter,
     _prev_total_pos_deletes,
     _prev_total_records,
     _write_metadata_version,
+    commit_with_retries,
     read_table_metadata,
 )
 
@@ -90,7 +89,6 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (  #
 
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.commit import (  # noqa: F401
     _commit_append_once,
-    _commit_requirements,
     _schema_updates,
     commit_append,
     update_partition_spec,
@@ -148,7 +146,6 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.incremental import ( 
 )
 
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.refs import (  # noqa: F401
-    _commit_refs_local,
     create_ref,
     drop_ref,
     fast_forward,
@@ -158,7 +155,6 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.refs import (  # noqa
 
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.maintenance import (  # noqa: F401
     _expire_snapshots_once,
-    _finish_replace_commit,
     _rewrite_data_files_once,
     _rewrite_manifests_once,
     compute_ndv_stats,

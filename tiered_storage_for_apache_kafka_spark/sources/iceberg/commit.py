@@ -20,6 +20,7 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
     _leaf_field_ids,
     _stat_data_files,
     manifest_entry_schema,
+    match_or_add_sort_order,
     partition_field_summaries,
     spec_bound_widths,
     spec_typed_cols,
@@ -34,15 +35,97 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.schema import (
     spark_schema_to_iceberg,
 )
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-    _advance_main,
+    _commit_requirements,
     _current_schema_struct,
     _current_state_meta,
     _default_spec,
     _default_table_name,
     _load_prior_state,
     _prev_summary_counter,
-    _write_metadata_version,
+    commit_with_retries,
+    publish,
 )
+from tiered_storage_for_apache_kafka_spark.sources.puffin import (
+    FILE_LIST,
+    write_puffin,
+)
+
+
+def _snapshot_updates(
+    table_dir: str,
+    base: dict,
+    seq: int,
+    parent_id: int,
+    commit_uuid: str,
+    manifests: list[dict],
+    summary: dict,
+    now_ms: int,
+    ref: str = "main",
+    file_list: list[dict] | None = None,
+    stats_blobs=(),
+) -> list[dict]:
+    """The shared tail of every snapshot-producing commit: write the
+    manifest list (``manifests`` — the commit's new manifests first,
+    then the ones it carries over), build snapshot ``seq`` (snapshot ids
+    are the sequence number: deterministic, and any unique long is
+    spec-legal) on ``parent_id`` (-1 = none) under ``base``'s current
+    schema, and — unless ``file_list`` is None — write the snapshot's
+    statistics Puffin: a FILE_LIST blob (`SegmentManifestWriter.java:
+    35-112` parity) plus any ``stats_blobs``. Returns the commit's
+    updates: add-snapshot, set-snapshot-ref ``ref``, set-statistics."""
+    meta_dir = os.path.join(table_dir, "metadata")
+    list_path = os.path.join(meta_dir, f"snap-{seq}-1-{commit_uuid}.avro")
+    write_avro_ocf(
+        list_path,
+        MANIFEST_FILE_SCHEMA,
+        manifests,
+        {
+            "format-version": str(FORMAT_VERSION).encode(),
+            "snapshot-id": str(seq).encode(),
+            "sequence-number": str(seq).encode(),
+            "parent-snapshot-id": str(parent_id).encode(),
+        },
+    )
+    snapshot = {
+        "snapshot-id": seq,
+        "sequence-number": seq,
+        "timestamp-ms": now_ms,
+        "manifest-list": list_path,
+        "schema-id": base["current-schema-id"],
+        "summary": summary,
+    }
+    if parent_id != -1:
+        snapshot["parent-snapshot-id"] = parent_id
+    updates = [
+        {"action": "add-snapshot", "snapshot": snapshot},
+        {
+            "action": "set-snapshot-ref",
+            "ref-name": ref,
+            "type": "branch",
+            "snapshot-id": seq,
+        },
+    ]
+    if file_list is not None:
+        stats_path = os.path.join(meta_dir, f"stats-{seq}-{commit_uuid}.puffin")
+        stats = write_puffin(
+            stats_path,
+            [(FILE_LIST, json.dumps(file_list).encode())] + list(stats_blobs),
+            seq,
+            seq,
+        )
+        updates.append(
+            {
+                "action": "set-statistics",
+                "statistics": {
+                    "snapshot-id": seq,
+                    "statistics-path": stats_path,
+                    "file-size-in-bytes": stats["file_size"],
+                    "file-footer-size-in-bytes": stats["footer_size"],
+                    "blob-metadata": stats["blob_metadata"],
+                },
+            }
+        )
+    return updates
 
 
 def _build_spec_fields(
@@ -168,11 +251,6 @@ def commit_append(
     this call and its staged names are attempt-deterministic) — and
     per-micro-batch commit cost drops from O(table) to
     O(batch + manifests)."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
-    )
-
     meta_dir = os.path.join(table_dir, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
@@ -185,13 +263,13 @@ def commit_append(
             "manifest walk"
         )
 
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries
-    for _attempt in range(n_attempts):
-        if assume_new_files:
+    def attempt():
+        if not assume_new_files:
+            prior = _load_prior_state(table_dir, catalog, table_name)
+        else:
             # metadata.json only — no manifest-entry parsing
             try:
-                version, meta, table_name = _current_state_meta(
+                version, meta, _name = _current_state_meta(
                     table_dir, catalog, table_name
                 )
                 prior = {
@@ -202,21 +280,14 @@ def commit_append(
                 }
             except FileNotFoundError:
                 prior = None  # first (table-creating) commit
-        else:
-            prior = _load_prior_state(table_dir, catalog, table_name)
-        try:
-            return _commit_append_once(
-                table_dir, spark_schema, partition_col, now_ms, stats_blobs,
-                files, summary_extra, catalog, table_name, meta_dir, prior,
-                branch, partition_transform, partition_source, partition_spec,
-                properties_extra, sort_by,
-            )
-        except CommitConflictError as e:
-            last_err = e  # reload + rebase on the next iteration
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
+        return _commit_append_once(
+            table_dir, spark_schema, partition_col, now_ms, stats_blobs,
+            files, summary_extra, catalog, table_name, prior,
+            branch, partition_transform, partition_source, partition_spec,
+            properties_extra, sort_by,
+        )
+
+    return commit_with_retries(attempt, catalog, max_commit_retries)
 
 
 def _commit_append_once(
@@ -229,7 +300,6 @@ def _commit_append_once(
     summary_extra,
     catalog,
     table_name,
-    meta_dir: str,
     prior,
     branch: str | None = None,
     partition_transform: str = "identity",
@@ -246,7 +316,7 @@ def _commit_append_once(
             "the first (table-creating) commit on main"
         )
     if prior is None:
-        version = 1
+        version = 0  # this commit creates the table
         schema_struct, last_col = spark_schema_to_iceberg(spark_schema)
         # partition spec (spec "Partition Specs"/"Partition
         # Transforms"): an ORDERED field list — identity sources the
@@ -324,7 +394,13 @@ def _commit_append_once(
             for m in prior["manifests"]
             for e in m["entries"]
         }
-        version += 1
+    # ``base`` gathers this commit's own metadata changes (evolved
+    # schema, sort order) for planning; ``base0`` is what it publishes
+    # against, with the same changes expressed as updates
+    base0 = base
+    requirements = _commit_requirements(
+        None if prior is None else base0, base0, branch=branch
+    )
 
     spec = _default_spec(base)
     spec_cols = spec_typed_cols(spec, _current_schema_struct(base))
@@ -424,27 +500,16 @@ def _commit_append_once(
                 "last-column-id": new_last,
             }
 
+    schema_updates = _schema_updates(base) if schema_changed else []
     if not new_files:
-        if prior is None:  # empty table: metadata without a snapshot
-            if catalog is not None:
-                catalog.ensure_namespace()
-                catalog.create_table(table_name, base)
-            else:
-                _write_metadata_version(meta_dir, 1, base)
-        elif schema_changed:
+        if prior is None or schema_changed:
+            # an empty table (metadata without a snapshot), or a
             # metadata-only commit: the schema version advances even
             # though no data files entered
-            base = dict(base)
-            base["last-updated-ms"] = now_ms
-            if catalog is not None:
-                resp = catalog.commit_table(
-                    table_name,
-                    _commit_requirements(prior["metadata"]),
-                    _schema_updates(base),
-                    now_ms,
-                )
-                return resp["metadata"]
-            _write_metadata_version(meta_dir, version, base)
+            return publish(
+                table_dir, version, base0, requirements, schema_updates,
+                now_ms, catalog, table_name,
+            )
         return base
 
     # snapshot-log monotonicity: after a lost race the rebased commit
@@ -454,13 +519,14 @@ def _commit_append_once(
     newest_ts = max((s["timestamp-ms"] for s in base["snapshots"]), default=0)
     now_ms = max(now_ms, newest_ts)
     seq = base["last-sequence-number"] + 1
-    snapshot_id = seq  # deterministic; any unique long is spec-legal
+    snapshot_id = seq
     # staged metadata files get a per-attempt random token (real Iceberg
     # embeds a commit uuid in manifest/list names): two concurrent
     # catalog writers that loaded the same base state must never collide
     # on staged paths — a colliding loser would overwrite the winner's
     # already-committed manifest before its own commit is rejected.
     commit_uuid = uuid.uuid4().hex[:16]
+    meta_dir = os.path.join(table_dir, "metadata")
     entry_schema = manifest_entry_schema(spec_cols)
     schema_struct = _current_schema_struct(base)
     leaf_ids = _leaf_field_ids(schema_struct)
@@ -472,15 +538,9 @@ def _commit_append_once(
     sort_order_id = 0
     new_sort_order = None
     if sort_by:
-        from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (  # noqa: E501 (local: avoids a new top-level import cycle)
-            match_or_add_sort_order,
-        )
-
         base, sort_order_id, new_sort_order = match_or_add_sort_order(
             base, list(sort_by), schema_struct
         )
-        if int(base.get("default-sort-order-id", 0)) != sort_order_id:
-            base = {**base, "default-sort-order-id": sort_order_id}
     entries = [
         {
             "status": 1,  # ADDED
@@ -549,56 +609,21 @@ def _commit_append_once(
             s for s in base["snapshots"] if s["snapshot-id"] == parent_id
         )
         _, prior_manifest_files, _ = read_avro_ocf(cur["manifest-list"])
-    list_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro"
-    )
-    write_avro_ocf(
-        list_path,
-        MANIFEST_FILE_SCHEMA,
-        [manifest_file] + prior_manifest_files,
-        {
-            "format-version": str(FORMAT_VERSION).encode(),
-            "snapshot-id": str(snapshot_id).encode(),
-            "sequence-number": str(seq).encode(),
-            "parent-snapshot-id": str(parent_id).encode(),
-        },
-    )
-
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": base["current-schema-id"],
-        "summary": {
-            "operation": "append",
-            "added-data-files": str(len(new_files)),
-            "added-records": str(added_rows),
-            "total-records": str(
-                added_rows
-                + _prev_summary_counter(base, "total-records", parent_id)
-            ),
-            "total-position-deletes": str(
-                _prev_summary_counter(
-                    base, "total-position-deletes", parent_id
-                )
-            ),
-            "total-equality-deletes": str(
-                _prev_summary_counter(
-                    base, "total-equality-deletes", parent_id
-                )
-            ),
-            **{k: str(v) for k, v in (summary_extra or {}).items()},
-        },
+    summary = {
+        "operation": "append",
+        "added-data-files": str(len(new_files)),
+        "added-records": str(added_rows),
+        "total-records": str(
+            added_rows + _prev_summary_counter(base, "total-records", parent_id)
+        ),
+        "total-position-deletes": str(
+            _prev_summary_counter(base, "total-position-deletes", parent_id)
+        ),
+        "total-equality-deletes": str(
+            _prev_summary_counter(base, "total-equality-deletes", parent_id)
+        ),
+        **{k: str(v) for k, v in (summary_extra or {}).items()},
     }
-    if parent_id != -1:
-        snapshot["parent-snapshot-id"] = parent_id
-
-    from tiered_storage_for_apache_kafka_spark.sources.puffin import (
-        FILE_LIST,
-        write_puffin,
-    )
-
     file_list = [
         {
             "location": f["file_path"],
@@ -615,139 +640,32 @@ def _commit_append_once(
         }
         for f in new_files
     ]
-    stats_path = os.path.join(
-        meta_dir, f"stats-{snapshot_id}-{commit_uuid}.puffin"
+    updates = schema_updates + _snapshot_updates(
+        table_dir, base, seq, parent_id, commit_uuid,
+        [manifest_file] + prior_manifest_files, summary, now_ms,
+        ref=branch or "main", file_list=file_list,
+        stats_blobs=stats_blobs or (),
     )
-    stats = write_puffin(
-        stats_path,
-        [(FILE_LIST, json.dumps(file_list).encode())] + list(stats_blobs or []),
-        snapshot_id,
-        seq,
-    )
-
-    meta = dict(base)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = now_ms
     if properties_extra:
         # table-property updates ride the SAME atomic commit as the
         # snapshot (e.g. the streaming lineage's replay marker, which
         # must never drift from the snapshot it records)
-        meta["properties"] = {
-            **(base.get("properties") or {}),
-            **{k: str(v) for k, v in properties_extra.items()},
-        }
-    meta["snapshots"] = base["snapshots"] + [snapshot]
-    stat_entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": stats_path,
-        "file-size-in-bytes": stats["file_size"],
-        "file-footer-size-in-bytes": stats["footer_size"],
-        "blob-metadata": stats["blob_metadata"],
-    }
-    meta["statistics"] = base.get("statistics", []) + [stat_entry]
-    if branch is None:
-        meta["current-snapshot-id"] = snapshot_id
-        meta["refs"] = _advance_main(base.get("refs"), snapshot_id)
-        # the snapshot-log tracks current-snapshot-id changes only
-        # (spec) — staged branch commits stay out of TIMESTAMP AS OF
-        meta["snapshot-log"] = base["snapshot-log"] + [
-            {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-        ]
-    else:
-        refs = dict(base.get("refs") or {})
-        refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
-        meta["refs"] = refs
-    if prior is not None:
-        meta["metadata-log"] = base["metadata-log"] + [
+        updates.append(
             {
-                "timestamp-ms": base["last-updated-ms"],
-                "metadata-file": os.path.join(
-                    meta_dir, f"v{version - 1}.metadata.json"
-                ),
+                "action": "set-properties",
+                "updates": {k: str(v) for k, v in properties_extra.items()},
             }
-        ]
-
-    if catalog is not None:
-        # REST-catalog commit: manifests/stats are already staged in
-        # storage; only the metadata pointer moves, and only if our
-        # parent snapshot is still the head (optimistic concurrency)
-        requirements = _commit_requirements(
-            None if prior is None else prior["metadata"], base, branch=branch
         )
-        updates = []
-        if schema_changed:
-            updates += _schema_updates(base)
-        updates += [
-            {"action": "add-snapshot", "snapshot": snapshot},
-            {
-                "action": "set-snapshot-ref",
-                "ref-name": branch if branch is not None else "main",
-                "type": "branch",
-                "snapshot-id": snapshot_id,
-            },
-            {"action": "set-statistics", "statistics": stat_entry},
-        ]
-        if properties_extra:
-            updates += [
-                {
-                    "action": "set-properties",
-                    "updates": {
-                        k: str(v) for k, v in properties_extra.items()
-                    },
-                }
-            ]
-        if new_sort_order is not None:
-            updates += [
-                {"action": "add-sort-order", "sort-order": new_sort_order}
-            ]
-        if sort_by:
-            updates += [
-                {
-                    "action": "set-default-sort-order",
-                    "sort-order-id": sort_order_id,
-                }
-            ]
-        if prior is None:
-            catalog.ensure_namespace()
-            catalog.create_table(table_name, base)
-        resp = catalog.commit_table(table_name, requirements, updates, now_ms)
-        return resp["metadata"]
-
-    _write_metadata_version(meta_dir, version, meta)
-    return meta
-
-
-def _commit_requirements(
-    prior_meta: dict | None,
-    created_base: dict | None = None,
-    branch: str | None = None,
-) -> list[dict]:
-    """CommitTableRequest requirements: pin the table uuid and require
-    the ref being MOVED to still point at the parent snapshot we built
-    against (None = ref must not exist yet) — the optimistic-
-    concurrency contract, matching real Iceberg's UpdateRequirements:
-    a branch (WAP) commit asserts only its own branch head, so an
-    unrelated writer advancing main never spuriously conflicts a
-    staged commit; two concurrent writers to the SAME ref still
-    conflict rather than silently orphaning one snapshot."""
-    if prior_meta is None:
-        # table was just created in this commit; main must be unset
-        return [
-            {"type": "assert-table-uuid", "uuid": created_base["table-uuid"]},
-            {"type": "assert-ref-snapshot-id", "ref": "main", "snapshot-id": None},
-        ]
-    moved_ref = branch if branch is not None else "main"
-    head = (
-        (prior_meta.get("refs") or {}).get(moved_ref, {}).get("snapshot-id")
+    if new_sort_order is not None:
+        updates.append({"action": "add-sort-order", "sort-order": new_sort_order})
+    if sort_by:
+        updates.append(
+            {"action": "set-default-sort-order", "sort-order-id": sort_order_id}
+        )
+    return publish(
+        table_dir, version, base0, requirements, updates, now_ms, catalog,
+        table_name,
     )
-    return [
-        {"type": "assert-table-uuid", "uuid": prior_meta["table-uuid"]},
-        {
-            "type": "assert-ref-snapshot-id",
-            "ref": moved_ref,
-            "snapshot-id": head,
-        },
-    ]
 
 
 def update_partition_spec(
@@ -803,36 +721,16 @@ def update_partition_spec(
     if new_fields == cur_default["fields"]:
         return base  # no-op: already the default spec
     new_spec_id = max(s["spec-id"] for s in base["partition-specs"]) + 1
+    # add-spec raises last-partition-id to the new fields' ids
     new_spec = {"spec-id": new_spec_id, "fields": new_fields}
-    meta = dict(base)
-    meta["partition-specs"] = base["partition-specs"] + [new_spec]
-    meta["default-spec-id"] = new_spec_id
-    meta["last-partition-id"] = max(
-        last_pid, int(base.get("last-partition-id", 999))
+    return publish(
+        table_dir, version, base, _commit_requirements(base),
+        [
+            {"action": "add-spec", "spec": new_spec},
+            {"action": "set-default-spec", "spec-id": new_spec_id},
+        ],
+        now_ms, catalog, table_name,
     )
-    meta["last-updated-ms"] = now_ms
-    meta_dir = os.path.join(table_dir, "metadata")
-    if catalog is not None:
-        resp = catalog.commit_table(
-            table_name,
-            _commit_requirements(base),
-            [
-                {"action": "add-spec", "spec": new_spec},
-                {"action": "set-default-spec", "spec-id": new_spec_id},
-            ],
-            now_ms,
-        )
-        return resp["metadata"]
-    meta["metadata-log"] = base.get("metadata-log", []) + [
-        {
-            "timestamp-ms": base["last-updated-ms"],
-            "metadata-file": os.path.join(
-                meta_dir, f"v{version}.metadata.json"
-            ),
-        }
-    ]
-    _write_metadata_version(meta_dir, version + 1, meta)
-    return meta
 
 
 def _schema_updates(base: dict) -> list[dict]:
@@ -1310,12 +1208,14 @@ def update_table_schema(
     if evolved["fields"] == cur_schema["fields"]:
         return base  # only no-op verbs (e.g. make_optional on optional)
 
-    meta = dict(base)
-    meta["schemas"] = base["schemas"] + [evolved]
-    meta["current-schema-id"] = new_sid
-    meta["last-column-id"] = counter["id"]
-    meta["last-updated-ms"] = now_ms
-    prop_updates: dict | None = None
+    updates = [
+        {
+            "action": "add-schema",
+            "schema": evolved,
+            "last-column-id": counter["id"],
+        },
+        {"action": "set-current-schema", "schema-id": new_sid},
+    ]
     if rename or readded:
         # a naming-divergence event: bump the naming epoch so reads
         # resolve every file under ITS write epoch's names (schema.py
@@ -1330,35 +1230,11 @@ def update_table_schema(
             "engine.naming-epoch": str(epoch),
             "engine.naming-log": json.dumps(log),
             "schema.name-mapping.default": _name_mapping_json(
-                meta["schemas"]
+                base["schemas"] + [evolved]
             ),
         }
-        meta["properties"] = {**props, **prop_updates}
-    meta_dir = os.path.join(table_dir, "metadata")
-    if catalog is not None:
-        updates = [
-            {
-                "action": "add-schema",
-                "schema": evolved,
-                "last-column-id": counter["id"],
-            },
-            {"action": "set-current-schema", "schema-id": new_sid},
-        ]
-        if prop_updates:
-            updates.append(
-                {"action": "set-properties", "updates": prop_updates}
-            )
-        resp = catalog.commit_table(
-            table_name, _commit_requirements(base), updates, now_ms
-        )
-        return resp["metadata"]
-    meta["metadata-log"] = base.get("metadata-log", []) + [
-        {
-            "timestamp-ms": base["last-updated-ms"],
-            "metadata-file": os.path.join(
-                meta_dir, f"v{version}.metadata.json"
-            ),
-        }
-    ]
-    _write_metadata_version(meta_dir, version + 1, meta)
-    return meta
+        updates.append({"action": "set-properties", "updates": prop_updates})
+    return publish(
+        table_dir, version, base, _commit_requirements(base), updates,
+        now_ms, catalog, table_name,
+    )

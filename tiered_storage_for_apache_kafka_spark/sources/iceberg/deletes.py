@@ -16,13 +16,16 @@ from tiered_storage_for_apache_kafka_spark.sources.local_df import (
     local_rows_df,
 )
 
+from tiered_storage_for_apache_kafka_spark.sources.iceberg.commit import (
+    _snapshot_updates,
+)
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
-    MANIFEST_FILE_SCHEMA,
     _field_id,
     manifest_entry_schema,
     partition_field_summaries,
     spec_bound_widths,
     spec_names,
+    spec_typed_cols,
 )
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.ocf import (
     FORMAT_VERSION,
@@ -34,16 +37,17 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.scan import (
     _read_plan_with_identity,
 )
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-    _advance_main,
+    _commit_requirements,
     _current_schema_struct,
     _current_state_meta,
     _default_spec,
     _default_table_name,
-    _maintenance_requirements,
     _prev_summary_counter,
     _prev_total_pos_deletes,
     _prev_total_records,
-    _write_metadata_version,
+    _specs_by_id,
+    commit_with_retries,
+    publish,
 )
 
 
@@ -331,18 +335,12 @@ def commit_position_deletes(
     and retries; a lost attempt's staged delete files stay behind as
     unreferenced orphans, the same crash-safe failure mode as staged
     append manifests."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
-    )
-
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     if catalog is not None and table_name is None:
         table_name = _default_table_name(table_dir)
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        version, base, table_name = _current_state_meta(
+
+    def attempt():
+        version, base, _name = _current_state_meta(
             table_dir, catalog, table_name
         )
         stats = write_position_deletes(
@@ -351,18 +349,13 @@ def commit_position_deletes(
         )
         if not stats:
             return base
-        try:
-            return _commit_deletes_once(
-                table_dir, version, base, stats,
-                _resolve_partition_names(base, partition_col), now_ms,
-                catalog, table_name,
-            )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
+        return _commit_deletes_once(
+            table_dir, version, base, stats,
+            _resolve_partition_names(base, partition_col), now_ms,
+            catalog, table_name,
+        )
+
+    return commit_with_retries(attempt, catalog, max_commit_retries)
 
 
 def write_equality_deletes(
@@ -533,18 +526,12 @@ def commit_equality_deletes(
     (Iceberg spec: delete files with an unpartitioned spec apply
     table-wide). The CDC shape when a key's partition is unknown —
     e.g. an upsert whose partitioning timestamp changed."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
-    )
-
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     if catalog is not None and table_name is None:
         table_name = _default_table_name(table_dir)
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        version, base, table_name = _current_state_meta(
+
+    def attempt():
+        version, base, _name = _current_state_meta(
             table_dir, catalog, table_name
         )
         stats = write_equality_deletes(
@@ -554,19 +541,14 @@ def commit_equality_deletes(
         )
         if not stats:
             return base
-        try:
-            return _commit_deletes_once(
-                table_dir, version, base, stats,
-                [] if global_scope
-                else _resolve_partition_names(base, partition_col),
-                now_ms, catalog, table_name, global_scope=global_scope,
-            )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
+        return _commit_deletes_once(
+            table_dir, version, base, stats,
+            [] if global_scope
+            else _resolve_partition_names(base, partition_col),
+            now_ms, catalog, table_name, global_scope=global_scope,
+        )
+
+    return commit_with_retries(attempt, catalog, max_commit_retries)
 
 
 def _commit_deletes_once(
@@ -585,22 +567,14 @@ def _commit_deletes_once(
     # global deletes scope to the table's UNPARTITIONED spec,
     # registered on first use (never made the default — data keeps its
     # layout; only the delete file is table-wide)
+    spec = _unpartitioned_spec(base) if global_scope else _default_spec(base)
     spec_updates: list[dict] = []
-    if global_scope:
-        unp = _unpartitioned_spec(base)
-        if unp is None:
-            unp = {
-                "spec-id": max(
-                    s["spec-id"] for s in base["partition-specs"]
-                )
-                + 1,
-                "fields": [],
-            }
-            base = {
-                **base,
-                "partition-specs": base["partition-specs"] + [unp],
-            }
-            spec_updates = [{"action": "add-spec", "spec": unp}]
+    if spec is None:
+        spec = {
+            "spec-id": max(s["spec-id"] for s in base["partition-specs"]) + 1,
+            "fields": [],
+        }
+        spec_updates = [{"action": "add-spec", "spec": spec}]
     newest_ts = max((s["timestamp-ms"] for s in base["snapshots"]), default=0)
     now_ms = max(now_ms, newest_ts)  # snapshot-log monotonicity clamp
     seq = base["last-sequence-number"] + 1
@@ -631,12 +605,7 @@ def _commit_deletes_once(
         }
         for s in sorted(stats, key=lambda s: s["delete_path"])
     ]
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
-        spec_typed_cols,
-    )
-
     schema_struct = _current_schema_struct(base)
-    spec = _unpartitioned_spec(base) if global_scope else _default_spec(base)
     entry_cols = (
         spec_typed_cols(spec, schema_struct)
         if spec_names(spec) == list(partition_cols)
@@ -660,9 +629,8 @@ def _commit_deletes_once(
     )
     return _finish_delete_commit(
         table_dir, version, base, stats, now_ms, catalog, table_name,
-        seq, snapshot_id, commit_uuid, manifest_path, manifest_len,
-        len(entries), delete_spec_id=spec["spec-id"],
-        extra_updates=spec_updates,
+        seq, commit_uuid, manifest_path, manifest_len,
+        len(entries), delete_spec=spec, extra_updates=spec_updates,
     )
 
 
@@ -675,7 +643,6 @@ def _finish_delete_commit(
     catalog,
     table_name: str | None,
     seq: int,
-    snapshot_id: int,
     commit_uuid: str,
     manifest_path: str,
     manifest_len: int,
@@ -683,33 +650,30 @@ def _finish_delete_commit(
     prior_manifests: list[dict] | None = None,
     removed_pos_deletes: int = 0,
     summary_extra: dict | None = None,
-    delete_spec_id: int | None = None,
+    delete_spec: dict | None = None,
     extra_updates: list[dict] | None = None,
     delete_manifests: list[dict] | None = None,
     removed_eq_deletes: int = 0,
 ) -> dict:
     """Shared tail of every delete-flavored commit (v2 parquet
     row-deltas and v3-style deletion vectors): build the DELETE
-    manifest-list entry, chain the snapshot, bump the delete counters,
-    register the FILE_LIST statistics Puffin, and move the pointer
-    (catalog protocol or local version write).
+    manifest-list entry and the snapshot summary with the bumped delete
+    counters, then hand the snapshot to the shared tail and publish.
 
     ``prior_manifests`` overrides the carried-over manifest list (the
     DV supersede path rewrites prior delete manifests to tombstone the
     replaced DV entries); ``removed_pos_deletes`` is subtracted from
     the running total (a superseding DV's cardinality includes the
     union of the old one, which must not double-count);
-    ``delete_spec_id`` overrides the manifest's spec id (global
-    equality deletes scope to the unpartitioned spec);
-    ``extra_updates`` ride along in the catalog commit (local mode
-    picks the same change up from the caller-mutated ``base``); and
+    ``delete_spec`` overrides the manifest's spec (global equality
+    deletes scope to the unpartitioned spec); ``extra_updates`` ride
+    along in the same commit (e.g. that spec's add-spec); and
     ``delete_manifests`` replaces the single built manifest entry with
     caller-built manifest-file dicts — a manifest scopes to exactly ONE
     partition spec, so a commit spanning several spec GENERATIONS
     (rewrite_position_deletes over an evolved table) writes one
     manifest per generation and hands them all in here (then
     ``manifest_path``/``manifest_len``/``n_entries`` are unused)."""
-    meta_dir = os.path.join(table_dir, "metadata")
     n_del_rows = sum(int(s["n_rows"]) for s in stats)
     n_pos = sum(int(s["n_rows"]) for s in stats if not s.get("equality_ids"))
     n_eq = n_del_rows - n_pos
@@ -720,25 +684,16 @@ def _finish_delete_commit(
         # summary field order follows the stats' partition dicts
         # (written in spec order by every in-repo delete writer)
         part_names = list(parts[0]) if parts else []
-        manifest_sid = (
-            delete_spec_id
-            if delete_spec_id is not None
-            else _default_spec(base)["spec-id"]
-        )
-        manifest_spec = next(
-            sp
-            for sp in base["partition-specs"]
-            if sp["spec-id"] == manifest_sid
-        )
+        manifest_spec = delete_spec or _default_spec(base)
         new_manifests = [
             {
                 "manifest_path": manifest_path,
                 "manifest_length": manifest_len,
-                "partition_spec_id": manifest_sid,
+                "partition_spec_id": manifest_spec["spec-id"],
                 "content": 1,  # DELETES manifest
                 "sequence_number": seq,
                 "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
+                "added_snapshot_id": seq,
                 "added_data_files_count": n_entries,
                 "existing_data_files_count": 0,
                 "deleted_data_files_count": 0,
@@ -760,52 +715,23 @@ def _finish_delete_commit(
             for s in base["snapshots"]
             if s["snapshot-id"] == base["current-snapshot-id"]
         )
-        _, prior_manifest_files, _ = read_avro_ocf(cur["manifest-list"])
-    else:
-        prior_manifest_files = prior_manifests
-    list_path = os.path.join(meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro")
-    write_avro_ocf(
-        list_path,
-        MANIFEST_FILE_SCHEMA,
-        new_manifests + prior_manifest_files,
-        {
-            "format-version": str(FORMAT_VERSION).encode(),
-            "snapshot-id": str(snapshot_id).encode(),
-            "sequence-number": str(seq).encode(),
-            "parent-snapshot-id": str(base["current-snapshot-id"]).encode(),
-        },
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": base["current-schema-id"],
-        "parent-snapshot-id": base["current-snapshot-id"],
-        "summary": {
-            "operation": "delete",
-            "added-delete-files": str(n_entries),
-            "added-position-deletes": str(n_pos),
-            "added-equality-deletes": str(n_eq),
-            "total-position-deletes": str(
-                _prev_total_pos_deletes(base) + n_pos - removed_pos_deletes
-            ),
-            "total-equality-deletes": str(
-                _prev_summary_counter(base, "total-equality-deletes")
-                + n_eq
-                - removed_eq_deletes
-            ),
-            "total-records": str(_prev_total_records(base)),
-            **{k: str(v) for k, v in (summary_extra or {}).items()},
-        },
+        _, prior_manifests, _ = read_avro_ocf(cur["manifest-list"])
+    summary = {
+        "operation": "delete",
+        "added-delete-files": str(n_entries),
+        "added-position-deletes": str(n_pos),
+        "added-equality-deletes": str(n_eq),
+        "total-position-deletes": str(
+            _prev_total_pos_deletes(base) + n_pos - removed_pos_deletes
+        ),
+        "total-equality-deletes": str(
+            _prev_summary_counter(base, "total-equality-deletes")
+            + n_eq
+            - removed_eq_deletes
+        ),
+        "total-records": str(_prev_total_records(base)),
+        **{k: str(v) for k, v in (summary_extra or {}).items()},
     }
-
-    from tiered_storage_for_apache_kafka_spark.sources.puffin import (
-        FILE_LIST,
-        write_puffin,
-    )
-
-    stats_path = os.path.join(meta_dir, f"stats-{snapshot_id}-{commit_uuid}.puffin")
     file_list = [
         {
             "location": s["delete_path"],
@@ -821,51 +747,15 @@ def _finish_delete_commit(
         }
         for s in stats
     ]
-    pstats = write_puffin(
-        stats_path, [(FILE_LIST, json.dumps(file_list).encode())], snapshot_id, seq
+    updates = list(extra_updates or []) + _snapshot_updates(
+        table_dir, base, seq, base["current-snapshot-id"], commit_uuid,
+        new_manifests + prior_manifests, summary, now_ms,
+        file_list=file_list,
     )
-    stat_entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": stats_path,
-        "file-size-in-bytes": pstats["file_size"],
-        "file-footer-size-in-bytes": pstats["footer_size"],
-        "blob-metadata": pstats["blob_metadata"],
-    }
-
-    meta = dict(base)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = now_ms
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshots"] = base["snapshots"] + [snapshot]
-    meta["statistics"] = base.get("statistics", []) + [stat_entry]
-    meta["refs"] = _advance_main(base.get("refs"), snapshot_id)
-    meta["snapshot-log"] = base["snapshot-log"] + [
-        {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-    ]
-    meta["metadata-log"] = base.get("metadata-log", []) + [
-        {
-            "timestamp-ms": base["last-updated-ms"],
-            "metadata-file": os.path.join(meta_dir, f"v{version}.metadata.json"),
-        }
-    ]
-
-    if catalog is not None:
-        updates = list(extra_updates or []) + [
-            {"action": "add-snapshot", "snapshot": snapshot},
-            {
-                "action": "set-snapshot-ref",
-                "ref-name": "main",
-                "type": "branch",
-                "snapshot-id": snapshot_id,
-            },
-            {"action": "set-statistics", "statistics": stat_entry},
-        ]
-        resp = catalog.commit_table(
-            table_name, _maintenance_requirements(base), updates, now_ms
-        )
-        return resp["metadata"]
-    _write_metadata_version(meta_dir, version + 1, meta)
-    return meta
+    return publish(
+        table_dir, version, base, _commit_requirements(base), updates,
+        now_ms, catalog, table_name,
+    )
 
 
 def rewrite_position_deletes(
@@ -917,28 +807,17 @@ def rewrite_position_deletes(
     action between a mirror's checkpoints never forces a re-bootstrap.
     Mixed cells (organic positional files present) merge under the
     plain name and correctly keep the positional-delete refusal."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
-    )
-
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     if catalog is not None and table_name is None:
         table_name = _default_table_name(table_dir)
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        try:
-            return _rewrite_position_deletes_once(
-                spark, table_dir, now_ms, catalog, table_name,
-                max_rows_per_delete_file,
-            )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
+    return commit_with_retries(
+        lambda: _rewrite_position_deletes_once(
+            spark, table_dir, now_ms, catalog, table_name,
+            max_rows_per_delete_file,
+        ),
+        catalog,
+        max_commit_retries,
+    )
 
 
 def _rewrite_position_deletes_once(
@@ -953,9 +832,6 @@ def _rewrite_position_deletes_once(
 
     from tiered_storage_for_apache_kafka_spark.sources.deletion_vectors import (
         _tombstone_superseded,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
-        spec_typed_cols,
     )
 
     version, base, table_name = _current_state_meta(
@@ -1241,7 +1117,7 @@ def _rewrite_position_deletes_once(
     )
     return _finish_delete_commit(
         table_dir, version, base, merged, now_ms, catalog, table_name,
-        seq, snapshot_id, commit_uuid, "", 0,
+        seq, commit_uuid, "", 0,
         n_entries_total, prior_manifests=prior_manifests,
         removed_pos_deletes=removed_pos,
         summary_extra={"rewritten-delete-files": str(len(path_to_group))},
@@ -1289,28 +1165,17 @@ def convert_equality_deletes(
     generation) group, one Arrow write task per touched cell with the
     same ``max_rows_per_delete_file`` hot-cell cap as
     ``rewrite_position_deletes``. No driver row handling."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
-    )
-
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     if catalog is not None and table_name is None:
         table_name = _default_table_name(table_dir)
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        try:
-            return _convert_equality_deletes_once(
-                spark, table_dir, now_ms, catalog, table_name,
-                max_rows_per_delete_file,
-            )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
+    return commit_with_retries(
+        lambda: _convert_equality_deletes_once(
+            spark, table_dir, now_ms, catalog, table_name,
+            max_rows_per_delete_file,
+        ),
+        catalog,
+        max_commit_retries,
+    )
 
 
 def _convert_equality_deletes_once(
@@ -1326,15 +1191,9 @@ def _convert_equality_deletes_once(
     from tiered_storage_for_apache_kafka_spark.sources.deletion_vectors import (
         _tombstone_superseded,
     )
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
-        spec_typed_cols,
-    )
     from tiered_storage_for_apache_kafka_spark.sources.iceberg.scan import (
         _apply_eq_delete_group,
         _eq_delete_groups,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-        _specs_by_id,
     )
 
     version, base, table_name = _current_state_meta(
@@ -1572,7 +1431,7 @@ def _convert_equality_deletes_once(
     )
     return _finish_delete_commit(
         table_dir, version, base, converted, now_ms, catalog, table_name,
-        seq, snapshot_id, commit_uuid, "", 0,
+        seq, commit_uuid, "", 0,
         n_entries_total, prior_manifests=prior_manifests,
         removed_eq_deletes=removed_eq,
         summary_extra={

@@ -11,8 +11,10 @@ import json
 import os
 import uuid
 
+from tiered_storage_for_apache_kafka_spark.sources.iceberg.commit import (
+    _snapshot_updates,
+)
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
-    MANIFEST_FILE_SCHEMA,
     _STATS_KEYS,
     _column_stats_fields,
     _leaf_field_ids,
@@ -34,13 +36,15 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.scan import (
     _read_plan_with_identity,
 )
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-    _advance_main,
+    _commit_requirements,
     _current_schema_struct,
-    _maintenance_requirements,
-    _maintenance_state,
+    _current_state_meta,
+    _default_spec,
     _prev_summary_counter,
     _prev_total_pos_deletes,
-    _write_metadata_version,
+    _specs_by_id,
+    commit_with_retries,
+    publish,
 )
 
 
@@ -78,25 +82,14 @@ def expire_snapshots(
     (as ``now - age``) — so a table can DECLARE its retention policy
     once and every maintenance run honors it; an explicit argument
     always wins."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
+    return commit_with_retries(
+        lambda: _expire_snapshots_once(
+            table_dir, keep_last, now_ms, catalog, table_name,
+            older_than_ms,
+        ),
+        catalog,
+        max_commit_retries,
     )
-
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        try:
-            return _expire_snapshots_once(
-                table_dir, keep_last, now_ms, catalog, table_name,
-                older_than_ms,
-            )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
 
 
 def _expire_snapshots_once(
@@ -111,7 +104,7 @@ def _expire_snapshots_once(
 
     if keep_last is not None and keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    version, meta, table_name = _maintenance_state(table_dir, catalog, table_name)
+    version, meta, table_name = _current_state_meta(table_dir, catalog, table_name)
     snaps = meta["snapshots"]
     now_ms = int(_time.time() * 1000) if now_ms is None else now_ms
     # unset args resolve from the table's declared retention properties
@@ -239,66 +232,39 @@ def _expire_snapshots_once(
             if mf["manifest_path"] not in live_manifest_paths:
                 removed.append(mf["manifest_path"])
         removed.append(s["manifest-list"])
-    new_stats = []
-    for st in meta.get("statistics", []):
-        if st["snapshot-id"] in keep_ids:
-            new_stats.append(st)
-        else:
-            removed.append(st["statistics-path"])
+    removed += [
+        st["statistics-path"]
+        for st in meta.get("statistics", [])
+        if st["snapshot-id"] not in keep_ids
+    ]
 
-    meta_dir = os.path.join(table_dir, "metadata")
-    new_meta = dict(meta)
-    if removed_refs:
-        new_meta["refs"] = refs_all
-    new_meta["statistics"] = new_stats
-    new_meta["snapshot-log"] = [
-        e for e in meta["snapshot-log"] if e["snapshot-id"] in keep_ids
-    ]
-    new_meta["last-updated-ms"] = now_ms
-    # the superseded metadata version joins metadata-log (same chain
-    # maintenance as commit_append — external history walkers rely on it)
-    new_meta["metadata-log"] = meta.get("metadata-log", []) + [
-        {
-            "timestamp-ms": meta["last-updated-ms"],
-            "metadata-file": os.path.join(meta_dir, f"v{version}.metadata.json"),
-        }
-    ]
-    # oldest surviving snapshot loses its parent pointer if the parent
-    # was expired (spec: parent-snapshot-id may reference a missing
-    # snapshot only transiently; drop it for cleanliness)
-    new_meta["snapshots"] = [
-        (
-            {k: v for k, v in s.items() if k != "parent-snapshot-id"}
-            if s.get("parent-snapshot-id") not in keep_ids
-            else s
-        )
-        for s in keep
-    ]
     # COMMIT FIRST, clean up after: the new metadata version + hint are
     # durable before any file is removed, so a crash mid-delete leaves a
     # fully consistent table plus some not-yet-collected orphans (the
     # safe failure mode; the reverse order wedges the current metadata
-    # on already-deleted manifest lists)
-    if catalog is not None:
-        expired_ids = [s["snapshot-id"] for s in expired]
-        updates = [
-            {"action": "remove-snapshot-ref", "ref-name": rname}
-            for rname in removed_refs
-        ]
-        if expired_ids:
-            updates.append(
-                {"action": "remove-snapshots", "snapshot-ids": expired_ids}
-            )
-        updates += [
-            {"action": "remove-statistics", "snapshot-id": sid}
-            for sid in expired_ids
-        ]
-        resp = catalog.commit_table(
-            table_name, _maintenance_requirements(meta), updates, now_ms
+    # on already-deleted manifest lists). remove-snapshots also drops
+    # the expired snapshot-log entries and the oldest survivor's
+    # dangling parent pointer.
+    updates = [
+        {"action": "remove-snapshot-ref", "ref-name": rname}
+        for rname in removed_refs
+    ]
+    if expired:
+        updates.append(
+            {
+                "action": "remove-snapshots",
+                "snapshot-ids": [s["snapshot-id"] for s in expired],
+            }
         )
-        new_meta = resp["metadata"]
-    else:
-        _write_metadata_version(meta_dir, version + 1, new_meta)
+    updates += [
+        {"action": "remove-statistics", "snapshot-id": st["snapshot-id"]}
+        for st in meta.get("statistics", [])
+        if st["snapshot-id"] not in keep_ids
+    ]
+    new_meta = publish(
+        table_dir, version, meta, _commit_requirements(meta), updates,
+        now_ms, catalog, table_name,
+    )
     for path in removed:
         try:
             os.remove(path)
@@ -318,24 +284,13 @@ def rewrite_manifests(
     """See :func:`_rewrite_manifests_once`; in catalog mode a lost race
     against a concurrent append reloads the (now longer) manifest list
     and re-compacts — exactly the table state compaction exists for."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
+    return commit_with_retries(
+        lambda: _rewrite_manifests_once(
+            table_dir, now_ms, catalog, table_name, target_entries
+        ),
+        catalog,
+        max_commit_retries,
     )
-
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        try:
-            return _rewrite_manifests_once(
-                table_dir, now_ms, catalog, table_name, target_entries
-            )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
 
 
 def _rewrite_manifests_once(
@@ -365,7 +320,7 @@ def _rewrite_manifests_once(
     tables."""
     import time as _time
 
-    version, meta, table_name = _maintenance_state(table_dir, catalog, table_name)
+    version, meta, table_name = _current_state_meta(table_dir, catalog, table_name)
     if meta.get("current-snapshot-id", -1) == -1:
         return meta
     cur = next(
@@ -378,10 +333,6 @@ def _rewrite_manifests_once(
             + int(mf.get("existing_data_files_count") or 0)
             + int(mf.get("deleted_data_files_count") or 0)
         )
-
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-        _specs_by_id,
-    )
 
     specs = _specs_by_id(meta)
     # compactness is judged PER (content, spec): a multi-spec table is
@@ -670,119 +621,15 @@ def _rewrite_manifests_once(
             _prev_summary_counter(meta, "total-equality-deletes")
         ),
     }
-    return _finish_replace_commit(
-        table_dir, version, meta, now_ms, seq, snapshot_id, compact_uuid,
-        new_manifest_files, summary, file_list, catalog, table_name,
+    # the compacted manifests ARE the new list (nothing carried over)
+    updates = _snapshot_updates(
+        table_dir, meta, seq, meta["current-snapshot-id"], compact_uuid,
+        new_manifest_files, summary, now_ms, file_list=file_list,
     )
-
-
-def _finish_replace_commit(
-    table_dir: str,
-    version: int,
-    meta: dict,
-    now_ms: int,
-    seq: int,
-    snapshot_id: int,
-    commit_uuid: str,
-    new_manifest_files: list[dict],
-    summary: dict,
-    file_list: list[dict],
-    catalog,
-    table_name: str | None,
-    extra_updates: list[dict] | None = None,
-) -> dict:
-    """Shared tail of the REPLACE-flavored maintenance commits
-    (`rewrite_manifests`, `rewrite_data_files`): write the manifest
-    list, chain the snapshot, register the FILE_LIST statistics Puffin,
-    and move the pointer (catalog protocol or local version write).
-    ``extra_updates`` ride along in the catalog commit (e.g. the
-    add-sort-order a sorted rewrite records); local mode picks the
-    same changes up from the caller-mutated ``meta``."""
-    meta_dir = os.path.join(table_dir, "metadata")
-    list_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro"
+    return publish(
+        table_dir, version, meta, _commit_requirements(meta), updates,
+        now_ms, catalog, table_name,
     )
-    write_avro_ocf(
-        list_path,
-        MANIFEST_FILE_SCHEMA,
-        new_manifest_files,
-        {
-            "format-version": str(FORMAT_VERSION).encode(),
-            "snapshot-id": str(snapshot_id).encode(),
-            "sequence-number": str(seq).encode(),
-            "parent-snapshot-id": str(meta["current-snapshot-id"]).encode(),
-        },
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": meta["current-schema-id"],
-        "parent-snapshot-id": meta["current-snapshot-id"],
-        "summary": summary,
-    }
-    # per-current-snapshot statistics (the pattern every consumer of
-    # meta["statistics"] relies on): FILE_LIST of the live files
-    from tiered_storage_for_apache_kafka_spark.sources.puffin import (
-        FILE_LIST,
-        write_puffin,
-    )
-
-    stats_path = os.path.join(
-        meta_dir, f"stats-{snapshot_id}-{commit_uuid}.puffin"
-    )
-    stats = write_puffin(
-        stats_path, [(FILE_LIST, json.dumps(file_list).encode())], snapshot_id, seq
-    )
-
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["current-snapshot-id"] = snapshot_id
-    new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-    new_meta["statistics"] = meta.get("statistics", []) + [
-        {
-            "snapshot-id": snapshot_id,
-            "statistics-path": stats_path,
-            "file-size-in-bytes": stats["file_size"],
-            "file-footer-size-in-bytes": stats["footer_size"],
-            "blob-metadata": stats["blob_metadata"],
-        }
-    ]
-    new_meta["refs"] = _advance_main(meta.get("refs"), snapshot_id)
-    new_meta["snapshot-log"] = meta["snapshot-log"] + [
-        {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-    ]
-    new_meta["metadata-log"] = meta.get("metadata-log", []) + [
-        {
-            "timestamp-ms": meta["last-updated-ms"],
-            "metadata-file": os.path.join(meta_dir, f"v{version}.metadata.json"),
-        }
-    ]
-    if catalog is not None:
-        resp = catalog.commit_table(
-            table_name,
-            _maintenance_requirements(meta),
-            list(extra_updates or [])
-            + [
-                {"action": "add-snapshot", "snapshot": snapshot},
-                {
-                    "action": "set-snapshot-ref",
-                    "ref-name": "main",
-                    "type": "branch",
-                    "snapshot-id": snapshot_id,
-                },
-                {
-                    "action": "set-statistics",
-                    "statistics": new_meta["statistics"][-1],
-                },
-            ],
-            now_ms,
-        )
-        return resp["metadata"]
-    _write_metadata_version(meta_dir, version + 1, new_meta)
-    return new_meta
 
 
 def rewrite_data_files(
@@ -799,25 +646,14 @@ def rewrite_data_files(
     """See :func:`_rewrite_data_files_once`; in catalog mode a lost
     race against a concurrent writer reloads and re-compacts against
     the new head."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
+    return commit_with_retries(
+        lambda: _rewrite_data_files_once(
+            spark, table_dir, now_ms, catalog, table_name,
+            max_records_per_file, sort_by, zorder_by,
+        ),
+        catalog,
+        max_commit_retries,
     )
-
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        try:
-            return _rewrite_data_files_once(
-                spark, table_dir, now_ms, catalog, table_name,
-                max_records_per_file, sort_by, zorder_by,
-            )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
 
 
 def _rewrite_data_files_once(
@@ -864,7 +700,7 @@ def _rewrite_data_files_once(
     commit path."""
     import time as _time
 
-    version, meta, table_name = _maintenance_state(table_dir, catalog, table_name)
+    version, meta, table_name = _current_state_meta(table_dir, catalog, table_name)
     if meta.get("current-snapshot-id", -1) == -1:
         return meta
     cur = next(
@@ -874,11 +710,6 @@ def _rewrite_data_files_once(
     data, deletes = _plan_snapshot(cur, None, tombstones_out=raw_tombstones)
     if not data:
         return meta
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-        _default_spec,
-        _specs_by_id,
-    )
-
     # the rewrite writes under the table's DEFAULT spec — compaction is
     # how old-spec files migrate to the current layout after partition
     # evolution, exactly like the Java rewrite action
@@ -910,7 +741,7 @@ def _rewrite_data_files_once(
             match_or_add_sort_order,
         )
 
-        meta, sort_order_id, new_sort_order = match_or_add_sort_order(
+        _, sort_order_id, new_sort_order = match_or_add_sort_order(
             meta, sort_cols, schema_struct
         )
 
@@ -1272,14 +1103,16 @@ def _rewrite_data_files_once(
         }
         for f in new_files
     ]
-    return _finish_replace_commit(
-        table_dir, version, meta, now_ms, seq, snapshot_id, compact_uuid,
-        new_manifest_files, summary, file_list, catalog, table_name,
-        extra_updates=(
-            [{"action": "add-sort-order", "sort-order": new_sort_order}]
-            if new_sort_order is not None
-            else None
-        ),
+    # the rewrite's manifests (new data + tombstones) ARE the new list
+    updates = _snapshot_updates(
+        table_dir, meta, seq, meta["current-snapshot-id"], compact_uuid,
+        new_manifest_files, summary, now_ms, file_list=file_list,
+    )
+    if new_sort_order is not None:
+        updates.append({"action": "add-sort-order", "sort-order": new_sort_order})
+    return publish(
+        table_dir, version, meta, _commit_requirements(meta), updates,
+        now_ms, catalog, table_name,
     )
 
 
@@ -1327,7 +1160,7 @@ def remove_orphan_files(
     O(metadata + files) any orphan scan pays; nothing row-level."""
     import time as _time
 
-    _version, meta, table_name = _maintenance_state(
+    _version, meta, table_name = _current_state_meta(
         table_dir, catalog, table_name
     )
     now_ms = int(_time.time() * 1000) if now_ms is None else now_ms
@@ -1498,7 +1331,7 @@ def compute_ndv_stats(
         raise ValueError("compute_ndv_stats needs at least one column")
     if k < 2:
         raise ValueError("k must be >= 2 (the estimator divides by k-1)")
-    version, meta, table_name = _maintenance_state(
+    version, meta, table_name = _current_state_meta(
         table_dir, catalog, table_name
     )
     snap_id = int(meta.get("current-snapshot-id", -1))
@@ -1587,28 +1420,8 @@ def compute_ndv_stats(
         "file-footer-size-in-bytes": pstats["footer_size"],
         "blob-metadata": pstats["blob_metadata"],
     }
-    if catalog is not None:
-        resp = catalog.commit_table(
-            table_name,
-            _maintenance_requirements(meta),
-            [{"action": "set-statistics", "statistics": stat_entry}],
-            now_ms,
-        )
-        return resp["metadata"]
-    new_meta = dict(meta)
-    new_meta["statistics"] = [
-        st
-        for st in meta.get("statistics", [])
-        if int(st["snapshot-id"]) != snap_id
-    ] + [stat_entry]
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = meta.get("metadata-log", []) + [
-        {
-            "timestamp-ms": meta["last-updated-ms"],
-            "metadata-file": os.path.join(
-                meta_dir, f"v{version}.metadata.json"
-            ),
-        }
-    ]
-    _write_metadata_version(meta_dir, version + 1, new_meta)
-    return new_meta
+    return publish(
+        table_dir, version, meta, _commit_requirements(meta),
+        [{"action": "set-statistics", "statistics": stat_entry}], now_ms,
+        catalog, table_name,
+    )

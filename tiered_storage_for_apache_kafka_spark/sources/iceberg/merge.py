@@ -42,8 +42,10 @@ import os
 import time
 import uuid
 
+from tiered_storage_for_apache_kafka_spark.sources.iceberg.commit import (
+    _snapshot_updates,
+)
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
-    MANIFEST_FILE_SCHEMA,
     _column_stats_fields,
     _leaf_field_ids,
     _stat_data_files,
@@ -57,14 +59,22 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.ocf import (
     read_avro_ocf,
     write_avro_ocf,
 )
+from tiered_storage_for_apache_kafka_spark.sources.iceberg.schema import (
+    evolve_iceberg_schema,
+    guard_partition_source_promotion,
+    guard_readded_column,
+    iceberg_schema_to_spark,
+)
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-    _advance_main,
+    _commit_requirements,
     _current_schema_struct,
     _current_state_meta,
     _default_spec,
     _default_table_name,
     _prev_summary_counter,
-    _write_metadata_version,
+    apply_updates,
+    commit_with_retries,
+    publish,
 )
 
 # Debezium/Flink changelog op codes, first letter, lowercased:
@@ -399,20 +409,10 @@ def _merge_resolved(
     from tiered_storage_for_apache_kafka_spark.sources.iceberg.deletes import (
         write_equality_deletes,
     )
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.schema import (
-        evolve_iceberg_schema,
-        guard_partition_source_promotion,
-        guard_readded_column,
-        iceberg_schema_to_spark,
-    )
     from tiered_storage_for_apache_kafka_spark.sources.iceberg.writer import (
         _validate_append_shape,
         stage_data_files,
         write_iceberg_table,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
     )
     from tiered_storage_for_apache_kafka_spark.sources.schema_evolution import (
         conform,
@@ -561,87 +561,67 @@ def _merge_resolved(
     )
     staged_spec_id = int(_default_spec(base)["spec-id"])
 
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        try:
-            version, cur, table_name = _current_state_meta(
-                table_dir, catalog, table_name
+    def attempt():
+        version, base, _name = _current_state_meta(
+            table_dir, catalog, table_name
+        )
+        if int(_default_spec(base)["spec-id"]) != staged_spec_id:
+            raise ValueError(
+                "partition spec changed while this merge was "
+                "staging — the staged delete files are laid out "
+                "under the old spec; re-run the merge"
             )
-            if int(_default_spec(cur)["spec-id"]) != staged_spec_id:
-                raise ValueError(
-                    "partition spec changed while this merge was "
-                    "staging — the staged delete files are laid out "
-                    "under the old spec; re-run the merge"
-                )
-            # re-derive the evolution against the LIVE base each
-            # attempt: a rival writer may have evolved too (the staged
-            # parquet stays valid — evolution only adds/widens), but a
-            # rival assigning DIFFERENT field ids to this merge's key
-            # columns would orphan the staged delete files' embedded
-            # ids — that one aborts
-            cur, schema_updates = _reapply_schema_evolution(
-                cur, batch_schema_ev, evolve_iceberg_schema,
-                guard_partition_source_promotion,
+        # re-derive the evolution against the LIVE base each attempt: a
+        # rival writer may have evolved too (the staged parquet stays
+        # valid — evolution only adds/widens), but a rival assigning
+        # DIFFERENT field ids to this merge's key columns would orphan
+        # the staged delete files' embedded ids — that one aborts
+        schema_updates = _reapply_schema_evolution(base, batch_schema_ev)
+        cur_schema = (
+            schema_updates[0]["schema"]
+            if schema_updates
+            else _current_schema_struct(base)
+        )
+        ids_now = [
+            next(
+                (f["id"] for f in cur_schema["fields"] if f["name"] == k),
+                None,
             )
-            cur_schema = _current_schema_struct(cur)
-            ids_now = [
-                next(
-                    (f["id"] for f in cur_schema["fields"] if f["name"] == k),
-                    None,
-                )
-                for k in on
-            ]
-            if ids_now != staged_key_ids:
-                raise ValueError(
-                    "a concurrent schema change reassigned the merge "
-                    "key columns' field ids while this merge was "
-                    "staging; re-run the merge"
-                )
-            return _commit_merge_once(
-                table_dir, version, cur, new_files, del_stats, scoped,
-                now_ms, catalog, table_name, summary_extra,
-                properties_extra, branch, schema_updates=schema_updates,
+            for k in on
+        ]
+        if ids_now != staged_key_ids:
+            raise ValueError(
+                "a concurrent schema change reassigned the merge "
+                "key columns' field ids while this merge was "
+                "staging; re-run the merge"
             )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
+        return _commit_merge_once(
+            table_dir, version, base, new_files, del_stats, scoped,
+            now_ms, catalog, table_name, summary_extra,
+            properties_extra, branch, schema_updates,
+        )
+
+    return commit_with_retries(attempt, catalog, max_commit_retries)
 
 
-def _reapply_schema_evolution(
-    cur: dict, batch_schema, evolve_iceberg_schema,
-    guard_partition_source_promotion,
-) -> tuple[dict, list[dict]]:
-    """Apply the staged batch's schema evolution to the LIVE metadata
-    (each commit attempt re-derives it, so retries compose with rival
-    evolutions). Returns (updated-meta, catalog schema updates)."""
+def _reapply_schema_evolution(cur: dict, batch_schema) -> list[dict]:
+    """The staged batch's schema evolution against the LIVE metadata,
+    as add-schema + set-current-schema updates (each commit attempt
+    re-derives it, so retries compose with rival evolutions); empty
+    when the batch fits the current schema."""
     cur_schema = _current_schema_struct(cur)
     evolved, new_last, changed = evolve_iceberg_schema(
         cur_schema, batch_schema, cur["last-column-id"]
     )
     if not changed:
-        return cur, []
+        return []
     guard_partition_source_promotion(cur, cur_schema, evolved)
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.schema import (
-        guard_readded_column as _grc,
-    )
-
-    _grc(cur, cur_schema, evolved)
+    guard_readded_column(cur, cur_schema, evolved)
     new_sid = max(s["schema-id"] for s in cur["schemas"]) + 1
-    evolved = {**evolved, "schema-id": new_sid}
-    cur = {
-        **cur,
-        "schemas": cur["schemas"] + [evolved],
-        "current-schema-id": new_sid,
-        "last-column-id": new_last,
-    }
-    return cur, [
+    return [
         {
             "action": "add-schema",
-            "schema": evolved,
+            "schema": {**evolved, "schema-id": new_sid},
             "last-column-id": new_last,
         },
         {"action": "set-current-schema", "schema-id": new_sid},
@@ -671,44 +651,39 @@ def _commit_merge_once(
     table_name: str | None,
     summary_extra: dict | None,
     properties_extra: dict | None,
-    branch: str | None = None,
-    schema_updates: list | None = None,
+    branch: str | None,
+    schema_updates: list[dict],
 ) -> dict:
     """One attempt at the atomic merge snapshot: a DATA manifest for
     the staged batch files plus a DELETES manifest for the staged
     equality-delete files, both at the new sequence number, one
     snapshot with ``operation=overwrite`` (the spec's op for commits
     that logically replace rows). ``schema_updates`` (non-empty when
-    the batch evolved the schema) rides in the SAME commit — ``base``
-    already carries the evolved schema as current, so the manifests
-    and snapshot below stamp the new schema-id."""
+    the batch evolved the schema) rides in the SAME commit, and the
+    manifests and snapshot below stamp the evolved schema-id."""
     meta_dir = os.path.join(table_dir, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
+    updates = list(schema_updates)
+    loaded, base = base, apply_updates(base, schema_updates, now_ms)
     schema_struct = _current_schema_struct(base)
     leaf_ids = _leaf_field_ids(schema_struct)
 
     # global deletes scope to the table's UNPARTITIONED spec,
     # registered on first use (same posture as commit_equality_deletes:
     # data keeps its layout, only the delete plane is table-wide)
-    extra_updates: list[dict] = []
     if not scoped and del_stats:
-        unp = next(
+        del_spec = next(
             (s for s in base["partition-specs"] if not s["fields"]), None
         )
-        if unp is None:
-            unp = {
+        if del_spec is None:
+            del_spec = {
                 "spec-id": max(
                     s["spec-id"] for s in base["partition-specs"]
                 )
                 + 1,
                 "fields": [],
             }
-            base = {
-                **base,
-                "partition-specs": base["partition-specs"] + [unp],
-            }
-            extra_updates = [{"action": "add-spec", "spec": unp}]
-        del_spec = unp
+            updates.append({"action": "add-spec", "spec": del_spec})
     elif del_stats:
         del_spec = _default_spec(base)
     else:
@@ -859,58 +834,27 @@ def _commit_merge_once(
         s for s in base["snapshots"] if s["snapshot-id"] == parent_id
     )
     _, prior_manifest_files, _ = read_avro_ocf(cur["manifest-list"])
-    list_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro"
-    )
-    write_avro_ocf(
-        list_path,
-        MANIFEST_FILE_SCHEMA,
-        new_manifests + prior_manifest_files,
-        {
-            "format-version": str(FORMAT_VERSION).encode(),
-            "snapshot-id": str(snapshot_id).encode(),
-            "sequence-number": str(seq).encode(),
-            "parent-snapshot-id": str(parent_id).encode(),
-        },
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": base["current-schema-id"],
-        "parent-snapshot-id": parent_id,
-        "summary": {
-            "operation": "overwrite",
-            "added-data-files": str(len(stat_files)),
-            "added-records": str(added_rows),
-            "added-delete-files": str(len(del_stats)),
-            "added-equality-deletes": str(n_eq_rows),
-            # totals chain off the PARENT lineage (the branch head for
-            # a staged merge, main otherwise)
-            "total-records": str(_prev_summary_counter(
-                base, "total-records", parent_id
-            ) + added_rows),
-            "total-position-deletes": str(
-                _prev_summary_counter(
-                    base, "total-position-deletes", parent_id
-                )
-            ),
-            "total-equality-deletes": str(
-                _prev_summary_counter(
-                    base, "total-equality-deletes", parent_id
-                )
-                + n_eq_rows
-            ),
-            **{k: str(v) for k, v in (summary_extra or {}).items()},
-        },
+    summary = {
+        "operation": "overwrite",
+        "added-data-files": str(len(stat_files)),
+        "added-records": str(added_rows),
+        "added-delete-files": str(len(del_stats)),
+        "added-equality-deletes": str(n_eq_rows),
+        # totals chain off the PARENT lineage (the branch head for a
+        # staged merge, main otherwise)
+        "total-records": str(
+            _prev_summary_counter(base, "total-records", parent_id)
+            + added_rows
+        ),
+        "total-position-deletes": str(
+            _prev_summary_counter(base, "total-position-deletes", parent_id)
+        ),
+        "total-equality-deletes": str(
+            _prev_summary_counter(base, "total-equality-deletes", parent_id)
+            + n_eq_rows
+        ),
+        **{k: str(v) for k, v in (summary_extra or {}).items()},
     }
-
-    from tiered_storage_for_apache_kafka_spark.sources.puffin import (
-        FILE_LIST,
-        write_puffin,
-    )
-
     file_list = [
         {
             "location": f["file_path"],
@@ -936,82 +880,22 @@ def _commit_merge_once(
         }
         for s in del_stats
     ]
-    stats_path = os.path.join(
-        meta_dir, f"stats-{snapshot_id}-{commit_uuid}.puffin"
+    # a staged (WAP) merge moves only its branch ref: main readers and
+    # the snapshot-log (TIMESTAMP AS OF) see nothing
+    updates += _snapshot_updates(
+        table_dir, base, seq, parent_id, commit_uuid,
+        new_manifests + prior_manifest_files, summary, now_ms,
+        ref=branch or "main", file_list=file_list,
     )
-    pstats = write_puffin(
-        stats_path, [(FILE_LIST, json.dumps(file_list).encode())],
-        snapshot_id, seq,
-    )
-    stat_entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": stats_path,
-        "file-size-in-bytes": pstats["file_size"],
-        "file-footer-size-in-bytes": pstats["footer_size"],
-        "blob-metadata": pstats["blob_metadata"],
-    }
-
-    meta = dict(base)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = now_ms
-    meta["snapshots"] = base["snapshots"] + [snapshot]
-    meta["statistics"] = base.get("statistics", []) + [stat_entry]
-    if branch is None:
-        meta["current-snapshot-id"] = snapshot_id
-        meta["refs"] = _advance_main(base.get("refs"), snapshot_id)
-        meta["snapshot-log"] = base["snapshot-log"] + [
-            {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-        ]
-    else:
-        # staged (WAP) merge: only the branch ref moves; main readers
-        # and the snapshot-log (TIMESTAMP AS OF) see nothing
-        refs = dict(base.get("refs") or {})
-        refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
-        meta["refs"] = refs
     if properties_extra:
-        meta["properties"] = {
-            **(base.get("properties") or {}),
-            **{k: str(v) for k, v in properties_extra.items()},
-        }
-    meta["metadata-log"] = base.get("metadata-log", []) + [
-        {
-            "timestamp-ms": base["last-updated-ms"],
-            "metadata-file": os.path.join(
-                meta_dir, f"v{version}.metadata.json"
-            ),
-        }
-    ]
-
-    if catalog is not None:
-        from tiered_storage_for_apache_kafka_spark.sources.iceberg.commit import (  # noqa: E501 (local: avoids an import cycle at module load)
-            _commit_requirements,
-        )
-
-        updates = list(extra_updates) + list(schema_updates or []) + [
-            {"action": "add-snapshot", "snapshot": snapshot},
+        updates.append(
             {
-                "action": "set-snapshot-ref",
-                "ref-name": branch if branch is not None else "main",
-                "type": "branch",
-                "snapshot-id": snapshot_id,
-            },
-            {"action": "set-statistics", "statistics": stat_entry},
-        ]
-        if properties_extra:
-            updates.append(
-                {
-                    "action": "set-properties",
-                    "updates": {
-                        k: str(v) for k, v in properties_extra.items()
-                    },
-                }
-            )
-        resp = catalog.commit_table(
-            table_name,
-            _commit_requirements(base, branch=branch),
-            updates,
-            now_ms,
+                "action": "set-properties",
+                "updates": {k: str(v) for k, v in properties_extra.items()},
+            }
         )
-        return resp["metadata"]
-    _write_metadata_version(meta_dir, version + 1, meta)
-    return meta
+    return publish(
+        table_dir, version, loaded,
+        _commit_requirements(loaded, branch=branch), updates, now_ms,
+        catalog, table_name,
+    )

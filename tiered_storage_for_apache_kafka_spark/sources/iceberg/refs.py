@@ -7,13 +7,30 @@ docstrings.
 
 from __future__ import annotations
 
+import json
 import os
+import time
+import uuid
 
+from tiered_storage_for_apache_kafka_spark.sources.iceberg.commit import (
+    _snapshot_updates,
+)
+from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
+    manifest_entry_schema,
+    spec_typed_cols,
+)
+from tiered_storage_for_apache_kafka_spark.sources.iceberg.ocf import (
+    FORMAT_VERSION,
+    read_avro_ocf,
+    write_avro_ocf,
+)
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
+    _commit_requirements,
+    _current_schema_struct,
     _current_state_meta,
-    _maintenance_requirements,
-    _maintenance_state,
-    _write_metadata_version,
+    _prev_summary_counter,
+    _specs_by_id,
+    publish,
 )
 
 
@@ -33,11 +50,11 @@ def create_ref(
     References": a ``tag`` is an immutable label for auditing /
     reproducible reads ("the corpus release we trained on"), a
     ``branch`` a movable head. Defaults to the current snapshot.
-    Commits never disturb refs other than ``main`` (see
-    :func:`_advance_main`) and :func:`expire_snapshots` protects every
-    referenced snapshot, so a tagged snapshot stays readable for the
-    tag's lifetime. In catalog mode this commits a ``set-snapshot-ref``
-    update (the REST spec's update type).
+    A commit's ``set-snapshot-ref`` moves only its own ref, and
+    :func:`expire_snapshots` protects every referenced snapshot, so a
+    tagged snapshot stays readable for the tag's lifetime. Either mode
+    publishes one ``set-snapshot-ref`` update (the REST spec's update
+    type).
 
     Per-ref RETENTION (spec fields, r12 — honored by
     :func:`maintenance.expire_snapshots`): ``max_ref_age_ms`` ages the
@@ -49,8 +66,6 @@ def create_ref(
     ANCESTRY expiration retains — count-from-head and age
     respectively, OR-composed like the Java action. Refs without the
     fields keep the conservative defaults: permanent, full ancestry."""
-    import time as _time
-
     if kind not in ("tag", "branch"):
         raise ValueError(f"ref type must be 'tag' or 'branch', got {kind!r}")
     if name == "main" and kind == "tag":
@@ -77,34 +92,13 @@ def create_ref(
         ref["min-snapshots-to-keep"] = int(min_snapshots_to_keep)
     if max_snapshot_age_ms is not None:
         ref["max-snapshot-age-ms"] = int(max_snapshot_age_ms)
-    now_ms = int(_time.time() * 1000) if now_ms is None else now_ms
-    if catalog is not None:
-        resp = catalog.commit_table(
-            table_name,
-            _maintenance_requirements(meta),
-            [
-                {
-                    "action": "set-snapshot-ref",
-                    "ref-name": name,
-                    **{k: v for k, v in ref.items() if k != "snapshot-id"},
-                    "snapshot-id": snapshot_id,
-                }
-            ],
-            now_ms,
-        )
-        return resp["metadata"]
-    refs = dict(meta.get("refs") or {})
-    refs[name] = ref
-    return _commit_refs_local(
-        table_dir,
-        version,
-        meta,
-        refs,
-        now_ms,
-        # moving main IS moving the head (same invariant the catalog
-        # path's set-snapshot-ref keeps): refs.main and
-        # current-snapshot-id must never diverge
-        current_snapshot_id=snapshot_id if name == "main" else None,
+    now_ms = int(time.time() * 1000) if now_ms is None else now_ms
+    # set-snapshot-ref on main also moves current-snapshot-id and the
+    # snapshot-log: refs.main and the head never diverge
+    return publish(
+        table_dir, version, meta, _commit_requirements(meta),
+        [{"action": "set-snapshot-ref", "ref-name": name, **ref}],
+        now_ms, catalog, table_name,
     )
 
 
@@ -118,68 +112,19 @@ def drop_ref(
     """Remove a named ref (``remove-snapshot-ref`` in the REST spec).
     The snapshot itself stays until :func:`expire_snapshots` collects
     it. Dropping ``main`` is refused — a table always has a head."""
-    import time as _time
-
     if name == "main":
         raise ValueError("cannot drop the main branch")
     version, meta, table_name = _current_state_meta(
         table_dir, catalog, table_name
     )
-    refs = dict(meta.get("refs") or {})
-    if name not in refs:
+    if name not in (meta.get("refs") or {}):
         raise ValueError(f"ref {name!r} not found")
-    del refs[name]
-    now_ms = int(_time.time() * 1000) if now_ms is None else now_ms
-    if catalog is not None:
-        resp = catalog.commit_table(
-            table_name,
-            _maintenance_requirements(meta),
-            [{"action": "remove-snapshot-ref", "ref-name": name}],
-            now_ms,
-        )
-        return resp["metadata"]
-    return _commit_refs_local(table_dir, version, meta, refs, now_ms)
-
-
-def _commit_refs_local(
-    table_dir: str,
-    version: int,
-    meta: dict,
-    refs: dict,
-    now_ms: int,
-    current_snapshot_id: int | None = None,
-) -> dict:
-    """Shared metadata-only commit for the file-layout ref operations:
-    new refs map (+ optionally a moved head), metadata-log chain entry,
-    next version + hint. Moving the head also appends to the
-    snapshot-log (the spec's log of current-snapshot-id changes) — a
-    rollback or publish is a TIMESTAMP AS OF event, and the catalog
-    protocol records it the same way (set-snapshot-ref main)."""
-    new_meta = dict(meta)
-    new_meta["refs"] = refs
-    if current_snapshot_id is not None:
-        new_meta["current-snapshot-id"] = current_snapshot_id
-        log = list(meta.get("snapshot-log", []))
-        if not log or log[-1]["snapshot-id"] != current_snapshot_id:
-            ts = max(
-                now_ms,
-                max((e["timestamp-ms"] for e in log), default=0),
-            )
-            log.append(
-                {"timestamp-ms": ts, "snapshot-id": current_snapshot_id}
-            )
-        new_meta["snapshot-log"] = log
-    new_meta["last-updated-ms"] = now_ms
-    meta_dir = os.path.join(table_dir, "metadata")
-    new_meta["metadata-log"] = meta.get("metadata-log", []) + [
-        {
-            "timestamp-ms": meta["last-updated-ms"],
-            "metadata-file": os.path.join(meta_dir, f"v{version}.metadata.json"),
-        }
-    ]
-    _write_metadata_version(meta_dir, version + 1, new_meta)
-    return new_meta
-
+    now_ms = int(time.time() * 1000) if now_ms is None else now_ms
+    return publish(
+        table_dir, version, meta, _commit_requirements(meta),
+        [{"action": "remove-snapshot-ref", "ref-name": name}],
+        now_ms, catalog, table_name,
+    )
 
 
 def fast_forward(
@@ -199,9 +144,7 @@ def fast_forward(
     ``current-snapshot-id`` and appends the published head to the
     snapshot-log, so TIMESTAMP AS OF sees the publish instant, not the
     staging instants."""
-    import time as _time
-
-    version, meta, table_name = _maintenance_state(table_dir, catalog, table_name)
+    version, meta, table_name = _current_state_meta(table_dir, catalog, table_name)
     refs = meta.get("refs") or {}
     src = refs.get(source)
     if src is None:
@@ -235,30 +178,21 @@ def fast_forward(
             )
         node = parent
 
-    now_ms = int(_time.time() * 1000) if now_ms is None else now_ms
+    now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     now_ms = max(
         now_ms, max((e["timestamp-ms"] for e in meta["snapshot-log"]), default=0)
     )
-    if catalog is not None:
-        resp = catalog.commit_table(
-            table_name,
-            _maintenance_requirements(meta),
-            [
-                {
-                    "action": "set-snapshot-ref",
-                    "ref-name": target,
-                    "type": "branch",
-                    "snapshot-id": src_id,
-                }
-            ],
-            now_ms,
-        )
-        return resp["metadata"]
-    new_refs = dict(refs)
-    new_refs[target] = {"snapshot-id": src_id, "type": "branch"}
-    return _commit_refs_local(
-        table_dir, version, meta, new_refs, now_ms,
-        current_snapshot_id=src_id if target == "main" else None,
+    return publish(
+        table_dir, version, meta, _commit_requirements(meta),
+        [
+            {
+                "action": "set-snapshot-ref",
+                "ref-name": target,
+                "type": "branch",
+                "snapshot-id": src_id,
+            }
+        ],
+        now_ms, catalog, table_name,
     )
 
 
@@ -290,9 +224,7 @@ def rollback_to_snapshot(
     its emitted rows from the abandoned lineage have no counterpart in
     the restored one; restart it from a fresh checkpoint
     (re-bootstrap), the same operational rule as retention."""
-    import time as _time
-
-    version, meta, table_name = _maintenance_state(
+    version, meta, table_name = _current_state_meta(
         table_dir, catalog, table_name
     )
     by_id = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
@@ -317,31 +249,22 @@ def rollback_to_snapshot(
                 )
             node = parent
 
-    now_ms = int(_time.time() * 1000) if now_ms is None else now_ms
+    now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     now_ms = max(
         now_ms,
         max((e["timestamp-ms"] for e in meta["snapshot-log"]), default=0),
     )
-    if catalog is not None:
-        resp = catalog.commit_table(
-            table_name,
-            _maintenance_requirements(meta),
-            [
-                {
-                    "action": "set-snapshot-ref",
-                    "ref-name": "main",
-                    "type": "branch",
-                    "snapshot-id": snapshot_id,
-                }
-            ],
-            now_ms,
-        )
-        return resp["metadata"]
-    refs = dict(meta.get("refs") or {})
-    refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    return _commit_refs_local(
-        table_dir, version, meta, refs, now_ms,
-        current_snapshot_id=snapshot_id,
+    return publish(
+        table_dir, version, meta, _commit_requirements(meta),
+        [
+            {
+                "action": "set-snapshot-ref",
+                "ref-name": "main",
+                "type": "branch",
+                "snapshot-id": snapshot_id,
+            }
+        ],
+        now_ms, catalog, table_name,
     )
 
 
@@ -373,28 +296,7 @@ def cherry_pick_snapshot(
     the manifest-list diff against it); an expired parent refuses
     toward re-staging. The new snapshot's summary carries
     ``cherry-pick-snapshot-id`` for provenance."""
-    import json as _json
-    import time as _time
-    import uuid as _uuid
-
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (  # noqa: E501
-        MANIFEST_FILE_SCHEMA,
-        manifest_entry_schema,
-        spec_typed_cols,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.ocf import (
-        FORMAT_VERSION,
-        read_avro_ocf,
-        write_avro_ocf,
-    )
-    from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-        _advance_main,
-        _current_schema_struct,
-        _prev_summary_counter,
-        _specs_by_id,
-    )
-
-    version, meta, table_name = _maintenance_state(
+    version, meta, table_name = _current_state_meta(
         table_dir, catalog, table_name
     )
     by_id = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
@@ -431,14 +333,14 @@ def cherry_pick_snapshot(
             "summary — refusing to cherry-pick a mislabeled row-delta"
         )
 
-    now_ms = int(_time.time() * 1000) if now_ms is None else now_ms
+    now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     now_ms = max(
         now_ms,
         max((s["timestamp-ms"] for s in meta["snapshots"]), default=0),
     )
     seq = int(meta["last-sequence-number"]) + 1
     new_id = seq
-    commit_uuid = _uuid.uuid4().hex[:16]
+    commit_uuid = uuid.uuid4().hex[:16]
     meta_dir = os.path.join(table_dir, "metadata")
     schema_struct = _current_schema_struct(meta)
     specs = _specs_by_id(meta)
@@ -474,9 +376,9 @@ def cherry_pick_snapshot(
             manifest_entry_schema(spec_typed_cols(spec, schema_struct)),
             rewritten,
             {
-                "schema": _json.dumps(schema_struct).encode(),
+                "schema": json.dumps(schema_struct).encode(),
                 "schema-id": str(meta["current-schema-id"]).encode(),
-                "partition-spec": _json.dumps(spec["fields"]).encode(),
+                "partition-spec": json.dumps(spec["fields"]).encode(),
                 "partition-spec-id": str(spec["spec-id"]).encode(),
                 "format-version": str(FORMAT_VERSION).encode(),
                 "content": b"data",
@@ -507,82 +409,28 @@ def cherry_pick_snapshot(
     head_mfs: list[dict] = []
     if head_id != -1:
         _, head_mfs, _ = read_avro_ocf(by_id[head_id]["manifest-list"])
-    list_path = os.path.join(
-        meta_dir, f"snap-{new_id}-1-{commit_uuid}.avro"
-    )
-    write_avro_ocf(
-        list_path,
-        MANIFEST_FILE_SCHEMA,
-        new_manifests + head_mfs,
-        {
-            "format-version": str(FORMAT_VERSION).encode(),
-            "snapshot-id": str(new_id).encode(),
-            "sequence-number": str(seq).encode(),
-            "parent-snapshot-id": str(head_id).encode(),
-        },
-    )
-    snapshot = {
-        "snapshot-id": new_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": meta["current-schema-id"],
-        "summary": {
-            "operation": "append",
-            "added-data-files": str(added_files),
-            "added-records": str(added_rows),
-            "cherry-pick-snapshot-id": str(snapshot_id),
-            "total-records": str(
-                added_rows
-                + _prev_summary_counter(meta, "total-records", head_id)
-            ),
-            "total-position-deletes": str(
-                _prev_summary_counter(
-                    meta, "total-position-deletes", head_id
-                )
-            ),
-            "total-equality-deletes": str(
-                _prev_summary_counter(
-                    meta, "total-equality-deletes", head_id
-                )
-            ),
-        },
+    summary = {
+        "operation": "append",
+        "added-data-files": str(added_files),
+        "added-records": str(added_rows),
+        "cherry-pick-snapshot-id": str(snapshot_id),
+        "total-records": str(
+            added_rows + _prev_summary_counter(meta, "total-records", head_id)
+        ),
+        "total-position-deletes": str(
+            _prev_summary_counter(meta, "total-position-deletes", head_id)
+        ),
+        "total-equality-deletes": str(
+            _prev_summary_counter(meta, "total-equality-deletes", head_id)
+        ),
     }
-    if head_id != -1:
-        snapshot["parent-snapshot-id"] = head_id
-
-    if catalog is not None:
-        resp = catalog.commit_table(
-            table_name,
-            _maintenance_requirements(meta),
-            [
-                {"action": "add-snapshot", "snapshot": snapshot},
-                {
-                    "action": "set-snapshot-ref",
-                    "ref-name": "main",
-                    "type": "branch",
-                    "snapshot-id": new_id,
-                },
-            ],
-            now_ms,
-        )
-        return resp["metadata"]
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-    new_meta["current-snapshot-id"] = new_id
-    new_meta["refs"] = _advance_main(meta.get("refs"), new_id)
-    new_meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-        {"timestamp-ms": now_ms, "snapshot-id": new_id}
-    ]
-    new_meta["metadata-log"] = meta.get("metadata-log", []) + [
-        {
-            "timestamp-ms": meta["last-updated-ms"],
-            "metadata-file": os.path.join(
-                meta_dir, f"v{version}.metadata.json"
-            ),
-        }
-    ]
-    _write_metadata_version(meta_dir, version + 1, new_meta)
-    return new_meta
+    # no statistics file: the picked files' FILE_LIST lives with the
+    # staged snapshot
+    updates = _snapshot_updates(
+        table_dir, meta, seq, head_id, commit_uuid,
+        new_manifests + head_mfs, summary, now_ms,
+    )
+    return publish(
+        table_dir, version, meta, _commit_requirements(meta), updates,
+        now_ms, catalog, table_name,
+    )

@@ -16,16 +16,6 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.ocf import (
 )
 
 
-def _advance_main(refs: dict | None, snapshot_id: int) -> dict:
-    """New refs map for a commit: advance the ``main`` branch head,
-    PRESERVE every other ref — user tags and branches must survive
-    unrelated commits (spec "Snapshot References"; clobbering them was
-    a latent bug while main was the only ref that ever existed)."""
-    out = dict(refs or {})
-    out["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-    return out
-
-
 def _default_spec(meta: dict) -> dict:
     """The table's DEFAULT partition spec (``default-spec-id`` — new
     writes use it; older data files stay scoped to the spec their
@@ -50,7 +40,9 @@ def _current_schema_struct(meta: dict) -> dict:
 
 def _write_metadata_version(meta_dir: str, version: int, meta: dict) -> None:
     """Write v{N}.metadata.json + version-hint atomically-enough for the
-    single-writer model all three maintenance/commit paths share.
+    single-writer file layout. Two callers: :func:`publish` (every
+    file-layout commit) and the fake REST catalog service persisting
+    the metadata it computed with the same :func:`apply_updates`.
 
     ``metadata-log`` is capped to the table property
     ``write.metadata.previous-versions-max`` (Iceberg's default 100) —
@@ -216,20 +208,343 @@ def _load_current_metadata(table_dir: str) -> tuple[int, dict]:
         return version, json.load(f)
 
 
-
-def _maintenance_state(table_dir: str, catalog, table_name: str | None):
-    """(version, metadata, table_name) for a maintenance op — from the
-    file layout, or from the catalog service when one manages the
-    table (maintaining a catalog table through the file layout would
-    fork the pointer: the next catalog commit would silently undo it).
-    Metadata-only: the maintenance ops read the manifest lists they
-    need themselves."""
-    return _current_state_meta(table_dir, catalog, table_name)
+# -- the commit path: one update list, one apply, one retry loop --------------
 
 
-def _maintenance_requirements(meta: dict) -> list[dict]:
-    head = (meta.get("refs") or {}).get("main", {}).get("snapshot-id")
-    return [
-        {"type": "assert-table-uuid", "uuid": meta["table-uuid"]},
-        {"type": "assert-ref-snapshot-id", "ref": "main", "snapshot-id": head},
+class CommitConflictError(Exception):
+    """A commit requirement failed (HTTP 409 CommitFailedException) —
+    reload the table and rebase."""
+
+
+def commit_retry_backoff(
+    attempt: int, base_s: float = 0.05, cap_s: float = 1.0
+) -> None:
+    """Exponential backoff with jitter between optimistic-commit
+    retries — the shape real Iceberg's commit retry uses
+    (``commit.retry.min-wait-ms`` growing exponentially with
+    randomization). Without it, N writers in tight commit loops
+    livelock: every loser reloads, re-stages and re-races inside the
+    same window it just lost, burning the whole retry budget (measured
+    by ``bench_scaling.py --rest-contention``: 4 writers exhausted 8
+    retries before this existed)."""
+    import random
+    import time
+
+    time.sleep(min(base_s * (2 ** attempt), cap_s) * (0.5 + random.random()))
+
+
+def check_requirements(meta: dict | None, requirements: list[dict]) -> str | None:
+    """Validate a CommitTableRequest's requirement list against the
+    catalog's current metadata. Returns an error message, or None when
+    every requirement holds."""
+    for req in requirements:
+        t = req.get("type")
+        if t == "assert-create":
+            if meta is not None:
+                return "assert-create failed: table already exists"
+        elif t == "assert-table-uuid":
+            if meta is None or meta.get("table-uuid") != req.get("uuid"):
+                return "assert-table-uuid failed"
+        elif t == "assert-ref-snapshot-id":
+            ref = req.get("ref", "main")
+            want = req.get("snapshot-id")  # None = ref must not exist
+            have = None
+            if meta is not None:
+                have = (meta.get("refs") or {}).get(ref, {}).get("snapshot-id")
+            if have != want:
+                return (
+                    f"assert-ref-snapshot-id failed for ref {ref!r}: "
+                    f"expected {want}, found {have}"
+                )
+        else:
+            return f"unsupported requirement type {t!r}"
+    return None
+
+
+def apply_updates(meta: dict, updates: list[dict], now_ms: int) -> dict:
+    """Apply a CommitTableRequest's update list to the current metadata,
+    per the spec's MetadataUpdate semantics — the ONLY code that turns
+    a commit into new table metadata: :func:`publish` calls it for the
+    file layout and the REST catalog service calls it for its pointer,
+    so the two modes cannot drift apart."""
+    meta = dict(meta)
+    for upd in updates:
+        action = upd.get("action")
+        if action == "add-schema":
+            schema = upd["schema"]
+            meta["schemas"] = list(meta.get("schemas", [])) + [schema]
+            if "last-column-id" in upd:
+                meta["last-column-id"] = max(
+                    meta.get("last-column-id", 0), upd["last-column-id"]
+                )
+        elif action == "set-current-schema":
+            sid = upd["schema-id"]
+            if sid == -1:  # spec: -1 = last added schema
+                sid = meta["schemas"][-1]["schema-id"]
+            meta["current-schema-id"] = sid
+        elif action == "add-snapshot":
+            snap = upd["snapshot"]
+            if any(
+                s["snapshot-id"] == snap["snapshot-id"]
+                for s in meta.get("snapshots", [])
+            ):
+                # two lineages committed the same computed id (branch
+                # and main racing): a 409, so the loser rebases onto a
+                # fresh sequence number — never two snapshots under
+                # one id
+                raise CommitConflictError(
+                    f"snapshot id {snap['snapshot-id']} already exists"
+                )
+            meta["snapshots"] = list(meta.get("snapshots", [])) + [snap]
+            meta["last-sequence-number"] = max(
+                meta.get("last-sequence-number", 0),
+                snap.get("sequence-number", 0),
+            )
+        elif action == "set-snapshot-ref":
+            ref_name = upd.get("ref-name", "main")
+            refs = dict(meta.get("refs") or {})
+            ref = {
+                "snapshot-id": upd["snapshot-id"],
+                "type": upd.get("type", "branch"),
+            }
+            # per-ref retention fields ride the same update (spec
+            # "Snapshot References" — REST TableUpdate carries them)
+            for k in (
+                "max-ref-age-ms",
+                "min-snapshots-to-keep",
+                "max-snapshot-age-ms",
+            ):
+                if upd.get(k) is not None:
+                    ref[k] = int(upd[k])
+            refs[ref_name] = ref
+            meta["refs"] = refs
+            if ref_name == "main":
+                meta["current-snapshot-id"] = upd["snapshot-id"]
+                # the snapshot-log tracks current-snapshot-id changes
+                # (spec), so it rides THIS update, not add-snapshot —
+                # staged branch commits stay out of TIMESTAMP AS OF
+                # until a fast-forward publishes them. The entry never
+                # predates the log's newest one: a ref move with an
+                # older clock (a rollback, a tag moved onto main) must
+                # not make TIMESTAMP AS OF resolve past it
+                log = list(meta.get("snapshot-log", []))
+                if not log or log[-1]["snapshot-id"] != upd["snapshot-id"]:
+                    ts = max([now_ms] + [e["timestamp-ms"] for e in log])
+                    meta["snapshot-log"] = log + [
+                        {"timestamp-ms": ts, "snapshot-id": upd["snapshot-id"]}
+                    ]
+        elif action == "set-statistics":
+            stats = [
+                s
+                for s in meta.get("statistics", [])
+                if s["snapshot-id"] != upd["statistics"]["snapshot-id"]
+            ]
+            meta["statistics"] = stats + [upd["statistics"]]
+        elif action == "set-properties":
+            props = dict(meta.get("properties") or {})
+            props.update(upd.get("updates") or {})
+            meta["properties"] = props
+        elif action == "remove-snapshots":
+            gone = set(upd["snapshot-ids"])
+            meta["snapshots"] = [
+                s for s in meta.get("snapshots", [])
+                if s["snapshot-id"] not in gone
+            ]
+            meta["snapshot-log"] = [
+                e for e in meta.get("snapshot-log", [])
+                if e["snapshot-id"] not in gone
+            ]
+            keep_ids = {s["snapshot-id"] for s in meta["snapshots"]}
+            # strip dangling parent pointers (spec: only transient refs
+            # to missing snapshots are allowed)
+            meta["snapshots"] = [
+                (
+                    {k: v for k, v in s.items() if k != "parent-snapshot-id"}
+                    if s.get("parent-snapshot-id") not in keep_ids
+                    else s
+                )
+                for s in meta["snapshots"]
+            ]
+        elif action == "remove-statistics":
+            meta["statistics"] = [
+                st for st in meta.get("statistics", [])
+                if st["snapshot-id"] != upd["snapshot-id"]
+            ]
+        elif action == "remove-snapshot-ref":
+            refs = dict(meta.get("refs") or {})
+            refs.pop(upd["ref-name"], None)
+            meta["refs"] = refs
+        elif action == "add-sort-order":
+            order = upd["sort-order"]
+            orders = list(meta.get("sort-orders", []))
+            clash = next(
+                (o for o in orders if o["order-id"] == order["order-id"]), None
+            )
+            if clash is None:
+                meta["sort-orders"] = orders + [order]
+            elif clash.get("fields") != order.get("fields"):
+                # replaying the SAME order is idempotent; a different
+                # definition under an existing id would let committed
+                # sort_order_id stamps point at a sort that does not
+                # exist — a commit error, never a silent drop
+                raise ValueError(
+                    f"sort order id {order['order-id']} already exists "
+                    "with different fields"
+                )
+        elif action == "add-spec":
+            spec = upd["spec"]
+            specs = list(meta.get("partition-specs", []))
+            clash = next(
+                (s for s in specs if s["spec-id"] == spec["spec-id"]), None
+            )
+            if clash is None:
+                meta["partition-specs"] = specs + [spec]
+                # an UNPARTITIONED spec (fields: []) adds no field ids
+                meta["last-partition-id"] = max(
+                    [int(meta.get("last-partition-id", 999))]
+                    + [int(f["field-id"]) for f in spec["fields"]]
+                )
+            elif clash.get("fields") != spec.get("fields"):
+                # same idempotency rule as add-sort-order: replaying an
+                # identical spec is fine, redefining an id is a commit
+                # error (committed manifests pin spec-ids)
+                raise ValueError(
+                    f"partition spec id {spec['spec-id']} already "
+                    "exists with different fields"
+                )
+        elif action == "set-default-spec":
+            sid = upd["spec-id"]
+            if sid == -1:  # spec: -1 = last added spec
+                sid = meta["partition-specs"][-1]["spec-id"]
+            if not any(
+                s["spec-id"] == sid for s in meta.get("partition-specs", [])
+            ):
+                raise ValueError(f"no partition spec with id {sid}")
+            meta["default-spec-id"] = sid
+        elif action == "set-default-sort-order":
+            oid = upd["sort-order-id"]
+            if oid == -1:  # spec: -1 = last added sort order
+                oid = meta["sort-orders"][-1]["order-id"]
+            if not any(
+                o["order-id"] == oid for o in meta.get("sort-orders", [])
+            ):
+                raise ValueError(f"no sort order with id {oid}")
+            meta["default-sort-order-id"] = oid
+        elif action == "assign-uuid":
+            meta["table-uuid"] = upd["uuid"]
+        else:
+            raise ValueError(f"unsupported update action {action!r}")
+    meta["last-updated-ms"] = now_ms
+    return meta
+
+
+def next_metadata(
+    location: str, version: int, base: dict, updates: list[dict], now_ms: int
+) -> dict:
+    """The metadata of version ``version + 1`` of the table at
+    ``location``: ``updates`` applied to ``base`` (version ``version``),
+    and the superseded version chained onto ``metadata-log`` — external
+    history walkers rely on the chain. Shared by :func:`publish` and the
+    REST catalog service, so both write the same next version."""
+    meta = apply_updates(base, updates, now_ms)
+    meta["metadata-log"] = list(base.get("metadata-log", [])) + [
+        {
+            "timestamp-ms": base.get("last-updated-ms", 0),
+            "metadata-file": os.path.join(
+                location, "metadata", f"v{version}.metadata.json"
+            ),
+        }
     ]
+    return meta
+
+
+def _commit_requirements(
+    prior_meta: dict | None,
+    created_base: dict | None = None,
+    branch: str | None = None,
+) -> list[dict]:
+    """CommitTableRequest requirements: pin the table uuid and require
+    the ref being MOVED to still point at the parent snapshot we built
+    against (None = ref must not exist yet) — the optimistic-
+    concurrency contract, matching real Iceberg's UpdateRequirements:
+    a branch (WAP) commit asserts only its own branch head, so an
+    unrelated writer advancing main never spuriously conflicts a
+    staged commit; two concurrent writers to the SAME ref still
+    conflict rather than silently orphaning one snapshot."""
+    if prior_meta is None:
+        # table was just created in this commit; main must be unset
+        return [
+            {"type": "assert-table-uuid", "uuid": created_base["table-uuid"]},
+            {"type": "assert-ref-snapshot-id", "ref": "main", "snapshot-id": None},
+        ]
+    moved_ref = branch if branch is not None else "main"
+    head = (
+        (prior_meta.get("refs") or {}).get(moved_ref, {}).get("snapshot-id")
+    )
+    return [
+        {"type": "assert-table-uuid", "uuid": prior_meta["table-uuid"]},
+        {
+            "type": "assert-ref-snapshot-id",
+            "ref": moved_ref,
+            "snapshot-id": head,
+        },
+    ]
+
+
+def publish(
+    table_dir: str,
+    version: int,
+    base: dict,
+    requirements: list[dict],
+    updates: list[dict],
+    now_ms: int,
+    catalog=None,
+    table_name: str | None = None,
+) -> dict:
+    """Move the table pointer by one commit and return the new metadata
+    — the one publish step of every write verb. ``base`` is the
+    metadata the commit was built against, at ``version`` (0 = a table
+    this commit creates; ``base`` is then its initial metadata);
+    ``updates`` is the commit's REST MetadataUpdate list.
+
+    With ``catalog`` the request goes to the catalog service
+    (``POST .../tables/{t}``), which checks ``requirements`` and applies
+    the list itself; a lost race raises :class:`CommitConflictError`.
+    Without one, the file layout applies the same list with the same
+    :func:`apply_updates` and writes ``v{version+1}.metadata.json``."""
+    if catalog is not None:
+        if version == 0:
+            catalog.ensure_namespace()
+            resp = catalog.create_table(table_name, base)
+            if not updates:
+                return resp["metadata"]
+        resp = catalog.commit_table(table_name, requirements, updates, now_ms)
+        return resp["metadata"]
+    meta = (
+        next_metadata(table_dir, version, base, updates, now_ms)
+        if version
+        else apply_updates(base, updates, now_ms)
+    )
+    _write_metadata_version(
+        os.path.join(table_dir, "metadata"), version + 1, meta
+    )
+    return meta
+
+
+def commit_with_retries(attempt, catalog, max_commit_retries: int):
+    """Run ``attempt()`` — reload the table, plan, stage and
+    :func:`publish` — until it wins the optimistic-concurrency race.
+    A :class:`CommitConflictError` (a rival moved the head) backs off
+    and re-runs the whole attempt against the fresh head, up to
+    ``max_commit_retries`` attempts, then re-raises the last conflict;
+    any other error propagates at once. The file layout has one writer
+    and no requirements to lose, so it makes exactly one attempt."""
+    n_attempts = max_commit_retries if catalog is not None else 1
+    for _attempt in range(n_attempts):
+        try:
+            return attempt()
+        except CommitConflictError:
+            if _attempt + 1 >= n_attempts:
+                raise
+            commit_retry_backoff(_attempt)
+    raise ValueError(f"max_commit_retries must be >= 1, got {max_commit_retries}")

@@ -30,8 +30,10 @@ import os
 import time
 import uuid
 
+from tiered_storage_for_apache_kafka_spark.sources.iceberg.commit import (
+    _snapshot_updates,
+)
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.manifests import (
-    MANIFEST_FILE_SCHEMA,
     _column_stats_fields,
     _leaf_field_ids,
     _stat_data_files,
@@ -46,14 +48,15 @@ from tiered_storage_for_apache_kafka_spark.sources.iceberg.ocf import (
     write_avro_ocf,
 )
 from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
-    _advance_main,
+    _commit_requirements,
     _current_schema_struct,
     _current_state_meta,
     _default_spec,
     _default_table_name,
     _prev_summary_counter,
     _prev_total_pos_deletes,
-    _write_metadata_version,
+    commit_with_retries,
+    publish,
 )
 
 
@@ -123,31 +126,19 @@ def update_where(
     identities, which a rival commit may have invalidated); a lost
     attempt's staged files stay behind as unreferenced orphans — the
     same crash posture as every other staged commit."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
-    )
-
     if not set:
         raise ValueError("update_where needs at least one SET column")
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     if catalog is not None and table_name is None:
         table_name = _default_table_name(table_dir)
-
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        try:
-            return _update_once(
-                spark, table_dir, predicate, set, now_ms, catalog,
-                table_name, writer_shards, max_records_per_file,
-            )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
+    return commit_with_retries(
+        lambda: _update_once(
+            spark, table_dir, predicate, set, now_ms, catalog,
+            table_name, writer_shards, max_records_per_file,
+        ),
+        catalog,
+        max_commit_retries,
+    )
 
 
 def _update_once(
@@ -415,50 +406,20 @@ def _commit_update_once(
         if s["snapshot-id"] == base["current-snapshot-id"]
     )
     _, prior_manifest_files, _ = read_avro_ocf(cur["manifest-list"])
-    list_path = os.path.join(
-        meta_dir, f"snap-{snapshot_id}-1-{commit_uuid}.avro"
-    )
-    write_avro_ocf(
-        list_path,
-        MANIFEST_FILE_SCHEMA,
-        new_manifests + prior_manifest_files,
-        {
-            "format-version": str(FORMAT_VERSION).encode(),
-            "snapshot-id": str(snapshot_id).encode(),
-            "sequence-number": str(seq).encode(),
-            "parent-snapshot-id": str(base["current-snapshot-id"]).encode(),
-        },
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": base["current-schema-id"],
-        "parent-snapshot-id": base["current-snapshot-id"],
-        "summary": {
-            "operation": "overwrite",
-            "added-data-files": str(len(stat_files)),
-            "added-records": str(added_rows),
-            "added-delete-files": str(len(del_stats)),
-            "added-position-deletes": str(n_pos),
-            "total-records": str(
-                _prev_summary_counter(base, "total-records") + added_rows
-            ),
-            "total-position-deletes": str(
-                _prev_total_pos_deletes(base) + n_pos
-            ),
-            "total-equality-deletes": str(
-                _prev_summary_counter(base, "total-equality-deletes")
-            ),
-        },
+    summary = {
+        "operation": "overwrite",
+        "added-data-files": str(len(stat_files)),
+        "added-records": str(added_rows),
+        "added-delete-files": str(len(del_stats)),
+        "added-position-deletes": str(n_pos),
+        "total-records": str(
+            _prev_summary_counter(base, "total-records") + added_rows
+        ),
+        "total-position-deletes": str(_prev_total_pos_deletes(base) + n_pos),
+        "total-equality-deletes": str(
+            _prev_summary_counter(base, "total-equality-deletes")
+        ),
     }
-
-    from tiered_storage_for_apache_kafka_spark.sources.puffin import (
-        FILE_LIST,
-        write_puffin,
-    )
-
     file_list = [
         {
             "location": e["data_file"]["file_path"],
@@ -469,63 +430,15 @@ def _commit_update_once(
         for m_entries in (data_entries, del_entries)
         for e in m_entries
     ]
-    stats_path = os.path.join(
-        meta_dir, f"stats-{snapshot_id}-{commit_uuid}.puffin"
+    updates = _snapshot_updates(
+        table_dir, base, seq, base["current-snapshot-id"], commit_uuid,
+        new_manifests + prior_manifest_files, summary, now_ms,
+        file_list=file_list,
     )
-    pstats = write_puffin(
-        stats_path, [(FILE_LIST, json.dumps(file_list).encode())],
-        snapshot_id, seq,
+    return publish(
+        table_dir, version, base, _commit_requirements(base), updates,
+        now_ms, catalog, table_name,
     )
-    stat_entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": stats_path,
-        "file-size-in-bytes": pstats["file_size"],
-        "file-footer-size-in-bytes": pstats["footer_size"],
-        "blob-metadata": pstats["blob_metadata"],
-    }
-
-    meta = dict(base)
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = now_ms
-    meta["snapshots"] = base["snapshots"] + [snapshot]
-    meta["statistics"] = base.get("statistics", []) + [stat_entry]
-    meta["current-snapshot-id"] = snapshot_id
-    meta["refs"] = _advance_main(base.get("refs"), snapshot_id)
-    meta["snapshot-log"] = base["snapshot-log"] + [
-        {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-    ]
-    meta["metadata-log"] = base.get("metadata-log", []) + [
-        {
-            "timestamp-ms": base["last-updated-ms"],
-            "metadata-file": os.path.join(
-                meta_dir, f"v{version}.metadata.json"
-            ),
-        }
-    ]
-
-    if catalog is not None:
-        from tiered_storage_for_apache_kafka_spark.sources.iceberg.commit import (  # noqa: E501 (local: avoids an import cycle at module load)
-            _commit_requirements,
-        )
-
-        resp = catalog.commit_table(
-            table_name,
-            _commit_requirements(base),
-            [
-                {"action": "add-snapshot", "snapshot": snapshot},
-                {
-                    "action": "set-snapshot-ref",
-                    "ref-name": "main",
-                    "type": "branch",
-                    "snapshot-id": snapshot_id,
-                },
-                {"action": "set-statistics", "statistics": stat_entry},
-            ],
-            now_ms,
-        )
-        return resp["metadata"]
-    _write_metadata_version(meta_dir, version + 1, meta)
-    return meta
 
 
 def replace_partitions(
@@ -568,28 +481,17 @@ def replace_partitions(
     heavier commit; this engine keeps the merge-on-read posture all
     its mutation planes share, with `rewrite_data_files` as the
     equalizer."""
-    from tiered_storage_for_apache_kafka_spark.sources.rest_catalog import (
-        CommitConflictError,
-        commit_retry_backoff,
-    )
-
     now_ms = int(time.time() * 1000) if now_ms is None else now_ms
     if catalog is not None and table_name is None:
         table_name = _default_table_name(table_dir)
-    last_err: Exception | None = None
-    n_attempts = max_commit_retries if catalog is not None else 1
-    for _attempt in range(n_attempts):
-        try:
-            return _replace_once(
-                spark, df, table_dir, now_ms, catalog, table_name,
-                writer_shards, max_records_per_file,
-            )
-        except CommitConflictError as e:
-            last_err = e
-            if _attempt + 1 < n_attempts:
-                commit_retry_backoff(_attempt)
-    assert last_err is not None
-    raise last_err
+    return commit_with_retries(
+        lambda: _replace_once(
+            spark, df, table_dir, now_ms, catalog, table_name,
+            writer_shards, max_records_per_file,
+        ),
+        catalog,
+        max_commit_retries,
+    )
 
 
 def _replace_once(

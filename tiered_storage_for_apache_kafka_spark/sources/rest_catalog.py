@@ -24,8 +24,12 @@ applies the metadata updates, persists the new ``v{N}.metadata.json``
 and answers loads with the current metadata. Optimistic concurrency is
 the requirement list (``assert-create`` / ``assert-table-uuid`` /
 ``assert-ref-snapshot-id``); a losing writer gets 409 and must reload +
-rebase, which ``commit_append(..., catalog=...)`` does in a bounded
-retry loop.
+rebase. Every verb that takes ``max_commit_retries`` (appends, deletes,
+DVs, merge, update, replace and the rewrite/expire maintenance) does so
+through the one bounded retry loop, ``iceberg.state.commit_with_retries``;
+the metadata-only verbs (spec, schema, refs, NDV stats) make one attempt
+and raise the conflict. The service applies the update list with the
+same ``iceberg.state.apply_updates`` the file layout's ``publish`` uses.
 
 ``FakeRestCatalogServer`` is the in-repo stand-in for a real service
 (same pattern as the schema-registry and GCS/Azure fakes): an
@@ -44,27 +48,12 @@ import threading
 import urllib.error
 import urllib.request
 
-
-def commit_retry_backoff(
-    attempt: int, base_s: float = 0.05, cap_s: float = 1.0
-) -> None:
-    """Exponential backoff with jitter between optimistic-commit
-    retries — the shape real Iceberg's commit retry uses
-    (``commit.retry.min-wait-ms`` growing exponentially with
-    randomization). Without it, N writers in tight commit loops
-    livelock: every loser reloads, re-stages and re-races inside the
-    same window it just lost, burning the whole retry budget (measured
-    by ``bench_scaling.py --rest-contention``: 4 writers exhausted 8
-    retries before this existed)."""
-    import random
-    import time
-
-    time.sleep(min(base_s * (2 ** attempt), cap_s) * (0.5 + random.random()))
-
-
-class CommitConflictError(Exception):
-    """A commit requirement failed (HTTP 409 CommitFailedException) —
-    reload the table and rebase."""
+from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
+    CommitConflictError,
+    _write_metadata_version,
+    check_requirements,
+    next_metadata,
+)
 
 
 class NoSuchTableError(Exception):
@@ -79,212 +68,6 @@ class CatalogHttpError(RuntimeError):
         super().__init__(f"{code} {error_type}: {message}")
         self.code = code
         self.error_type = error_type
-
-
-# ---------------------------------------------------------------------------
-# Server-side metadata update application (spec: MetadataUpdate union)
-# ---------------------------------------------------------------------------
-
-def check_requirements(meta: dict | None, requirements: list[dict]) -> str | None:
-    """Validate a CommitTableRequest's requirement list against the
-    catalog's current metadata. Returns an error message, or None when
-    every requirement holds."""
-    for req in requirements:
-        t = req.get("type")
-        if t == "assert-create":
-            if meta is not None:
-                return "assert-create failed: table already exists"
-        elif t == "assert-table-uuid":
-            if meta is None or meta.get("table-uuid") != req.get("uuid"):
-                return "assert-table-uuid failed"
-        elif t == "assert-ref-snapshot-id":
-            ref = req.get("ref", "main")
-            want = req.get("snapshot-id")  # None = ref must not exist
-            have = None
-            if meta is not None:
-                have = (meta.get("refs") or {}).get(ref, {}).get("snapshot-id")
-            if have != want:
-                return (
-                    f"assert-ref-snapshot-id failed for ref {ref!r}: "
-                    f"expected {want}, found {have}"
-                )
-        else:
-            return f"unsupported requirement type {t!r}"
-    return None
-
-
-def apply_updates(meta: dict, updates: list[dict], now_ms: int) -> dict:
-    """Apply a CommitTableRequest's update list to the current metadata,
-    per the spec's MetadataUpdate semantics (the subset an append/stats
-    writer emits)."""
-    meta = dict(meta)
-    for upd in updates:
-        action = upd.get("action")
-        if action == "add-schema":
-            schema = upd["schema"]
-            meta["schemas"] = list(meta.get("schemas", [])) + [schema]
-            if "last-column-id" in upd:
-                meta["last-column-id"] = max(
-                    meta.get("last-column-id", 0), upd["last-column-id"]
-                )
-        elif action == "set-current-schema":
-            sid = upd["schema-id"]
-            if sid == -1:  # spec: -1 = last added schema
-                sid = meta["schemas"][-1]["schema-id"]
-            meta["current-schema-id"] = sid
-        elif action == "add-snapshot":
-            snap = upd["snapshot"]
-            if any(
-                s["snapshot-id"] == snap["snapshot-id"]
-                for s in meta.get("snapshots", [])
-            ):
-                # two lineages committed the same computed id (branch
-                # and main racing): a 409, so the loser rebases onto a
-                # fresh sequence number — never two snapshots under
-                # one id
-                raise CommitConflictError(
-                    f"snapshot id {snap['snapshot-id']} already exists"
-                )
-            meta["snapshots"] = list(meta.get("snapshots", [])) + [snap]
-            meta["last-sequence-number"] = max(
-                meta.get("last-sequence-number", 0),
-                snap.get("sequence-number", 0),
-            )
-        elif action == "set-snapshot-ref":
-            ref_name = upd.get("ref-name", "main")
-            refs = dict(meta.get("refs") or {})
-            ref = {
-                "snapshot-id": upd["snapshot-id"],
-                "type": upd.get("type", "branch"),
-            }
-            # per-ref retention fields ride the same update (spec
-            # "Snapshot References" — REST TableUpdate carries them)
-            for k in (
-                "max-ref-age-ms",
-                "min-snapshots-to-keep",
-                "max-snapshot-age-ms",
-            ):
-                if upd.get(k) is not None:
-                    ref[k] = int(upd[k])
-            refs[ref_name] = ref
-            meta["refs"] = refs
-            if ref_name == "main":
-                meta["current-snapshot-id"] = upd["snapshot-id"]
-                # the snapshot-log tracks current-snapshot-id changes
-                # (spec), so it rides THIS update, not add-snapshot —
-                # staged branch commits stay out of TIMESTAMP AS OF
-                # until a fast-forward publishes them
-                log = list(meta.get("snapshot-log", []))
-                if not log or log[-1]["snapshot-id"] != upd["snapshot-id"]:
-                    meta["snapshot-log"] = log + [
-                        {
-                            "timestamp-ms": now_ms,
-                            "snapshot-id": upd["snapshot-id"],
-                        }
-                    ]
-        elif action == "set-statistics":
-            stats = [
-                s
-                for s in meta.get("statistics", [])
-                if s["snapshot-id"] != upd["statistics"]["snapshot-id"]
-            ]
-            meta["statistics"] = stats + [upd["statistics"]]
-        elif action == "set-properties":
-            props = dict(meta.get("properties") or {})
-            props.update(upd.get("updates") or {})
-            meta["properties"] = props
-        elif action == "remove-snapshots":
-            gone = set(upd["snapshot-ids"])
-            meta["snapshots"] = [
-                s for s in meta.get("snapshots", [])
-                if s["snapshot-id"] not in gone
-            ]
-            meta["snapshot-log"] = [
-                e for e in meta.get("snapshot-log", [])
-                if e["snapshot-id"] not in gone
-            ]
-            keep_ids = {s["snapshot-id"] for s in meta["snapshots"]}
-            # strip dangling parent pointers (spec: only transient refs
-            # to missing snapshots are allowed)
-            meta["snapshots"] = [
-                (
-                    {k: v for k, v in s.items() if k != "parent-snapshot-id"}
-                    if s.get("parent-snapshot-id") not in keep_ids
-                    else s
-                )
-                for s in meta["snapshots"]
-            ]
-        elif action == "remove-statistics":
-            meta["statistics"] = [
-                st for st in meta.get("statistics", [])
-                if st["snapshot-id"] != upd["snapshot-id"]
-            ]
-        elif action == "remove-snapshot-ref":
-            refs = dict(meta.get("refs") or {})
-            refs.pop(upd["ref-name"], None)
-            meta["refs"] = refs
-        elif action == "add-sort-order":
-            order = upd["sort-order"]
-            orders = list(meta.get("sort-orders", []))
-            clash = next(
-                (o for o in orders if o["order-id"] == order["order-id"]), None
-            )
-            if clash is None:
-                meta["sort-orders"] = orders + [order]
-            elif clash.get("fields") != order.get("fields"):
-                # replaying the SAME order is idempotent; a different
-                # definition under an existing id would let committed
-                # sort_order_id stamps point at a sort that does not
-                # exist — a commit error, never a silent drop
-                raise ValueError(
-                    f"sort order id {order['order-id']} already exists "
-                    "with different fields"
-                )
-        elif action == "add-spec":
-            spec = upd["spec"]
-            specs = list(meta.get("partition-specs", []))
-            clash = next(
-                (s for s in specs if s["spec-id"] == spec["spec-id"]), None
-            )
-            if clash is None:
-                meta["partition-specs"] = specs + [spec]
-                # an UNPARTITIONED spec (fields: []) adds no field ids
-                meta["last-partition-id"] = max(
-                    [int(meta.get("last-partition-id", 999))]
-                    + [int(f["field-id"]) for f in spec["fields"]]
-                )
-            elif clash.get("fields") != spec.get("fields"):
-                # same idempotency rule as add-sort-order: replaying an
-                # identical spec is fine, redefining an id is a commit
-                # error (committed manifests pin spec-ids)
-                raise ValueError(
-                    f"partition spec id {spec['spec-id']} already "
-                    "exists with different fields"
-                )
-        elif action == "set-default-spec":
-            sid = upd["spec-id"]
-            if sid == -1:  # spec: -1 = last added spec
-                sid = meta["partition-specs"][-1]["spec-id"]
-            if not any(
-                s["spec-id"] == sid for s in meta.get("partition-specs", [])
-            ):
-                raise ValueError(f"no partition spec with id {sid}")
-            meta["default-spec-id"] = sid
-        elif action == "set-default-sort-order":
-            oid = upd["sort-order-id"]
-            if oid == -1:  # spec: -1 = last added sort order
-                oid = meta["sort-orders"][-1]["order-id"]
-            if not any(
-                o["order-id"] == oid for o in meta.get("sort-orders", [])
-            ):
-                raise ValueError(f"no sort order with id {oid}")
-            meta["default-sort-order-id"] = oid
-        elif action == "assign-uuid":
-            meta["table-uuid"] = upd["uuid"]
-        else:
-            raise ValueError(f"unsupported update action {action!r}")
-    meta["last-updated-ms"] = now_ms
-    return meta
 
 
 # ---------------------------------------------------------------------------
@@ -344,18 +127,12 @@ class FakeRestCatalogServer:
                 raise CommitConflictError(err)
             if entry is None:
                 raise NoSuchTableError(f"{ns}.{table}")
-            new_meta = apply_updates(cur_meta, updates, now_ms)
-            # the catalog service owns metadata-log (file-layout parity:
-            # the superseded version joins the chain, as commit_append's
-            # file branch does) — external history walkers rely on it
-            new_meta["metadata-log"] = list(
-                cur_meta.get("metadata-log", [])
-            ) + [
-                {
-                    "timestamp-ms": cur_meta.get("last-updated-ms", 0),
-                    "metadata-file": self.metadata_location(entry),
-                }
-            ]
+            # the same next-version function the file layout's publish
+            # uses: updates applied, superseded version on metadata-log
+            new_meta = next_metadata(
+                entry["location"], entry["version"], cur_meta, updates,
+                now_ms,
+            )
             entry = {
                 "metadata": new_meta,
                 "version": entry["version"] + 1,
@@ -367,10 +144,6 @@ class FakeRestCatalogServer:
 
     @staticmethod
     def _persist(entry: dict) -> None:
-        from tiered_storage_for_apache_kafka_spark.sources.iceberg import (
-            _write_metadata_version,
-        )
-
         meta_dir = os.path.join(entry["location"], "metadata")
         os.makedirs(meta_dir, exist_ok=True)
         _write_metadata_version(meta_dir, entry["version"], entry["metadata"])
@@ -537,8 +310,8 @@ class CachingCatalog:
 
     Correctness under writers: a successful commit CACHES its response
     (the commit result IS the fresh table), and a conflict INVALIDATES
-    the entry before re-raising — so the reload-and-rebase loop in
-    ``commit_append`` always rebases from live state instead of
+    the entry before re-raising — so the reload-and-rebase loop,
+    ``commit_with_retries``, always rebases from live state instead of
     spinning on its own cached staleness until TTL. Cross-reader
     staleness is bounded by the TTL, exactly the trade the reference's
     doc describes. ``expiration_seconds == 0`` disables caching;

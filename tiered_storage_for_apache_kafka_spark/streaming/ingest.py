@@ -734,42 +734,26 @@ def _stamp_mirror_lineage(
     """One metadata-only property commit stamping
     ``engine.mirror-source`` on an adopted destination (the verified
     back-stamp for replicas created before lineage stamping)."""
-    import os
     import time as _time
 
     from tiered_storage_for_apache_kafka_spark.sources.iceberg.state import (
+        _commit_requirements,
         _current_state_meta,
-        _write_metadata_version,
+        publish,
     )
 
     version, base, table_name = _current_state_meta(
         dst_table_dir, catalog, table_name
     )
-    updates = {"engine.mirror-source": src_uuid}
-    if catalog is not None:
-        from tiered_storage_for_apache_kafka_spark.sources.iceberg.commit import (  # noqa: E501
-            _commit_requirements,
-        )
-
-        catalog.commit_table(
-            table_name,
-            _commit_requirements(base),
-            [{"action": "set-properties", "updates": updates}],
-            int(_time.time() * 1000),
-        )
-        return
-    meta = dict(base)
-    meta["properties"] = {**(base.get("properties") or {}), **updates}
-    meta["metadata-log"] = base.get("metadata-log", []) + [
-        {
-            "timestamp-ms": base.get("last-updated-ms", 0),
-            "metadata-file": os.path.join(
-                dst_table_dir, "metadata", f"v{version}.metadata.json"
-            ),
-        }
-    ]
-    _write_metadata_version(
-        os.path.join(dst_table_dir, "metadata"), version + 1, meta
+    publish(
+        dst_table_dir, version, base, _commit_requirements(base),
+        [
+            {
+                "action": "set-properties",
+                "updates": {"engine.mirror-source": src_uuid},
+            }
+        ],
+        int(_time.time() * 1000), catalog, table_name,
     )
 
 
